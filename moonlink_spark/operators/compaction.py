@@ -32,6 +32,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+import warnings
 from dataclasses import dataclass, field
 
 from pyspark.sql import functions as F
@@ -146,26 +147,31 @@ def compact(
     table: MoonTable,
     config: CompactionConfig | None = None,
     run_id: str | None = None,
-    max_concurrent_groups: int = 8,
+    max_concurrent_groups: int | None = None,
     lock_wait_seconds: float = 0.0,
 ) -> int | None:
     """Run compaction; returns the new snapshot id, or None if nothing to do.
     With *lock_wait_seconds* > 0, waits for a concurrent merge/cluster to
     release the maintenance lock instead of raising MaintenanceInProgress.
-    *max_concurrent_groups* is retained for API compatibility; execution is
-    a single job (all groups share one exchange), so it no longer gates
-    anything."""
+    *max_concurrent_groups* is deprecated and ignored (passing it warns):
+    execution is a single job, all groups sharing one exchange."""
+    if max_concurrent_groups is not None:
+        warnings.warn(
+            "compact(max_concurrent_groups=) is ignored: compaction runs as "
+            "one job whose groups share one exchange",
+            DeprecationWarning,
+            stacklevel=2,
+        )
     config = config or CompactionConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
     with table.maintenance_lock("compact", run_id, wait_seconds=lock_wait_seconds):
-        return _compact_locked(table, config, run_id, max_concurrent_groups)
+        return _compact_locked(table, config, run_id)
 
 
 def _compact_locked(
     table: MoonTable,
     config: CompactionConfig,
     run_id: str,
-    max_concurrent_groups: int,
 ) -> int | None:
     import time as _time
 

@@ -1123,34 +1123,37 @@ class MoonTable:
         of deleted positions (the roaring-puffin analog, deletion_vector.rs
         / delete_vector.rs:9-15). ~20× smaller at rest than (path, pos) rows
         at heavy delete ratios; fixed ≤16 KB per 131072-row target file.
-        Built with one groupBy(file_path) applyInPandas (vectorized numpy
-        packbits-style fold); read back JVM-side by read_delete_rows."""
-        import numpy as np
-        import pandas as pd
-
-        def _to_bitmap(pdf: pd.DataFrame) -> pd.DataFrame:
-            pos = np.unique(pdf["pos"].to_numpy().astype(np.int64))
-            words = np.zeros(int(pos[-1]) // 64 + 1, dtype=np.uint64)
-            np.bitwise_or.at(
-                words, pos // 64, np.uint64(1) << (pos % 64).astype(np.uint64)
-            )
-            return pd.DataFrame(
-                {
-                    "file_path": [str(pdf["file_path"].iloc[0])],
-                    "words": [words.view(np.int64)],
-                    "n_positions": [int(len(pos))],
-                }
-            )
-
-        bitmaps = (
+        Folded JVM-side, no Python worker: one word per (file_path,
+        pos >> 6) by bit_or, then per file a dense word array with zero
+        words in the gaps; read back JVM-side by read_delete_rows. The rows
+        are hash-partitioned by the writer's _bin first, so both
+        aggregations and the writer share that one exchange."""
+        words = (
             deletes_df.select(
                 F.col("file_path").cast("string"), F.col("pos").cast("long")
             )
-            .groupBy("file_path")
-            .applyInPandas(
-                _to_bitmap, "file_path string, words array<bigint>, n_positions long"
-            )
             .withColumn("_bin", hash_bin("file_path", num_bins))
+            .repartition(num_bins, "_bin")
+            .groupBy("_bin", "file_path", F.shiftright("pos", 6).alias("widx"))
+            .agg(F.expr("bit_or(shiftleft(1L, CAST(pos % 64 AS INT)))").alias("word"))
+        )
+        bitmaps = (
+            words.groupBy("_bin", "file_path")
+            .agg(
+                F.map_from_entries(F.collect_list(F.struct("widx", "word"))).alias("m"),
+                F.max("widx").alias("max_widx"),
+                F.sum(F.bit_count("word")).alias("n_positions"),
+            )
+            .select(
+                "_bin",
+                "file_path",
+                # cast restores the nullable element type the bitmap
+                # files have always been written with
+                F.expr("transform(sequence(0L, max_widx), i -> coalesce(m[i], 0L))")
+                .cast("array<bigint>")
+                .alias("words"),
+                "n_positions",
+            )
         )
         files = write_datafiles(
             bitmaps,
