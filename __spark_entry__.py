@@ -1271,7 +1271,7 @@ def q_compact_split_oversized(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("image_id", F.concat(F.lit("im2-"), F.col("image_id"))).withColumn(
         "_bin", F.lit(0)
     )
-    t.append(more, explicit_bins=more, num_bins=1, run_id="big1")
+    t.append(more, num_bins=1, run_id="big1")
     huge = max(t.data_files(), key=lambda f: f.file_size_bytes)
     target = max(64 * 1024, huge.file_size_bytes // 4)
     pieces = [f.file_path for f in t.data_files() if f.file_size_bytes > 2 * target]

@@ -71,22 +71,22 @@ class DataFile:
 class DeleteFile:
     """A deletion-vector parquet file.
 
-    format="bitmap" (current writer): one row per TARGET data file —
+    format="bitmap", the only format written or read: one row per TARGET
+    data file —
     (file_path string, words array<bigint>, n_positions long) where `words`
     is the packed 64-bit-word bitmap over row positions. The parquet-native
     stand-in for moonlink's roaring-bitmap puffin blobs (deletion_vector.rs;
     delete_vector.rs:9-15): a 131072-row file costs ≤16 KB of bitmap
     regardless of delete ratio, ~20× smaller at heavy ratios than the
     (file_path, pos) row form, and expands back to positions JVM-side at
-    scan time (no Python).
-
-    format="positions" (legacy): (file_path string, pos long) rows.
+    scan time (no Python). ``MoonTable.read_delete_rows`` rejects any
+    other format.
     """
 
     file_path: str
     record_count: int
     file_size_bytes: int
-    format: str = "positions"
+    format: str = "bitmap"
     # total deleted positions across the file (drives the scan-side
     # broadcast gate: the EXPANDED join relation is what must fit)
     position_count: int = 0

@@ -37,7 +37,11 @@ from pyspark.sql import functions as F
 
 from moonlink_spark.catalog.metadata import COMPACT_TARGET_BYTES, norm_path
 from moonlink_spark.functions.zorder import DEFAULT_BITS, curve_key
-from moonlink_spark.plans.physical import exclude_file_paths, write_datafiles
+from moonlink_spark.plans.physical import (
+    exclude_file_paths,
+    read_bin_records,
+    write_datafiles,
+)
 from moonlink_spark.table import MoonTable
 
 # sampled keys for boundary estimation: ~500 keys/bin at 128 bins — plenty
@@ -523,13 +527,10 @@ def _cluster_locked(
     key_col = table.key_columns[0] if table.key_columns else by[0]
     num_bins = int(plan.offsets[-1])
 
-    # resume: bins already written (lineage present) are filtered out before
-    # the shuffle, so a resumed run re-reads only the missing bins' rows
-    done_bins = []
-    if os.path.isdir(lineage_dir):
-        for name in os.listdir(lineage_dir):
-            if name.startswith("bin-") and name.endswith(".json"):
-                done_bins.append(int(name[4:-5]))
+    # resume: bins already written (lineage record present, file still
+    # there) are filtered out before the shuffle, so a resumed run re-reads
+    # only the missing bins' rows
+    done = read_bin_records(lineage_dir)
 
     # read ONLY the plan's victims (== every file in full scope); scan()
     # still applies the table's deletion vectors, so victim rows suppressed
@@ -541,8 +542,8 @@ def _cluster_locked(
     df = assign_keys_and_bins(
         table.scan(files=victim_files), plan, key_col=key_col, bits=bits
     )
-    if done_bins:
-        df = df.filter(~F.col("_bin").isin(done_bins))
+    if done:
+        df = df.filter(~F.col("_bin").isin(sorted(done)))
 
     t0 = time.time()
     new_files = write_datafiles(
@@ -560,24 +561,12 @@ def _cluster_locked(
     for f in new_files:
         f.cluster_by = plan.curve
 
-    # reconstruct skipped bins from lineage (they're part of this run's output)
+    # skipped bins are part of this run's output
     have = {norm_path(f.file_path) for f in new_files}
-    for b in done_bins:
-        lp = os.path.join(lineage_dir, f"bin-{b:05d}.json")
-        with open(lp) as fh:
-            rec = json.load(fh)
-        if norm_path(rec["file_path"]) not in have:
-            from moonlink_spark.catalog.metadata import DataFile
-
-            new_files.append(
-                DataFile(
-                    file_path=rec["file_path"],
-                    record_count=int(rec["record_count"]),
-                    file_size_bytes=int(rec["file_size_bytes"]),
-                    stats=json.loads(rec["stats"]),
-                    cluster_by=plan.curve,
-                )
-            )
+    for b in sorted(done):
+        if norm_path(done[b].file_path) not in have:
+            done[b].cluster_by = plan.curve
+            new_files.append(done[b])
 
     in_files = [f for f in table.data_files() if norm_path(f.file_path) in set(plan.victims)]
     stage_t["reconstruct_sec"] = round(time.time() - t0, 3)

@@ -42,7 +42,11 @@ from moonlink_spark.catalog.metadata import (
     DataFile,
     norm_path,
 )
-from moonlink_spark.plans.physical import exclude_file_paths, write_datafiles
+from moonlink_spark.plans.physical import (
+    exclude_file_paths,
+    read_bin_record,
+    write_datafiles,
+)
 from moonlink_spark.table import MoonTable
 
 
@@ -217,23 +221,13 @@ def _compact_locked(
         group_live = sum(live_by_path.get(p, 0) for p in group)
         nb = max(1, min(_SPLIT_STRIDE - 1, -(-group_live // max(1, config.target_bytes))))
         if nb == 1:
-            # resume fast-path: an unsplit group with its lineage record was
-            # fully written by a previous attempt — skip the read entirely
-            # (split groups rely on write_datafiles' per-bin skip instead)
-            lp = os.path.join(lineage_dir, f"bin-{base:05d}.json")
-            if os.path.exists(lp):
-                with open(lp) as f:
-                    rec = json.load(f)
-                if os.path.exists(rec["file_path"]):
-                    resumed.append(
-                        DataFile(
-                            file_path=rec["file_path"],
-                            record_count=int(rec["record_count"]),
-                            file_size_bytes=int(rec["file_size_bytes"]),
-                            stats=json.loads(rec["stats"]),
-                        )
-                    )
-                    continue
+            # resume fast-path: an unsplit group whose bin a previous attempt
+            # fully wrote skips the read entirely (split groups rely on
+            # write_datafiles' per-bin skip instead)
+            prior = read_bin_record(lineage_dir, base)
+            if prior is not None:
+                resumed.append(prior)
+                continue
         read_groups.append((base, group, nb))
 
     _t0 = _time.time()

@@ -1,24 +1,26 @@
-"""Distributed parquet writer with explicit bin placement, in-pass stats and
-per-partition lineage.
+"""One distributed parquet writer with two ways to pick a batch's output
+file, and the per-bin resume record.
 
-Design notes (Spark-first, scale-first):
-
-- Rows carry an explicit integer ``_bin`` column assigned by the *planner*
-  (bin-packing for compaction, zkey range for clustering, hash for deletes).
-  ``repartition(num_bins, "_bin")`` sends each bin to exactly one reduce task
-  (hash partitioning of a single int is deterministic), so output file names
-  can be derived from the bin id — no committer rename dance, and a killed
-  run resumes at bin granularity.
-- The write stage is ``mapInArrow``: each task streams its Arrow record
-  batches straight into a pyarrow ParquetWriter (C++), with per-column
-  min/max/null stats accumulated by ``pyarrow.compute.min_max`` in the same
-  pass — the analog of moonlink computing Iceberg Datum stats from parquet
-  footers (reference: parquet_stats_utils.rs:34-120) without a second read.
-  Binary image payloads never materialize as Python objects: bytes stay in
-  Arrow buffers from the shuffle fetch to the parquet encoder.
-- A bin whose lineage record already exists (same run_id) is skipped: writes
-  are idempotent at partition granularity (reference intent: WAL replay,
-  wal.rs:1117-1334).
+- The writer core is a ``mapInArrow`` stage: each task streams its Arrow
+  record batches straight into pyarrow ParquetWriters (C++), accumulating
+  per-column min/max/null_count (and an integer ``sum``) with
+  ``pyarrow.compute`` in the same pass — the analog of moonlink computing
+  Iceberg Datum stats from parquet footers (reference:
+  parquet_stats_utils.rs:34-120) without a second read. Binary payloads stay
+  in Arrow buffers from the shuffle fetch to the parquet encoder.
+- ``write_datafiles`` picks the file from an explicit integer ``_bin``
+  assigned by the *planner* (bin-packing for compaction, zkey range for
+  clustering, hash for inserts and deletes); ``repartition(num_bins,
+  "_bin")`` sends each bin to exactly one reduce task, so the file name
+  ``{run_id}-b{bin:05d}`` derives from the bin id and a killed run resumes
+  at bin granularity. ``write_datafiles_rolling`` rolls each input
+  partition over to a new ``{run_id}-p{partition:05d}-{seq:04d}`` file
+  every ``rows_per_file`` rows, so bulk ingest reads its input once.
+- With a ``lineage_dir`` each bin file is recorded as ``bin-NNNNN.json``;
+  a re-run under the same run_id skips the bins ``read_bin_record`` can
+  reuse (reference intent: WAL replay, wal.rs:1117-1334). A record whose
+  file is gone (an orphan sweep removed a killed run's uncommitted output)
+  is not reusable, so that bin is written again.
 
 On a real cluster ``data_dir`` is a shared filesystem / object store mount;
 tasks write directly to it exactly as moonlink's iceberg syncer uploads data
@@ -31,6 +33,7 @@ from __future__ import annotations
 import json
 import math
 import os
+import sys
 from typing import Iterator
 
 import pandas as pd
@@ -71,6 +74,246 @@ def _json_safe(v):
     return str(v)
 
 
+def _datafile(rec) -> DataFile:
+    """A lineage record (dict or Row with LINEAGE_SCHEMA's fields) as a DataFile."""
+    return DataFile(
+        file_path=rec["file_path"],
+        record_count=int(rec["record_count"]),
+        file_size_bytes=int(rec["file_size_bytes"]),
+        stats=json.loads(rec["stats"]),
+    )
+
+
+def _record(b: int, f: DataFile) -> dict:
+    """*f* as the lineage record of bin *b* (LINEAGE_SCHEMA's fields)."""
+    return {
+        "bin": b,
+        "file_path": f.file_path,
+        "record_count": f.record_count,
+        "file_size_bytes": f.file_size_bytes,
+        "stats": json.dumps(f.stats),
+    }
+
+
+def _bin_record_path(lineage_dir: str, b: int) -> str:
+    return os.path.join(lineage_dir, f"bin-{b:05d}.json")
+
+
+def read_bin_record(lineage_dir: str, b: int) -> DataFile | None:
+    """The file a previous attempt recorded for bin *b* under *lineage_dir*,
+    or None when there is no record or the recorded file no longer exists
+    (the bin must then be written again)."""
+    try:
+        with open(_bin_record_path(lineage_dir, b)) as f:
+            rec = json.load(f)
+    except FileNotFoundError:
+        return None
+    if not os.path.exists(rec["file_path"]):
+        return None
+    return _datafile(rec)
+
+
+def read_bin_records(lineage_dir: str) -> dict[int, DataFile]:
+    """Every bin under *lineage_dir* that ``read_bin_record`` can reuse."""
+    if not os.path.isdir(lineage_dir):
+        return {}
+    out: dict[int, DataFile] = {}
+    for name in os.listdir(lineage_dir):
+        if name.startswith("bin-") and name.endswith(".json"):
+            b = int(name[4:-5])
+            f = read_bin_record(lineage_dir, b)
+            if f is not None:
+                out[b] = f
+    return out
+
+
+class _OpenFile:
+    """One parquet file a write task is streaming: rows go to
+    ``<path><tmp_suffix>`` and the per-column stats accumulate as they pass."""
+
+    def __init__(self, path: str, b: int, tmp_suffix: str, schema, codec, level, statless):
+        import pyarrow.parquet as pq
+
+        self.path = path
+        self.bin = b
+        self.tmp = path + tmp_suffix
+        self.statless = statless
+        self.count = 0
+        self.stats: dict[str, dict] = {}
+        self.writer = pq.ParquetWriter(
+            self.tmp, schema, compression=codec, compression_level=level
+        )
+
+    def write(self, rb) -> None:
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        self.writer.write_batch(rb)
+        self.count += len(rb)
+        for name, col in zip(rb.schema.names, rb.columns):
+            st = self.stats.setdefault(name, {"min": None, "max": None, "null_count": 0})
+            st["null_count"] += col.null_count
+            if name in self.statless or col.null_count == len(col) or len(col) == 0:
+                continue
+            if pa.types.is_integer(col.type):
+                s = pc.sum(col).as_py()
+                if s is not None:
+                    st["sum"] = int(st.get("sum") or 0) + int(s)
+            try:
+                mm = pc.min_max(col)
+            except (pa.ArrowNotImplementedError, pa.ArrowInvalid):
+                continue
+            mn, mx = mm["min"].as_py(), mm["max"].as_py()
+            if mn is not None and (st["min"] is None or mn < st["min"]):
+                st["min"] = mn
+            if mx is not None and (st["max"] is None or mx > st["max"]):
+                st["max"] = mx
+
+    def close(self, lineage_dir: str | None) -> dict:
+        """Finish the file, rename it into place and return its lineage
+        record (also written atomically under *lineage_dir* when given)."""
+        self.writer.close()
+        os.rename(self.tmp, self.path)
+        clean = {
+            c: {
+                "min": _json_safe(s["min"]),
+                "max": _json_safe(s["max"]),
+                "null_count": s["null_count"],
+                **({"sum": int(s["sum"])} if s.get("sum") is not None else {}),
+            }
+            for c, s in self.stats.items()
+        }
+        rec = _record(
+            self.bin,
+            DataFile(
+                file_path=self.path,
+                record_count=self.count,
+                file_size_bytes=os.path.getsize(self.path),
+                stats=clean,
+            ),
+        )
+        if lineage_dir is not None:
+            lp = _bin_record_path(lineage_dir, self.bin)
+            with open(lp + ".tmp", "w") as f:
+                json.dump(rec, f)
+            os.rename(lp + ".tmp", lp)
+        return rec
+
+
+def _write(
+    df: DataFrame,
+    *,
+    data_dir: str,
+    run_id: str,
+    compression: str,
+    compression_level: int | None,
+    rows_per_file: int | None = None,
+    lineage_dir: str | None = None,
+    file_prefix: str = "",
+) -> list[DataFile]:
+    """The writer core. With *rows_per_file* None, *df* is partitioned by its
+    int ``_bin`` column and every bin becomes one file; otherwise every
+    partition rolls over to a new file each *rows_per_file* rows."""
+    import pyspark.sql.types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    # internal planner columns (underscore-prefixed: _bin, _zkey, ...) are
+    # shuffle/sort keys only — never written to the output files
+    payload_fields = [f for f in df.schema.fields if not f.name.startswith("_")]
+    statless = {f.name for f in payload_fields if f.dataType.typeName() in _STATLESS_TYPES}
+    arrow_schema = to_arrow_schema(T.StructType(payload_fields))
+    out_schema = to_arrow_schema(T.DataType.fromDDL(LINEAGE_SCHEMA))
+    payload_cols = [f.name for f in payload_fields]
+    binned = rows_per_file is None
+    limit = sys.maxsize if binned else rows_per_file  # a bin never rolls over
+
+    # per-column codecs: opaque binary payloads (images) are already
+    # compressed/high-entropy — zstd-4 on them burns the write stage's CPU
+    # for ~zero ratio. Binary columns get snappy (near-free, bails fast on
+    # incompressible data); the requested codec applies to everything else.
+    if compression not in (None, "none", "snappy"):
+        codec = {f.name: ("snappy" if f.name in statless else compression) for f in payload_fields}
+        level = (
+            {f.name: compression_level for f in payload_fields if f.name not in statless}
+            if compression_level is not None
+            else None
+        )
+    else:
+        codec, level = compression, compression_level
+
+    def _task(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
+        import numpy as np
+        import pyarrow as pa
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        # attempt-scoped temp suffix: a speculative/zombie attempt of the
+        # same task writes the same FINAL names, so each attempt streams into
+        # its own temp file and only the atomic rename races (last complete
+        # file wins; a shared temp would interleave two writers into one
+        # corrupt parquet)
+        tmp_suffix = f".inprogress.{ctx.taskAttemptId()}"
+        files: dict[int, _OpenFile] = {}
+        skipped: set[int] = set()
+        done: list[dict] = []
+        seq = 0
+
+        def _pieces(batch, payload):
+            """(bin, rows) pairs of one input batch: the planner's bins, or
+            the whole batch under the partition id when rolling."""
+            if not binned:
+                yield ctx.partitionId(), payload
+                return
+            binvals = batch.column(batch.schema.get_field_index("_bin")).to_numpy(
+                zero_copy_only=False
+            )
+            uniq = np.unique(binvals)
+            if len(uniq) == 1:
+                yield int(uniq[0]), payload
+            else:
+                for b in uniq:
+                    yield int(b), payload.filter(pa.array(binvals == b))
+
+        def _open(b: int) -> _OpenFile:
+            nonlocal seq
+            if binned:
+                name = f"{file_prefix}{run_id}-b{b:05d}.parquet"
+            else:
+                name = f"{file_prefix}{run_id}-p{b:05d}-{seq:04d}.parquet"
+                seq += 1
+            return _OpenFile(
+                os.path.join(data_dir, name), b, tmp_suffix, arrow_schema, codec, level, statless
+            )
+
+        for batch in batches:
+            if len(batch) == 0:
+                continue
+            payload = batch.select(payload_cols)
+            if payload.schema != arrow_schema:
+                payload = payload.cast(arrow_schema)
+            for b, rows in _pieces(batch, payload):
+                while len(rows) and b not in skipped:
+                    f = files.get(b)
+                    if f is None:
+                        prior = read_bin_record(lineage_dir, b) if lineage_dir else None
+                        if prior is not None:
+                            skipped.add(b)
+                            done.append(_record(b, prior))
+                            break
+                        f = files[b] = _open(b)
+                    take = min(len(rows), limit - f.count)
+                    f.write(rows if take == len(rows) else rows.slice(0, take))
+                    rows = rows.slice(take)
+                    if f.count >= limit:
+                        done.append(files.pop(b).close(lineage_dir))
+        done.extend(f.close(lineage_dir) for f in files.values())
+        if done:
+            yield pa.RecordBatch.from_pylist(done, schema=out_schema)
+
+    rows = df.mapInArrow(_task, schema=LINEAGE_SCHEMA).collect()
+    return sorted((_datafile(r) for r in rows), key=lambda d: d.file_path)
+
+
 def write_datafiles(
     df: DataFrame,
     *,
@@ -86,192 +329,22 @@ def write_datafiles(
     """Write *df* (which must carry an int ``_bin`` column) as one parquet
     file per bin under *data_dir*; return DataFile entries with stats.
 
-    Skips bins already recorded under *lineage_dir* (idempotent resume).
-    """
-    import pyspark.sql.types as T
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    # internal planner columns (underscore-prefixed: _bin, _zkey, ...) are
-    # shuffle/sort keys only — never written to the output files
-    payload_fields = [f for f in df.schema.fields if not f.name.startswith("_")]
-    statless = {f.name for f in payload_fields if f.dataType.typeName() in _STATLESS_TYPES}
-    arrow_schema = to_arrow_schema(T.StructType(payload_fields))
-    payload_cols = [f.name for f in payload_fields]
-
-    # per-column codecs: opaque binary payloads (images) are already
-    # compressed/high-entropy — zstd-4 on them burns the write stage's CPU
-    # for ~zero ratio. Binary columns get snappy (near-free, bails fast on
-    # incompressible data); the requested codec applies to everything else.
-    if compression not in (None, "none", "snappy"):
-        codec_by_col = {
-            f.name: ("snappy" if f.dataType.typeName() in _STATLESS_TYPES else compression)
-            for f in payload_fields
-        }
-        level_by_col = (
-            {
-                f.name: compression_level
-                for f in payload_fields
-                if f.dataType.typeName() not in _STATLESS_TYPES
-            }
-            if compression_level is not None
-            else None
-        )
-    else:
-        codec_by_col = compression
-        level_by_col = compression_level
-
+    Skips bins whose record under *lineage_dir* still names an existing file
+    (idempotent resume); any other bin is written again."""
     if lineage_dir:
         os.makedirs(lineage_dir, exist_ok=True)
-
     part = df.repartition(max(num_bins, 1), "_bin")
     if sort_within:
         part = part.sortWithinPartitions("_bin", *sort_within)
-
-    def _write(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import numpy as np
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        # attempt-scoped temp suffix: a speculative/zombie attempt of the
-        # same task must not share a temp file with the live attempt (only
-        # the final atomic rename may race — last complete file wins)
-        tmp_suffix = f".inprogress.{TaskContext.get().taskAttemptId()}"
-        writers: dict[int, pq.ParquetWriter] = {}
-        paths: dict[int, str] = {}
-        counts: dict[int, int] = {}
-        stats: dict[int, dict] = {}
-        skipped: dict[int, dict] = {}
-
-        def _lineage_path(b: int) -> str | None:
-            if lineage_dir is None:
-                return None
-            return os.path.join(lineage_dir, f"bin-{b:05d}.json")
-
-        def _update_stats(st_all: dict, rb: pa.RecordBatch) -> None:
-            for name, col in zip(rb.schema.names, rb.columns):
-                st = st_all.setdefault(name, {"min": None, "max": None, "null_count": 0})
-                st["null_count"] += col.null_count
-                if name in statless or col.null_count == len(col) or len(col) == 0:
-                    continue
-                if pa.types.is_integer(col.type):
-                    s = pc.sum(col).as_py()
-                    if s is not None:
-                        st["sum"] = int(st.get("sum") or 0) + int(s)
-                try:
-                    mm = pc.min_max(col)
-                except (pa.ArrowNotImplementedError, pa.ArrowInvalid):
-                    continue
-                mn, mx = mm["min"].as_py(), mm["max"].as_py()
-                if mn is not None and (st["min"] is None or mn < st["min"]):
-                    st["min"] = mn
-                if mx is not None and (st["max"] is None or mx > st["max"]):
-                    st["max"] = mx
-
-        def _emit(rb: pa.RecordBatch, b: int) -> None:
-            if b in skipped:
-                return
-            if b not in writers:
-                lp = _lineage_path(b)
-                if lp is not None and os.path.exists(lp):
-                    with open(lp) as f:
-                        skipped[b] = json.load(f)
-                    return
-                final = os.path.join(data_dir, f"{file_prefix}{run_id}-b{b:05d}.parquet")
-                paths[b] = final
-                writers[b] = pq.ParquetWriter(
-                    final + tmp_suffix,
-                    arrow_schema,
-                    compression=codec_by_col,
-                    compression_level=level_by_col,
-                )
-                counts[b] = 0
-                stats[b] = {}
-            writers[b].write_batch(rb)
-            counts[b] += len(rb)
-            _update_stats(stats[b], rb)
-
-        for batch in batches:
-            if len(batch) == 0:
-                continue
-            bin_idx = batch.schema.get_field_index("_bin")
-            binvals = batch.column(bin_idx).to_numpy(zero_copy_only=False)
-            payload = batch.select(payload_cols)
-            if payload.schema != arrow_schema:
-                payload = payload.cast(arrow_schema)
-            uniq = np.unique(binvals)
-            if len(uniq) == 1:
-                _emit(payload, int(uniq[0]))
-            else:
-                for b in uniq:
-                    mask = pa.array(binvals == b)
-                    _emit(payload.filter(mask), int(b))
-
-        rows = []
-        for b, w in writers.items():
-            w.close()
-            final = paths[b]
-            os.rename(final + tmp_suffix, final)
-            size = os.path.getsize(final)
-            clean = {
-                c: {
-                    "min": _json_safe(s["min"]),
-                    "max": _json_safe(s["max"]),
-                    "null_count": s["null_count"],
-                    **({"sum": int(s["sum"])} if s.get("sum") is not None else {}),
-                }
-                for c, s in stats[b].items()
-            }
-            rec = {
-                "bin": b,
-                "file_path": final,
-                "record_count": counts[b],
-                "file_size_bytes": size,
-                "stats": json.dumps(clean),
-            }
-            lp = _lineage_path(b)
-            if lp is not None:
-                tmp = lp + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(rec, f)
-                os.rename(tmp, lp)
-            rows.append(rec)
-        rows.extend(skipped.values())
-        if not rows:
-            return
-        out_schema = pa.schema(
-            [
-                ("bin", pa.int32()),
-                ("file_path", pa.string()),
-                ("record_count", pa.int64()),
-                ("file_size_bytes", pa.int64()),
-                ("stats", pa.string()),
-            ]
-        )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([int(r["bin"]) for r in rows], pa.int32()),
-                pa.array([r["file_path"] for r in rows], pa.string()),
-                pa.array([int(r["record_count"]) for r in rows], pa.int64()),
-                pa.array([int(r["file_size_bytes"]) for r in rows], pa.int64()),
-                pa.array([r["stats"] for r in rows], pa.string()),
-            ],
-            schema=out_schema,
-        )
-
-    lineage_rows = part.mapInArrow(_write, schema=LINEAGE_SCHEMA).collect()
-    out = [
-        DataFile(
-            file_path=r["file_path"],
-            record_count=int(r["record_count"]),
-            file_size_bytes=int(r["file_size_bytes"]),
-            stats=json.loads(r["stats"]),
-        )
-        for r in lineage_rows
-    ]
-    out.sort(key=lambda d: d.file_path)
-    return out
+    return _write(
+        part,
+        data_dir=data_dir,
+        run_id=run_id,
+        compression=compression,
+        compression_level=compression_level,
+        lineage_dir=lineage_dir,
+        file_prefix=file_prefix,
+    )
 
 
 def write_datafiles_rolling(
@@ -294,160 +367,14 @@ def write_datafiles_rolling(
     keep this safe (a re-executed task rewrites the same names via
     .inprogress + rename).
     """
-    import pyspark.sql.types as T
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    payload_fields = [f for f in df.schema.fields if not f.name.startswith("_")]
-    statless = {f.name for f in payload_fields if f.dataType.typeName() in _STATLESS_TYPES}
-    arrow_schema = to_arrow_schema(T.StructType(payload_fields))
-    payload_cols = [f.name for f in payload_fields]
-
-    if compression not in (None, "none", "snappy"):
-        codec_by_col = {
-            f.name: ("snappy" if f.dataType.typeName() in _STATLESS_TYPES else compression)
-            for f in payload_fields
-        }
-        level_by_col = (
-            {
-                f.name: compression_level
-                for f in payload_fields
-                if f.dataType.typeName() not in _STATLESS_TYPES
-            }
-            if compression_level is not None
-            else None
-        )
-    else:
-        codec_by_col = compression
-        level_by_col = compression_level
-
-    def _write(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        import pyarrow as pa
-        import pyarrow.compute as pc
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
-        # attempt-scoped temp suffix: with speculative execution (or a
-        # zombie attempt) two attempts of the same task write the same FINAL
-        # name concurrently — each must stream into its own temp file, and
-        # only the atomic rename races (last rename wins with a complete
-        # file; a shared ".inprogress" would interleave two writers into one
-        # corrupt parquet)
-        tmp_suffix = f".inprogress.{ctx.taskAttemptId()}"
-        seq = 0
-        writer = None
-        path = ""
-        count = 0
-        stats: dict = {}
-        done: list[dict] = []
-
-        def _update_stats(rb: pa.RecordBatch) -> None:
-            for name, col in zip(rb.schema.names, rb.columns):
-                st = stats.setdefault(name, {"min": None, "max": None, "null_count": 0})
-                st["null_count"] += col.null_count
-                if name in statless or col.null_count == len(col) or len(col) == 0:
-                    continue
-                try:
-                    mm = pc.min_max(col)
-                except (pa.ArrowNotImplementedError, pa.ArrowInvalid):
-                    continue
-                mn, mx = mm["min"].as_py(), mm["max"].as_py()
-                if mn is not None and (st["min"] is None or mn < st["min"]):
-                    st["min"] = mn
-                if mx is not None and (st["max"] is None or mx > st["max"]):
-                    st["max"] = mx
-
-        def _close() -> None:
-            nonlocal writer, count, stats
-            if writer is None:
-                return
-            writer.close()
-            os.rename(path + tmp_suffix, path)
-            done.append(
-                {
-                    "bin": pid,
-                    "file_path": path,
-                    "record_count": count,
-                    "file_size_bytes": os.path.getsize(path),
-                    "stats": json.dumps(
-                        {
-                            c: {
-                                "min": _json_safe(s["min"]),
-                                "max": _json_safe(s["max"]),
-                                "null_count": s["null_count"],
-                            }
-                            for c, s in stats.items()
-                        }
-                    ),
-                }
-            )
-            writer = None
-            count = 0
-            stats = {}
-
-        for batch in batches:
-            if len(batch) == 0:
-                continue
-            payload = batch.select(payload_cols)
-            if payload.schema != arrow_schema:
-                payload = payload.cast(arrow_schema)
-            off = 0
-            while off < len(payload):
-                if writer is None:
-                    path = os.path.join(
-                        data_dir, f"{run_id}-p{pid:05d}-{seq:04d}.parquet"
-                    )
-                    seq += 1
-                    writer = pq.ParquetWriter(
-                        path + tmp_suffix,
-                        arrow_schema,
-                        compression=codec_by_col,
-                        compression_level=level_by_col,
-                    )
-                take = min(len(payload) - off, rows_per_file - count)
-                piece = payload.slice(off, take)
-                writer.write_batch(piece)
-                _update_stats(piece)
-                count += take
-                off += take
-                if count >= rows_per_file:
-                    _close()
-        _close()
-        if not done:
-            return
-        out_schema = pa.schema(
-            [
-                ("bin", pa.int32()),
-                ("file_path", pa.string()),
-                ("record_count", pa.int64()),
-                ("file_size_bytes", pa.int64()),
-                ("stats", pa.string()),
-            ]
-        )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([int(r["bin"]) for r in done], pa.int32()),
-                pa.array([r["file_path"] for r in done], pa.string()),
-                pa.array([int(r["record_count"]) for r in done], pa.int64()),
-                pa.array([int(r["file_size_bytes"]) for r in done], pa.int64()),
-                pa.array([r["stats"] for r in done], pa.string()),
-            ],
-            schema=out_schema,
-        )
-
-    lineage_rows = df.mapInArrow(_write, schema=LINEAGE_SCHEMA).collect()
-    out = [
-        DataFile(
-            file_path=r["file_path"],
-            record_count=int(r["record_count"]),
-            file_size_bytes=int(r["file_size_bytes"]),
-            stats=json.loads(r["stats"]),
-        )
-        for r in lineage_rows
-    ]
-    out.sort(key=lambda d: d.file_path)
-    return out
+    return _write(
+        df,
+        data_dir=data_dir,
+        run_id=run_id,
+        compression=compression,
+        compression_level=compression_level,
+        rows_per_file=rows_per_file,
+    )
 
 
 def num_bins_for(total_bytes: int, target_bytes: int) -> int:

@@ -147,12 +147,7 @@ def create_images_table(
         )
 
     binned = binned.withColumn("_bin", _bin_of("_seq")).drop("_seq")
-    table.append(
-        binned,
-        run_id=f"seed{seed}",
-        explicit_bins=binned,
-        num_bins=num_bins,
-    )
+    table.append(binned, run_id=f"seed{seed}", num_bins=num_bins)
     return table
 
 

@@ -330,7 +330,6 @@ class MoonTable:
         df: DataFrame,
         run_id: str | None = None,
         rows_per_file: int = 131_072,
-        explicit_bins: DataFrame | None = None,
         num_bins: int | None = None,
         stage_only: bool = False,
         branch: str | None = None,
@@ -343,8 +342,9 @@ class MoonTable:
         SINGLE-PASS: files roll over at the mem-slice flush threshold
         (131 072 rows, mooncake_table_config.rs:159) inside the write task
         itself — no pre-count, so the input (often a generator or join) is
-        scanned exactly once. Callers with a planned layout pass explicit
-        bins instead (one reduce task per bin).
+        scanned exactly once. Callers with a planned layout pass *num_bins*
+        instead: *df* then carries an int ``_bin`` column and each bin
+        becomes one file (one reduce task per bin).
 
         *stage_only*: write-audit-publish — the data lands durably but the
         table's current pointer doesn't move; audit with
@@ -364,12 +364,14 @@ class MoonTable:
         run_id = run_id or uuid.uuid4().hex[:12]
         if branch is not None and stage_only:
             raise ValueError("branch writes are implicitly staged; drop stage_only")
-        if explicit_bins is not None:
+        if num_bins is not None:
+            if "_bin" not in df.columns:
+                raise ValueError("append(num_bins=...) needs an int _bin column on df")
             new_files = write_datafiles(
-                explicit_bins,
+                df,
                 data_dir=self.catalog.data_dir,
                 run_id=run_id,
-                num_bins=num_bins or 1,
+                num_bins=num_bins,
                 compression="snappy",
             )
         else:
@@ -542,40 +544,31 @@ class MoonTable:
         return out
 
     def read_delete_rows(self, dfiles: list[DeleteFile]) -> DataFrame | None:
-        """The logical (file_path, pos) rows of a set of deletion-vector
-        files, whatever their at-rest format. Bitmap files expand JVM-side:
-        posexplode the word array, then unpack each non-zero word's set bits
-        with a codegen'd transform+filter — no Python worker."""
+        """The logical (file_path, pos) rows of a set of bitmap
+        deletion-vector files, expanded JVM-side: posexplode the word array,
+        then unpack each non-zero word's set bits with a codegen'd
+        transform+filter — no Python worker. A file in any other format
+        raises ValueError."""
         if not dfiles:
             return None
-        parts: list[DataFrame] = []
-        legacy = [d for d in dfiles if d.format != "bitmap"]
-        bitmap = [d for d in dfiles if d.format == "bitmap"]
-        if legacy:
-            parts.append(
-                self.spark.read.schema("file_path string, pos long").parquet(
-                    *[d.file_path for d in legacy]
+        for d in dfiles:
+            if d.format != "bitmap":
+                raise ValueError(
+                    f"delete file {d.file_path} has format {d.format!r}; "
+                    "only 'bitmap' deletion vectors can be read"
                 )
-            )
-        if bitmap:
-            raw = self.spark.read.schema(
-                "file_path string, words array<bigint>, n_positions long"
-            ).parquet(*[d.file_path for d in bitmap])
-            exp = raw.select(
-                "file_path", F.posexplode("words").alias("widx", "word")
-            ).filter(F.col("word") != 0)
-            bits = F.expr(
-                "filter(transform(sequence(0, 63), "
-                "b -> CASE WHEN (shiftright(word, b) & 1) = 1 "
-                "THEN widx * 64 + CAST(b AS BIGINT) END), x -> x IS NOT NULL)"
-            )
-            parts.append(
-                exp.select("file_path", F.explode(bits).alias("pos"))
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.union(p)
-        return out
+        raw = self.spark.read.schema(
+            "file_path string, words array<bigint>, n_positions long"
+        ).parquet(*[d.file_path for d in dfiles])
+        exp = raw.select(
+            "file_path", F.posexplode("words").alias("widx", "word")
+        ).filter(F.col("word") != 0)
+        bits = F.expr(
+            "filter(transform(sequence(0, 63), "
+            "b -> CASE WHEN (shiftright(word, b) & 1) = 1 "
+            "THEN widx * 64 + CAST(b AS BIGINT) END), x -> x IS NOT NULL)"
+        )
+        return exp.select("file_path", F.explode(bits).alias("pos"))
 
     def _read_deletes(self, dfiles: list[DeleteFile]) -> DataFrame | None:
         deletes = self.read_delete_rows(dfiles)
@@ -586,10 +579,7 @@ class MoonTable:
         # actively FORCE a shuffled join — Spark's own auto-broadcast
         # estimator sees only the tiny at-rest file size and would broadcast
         # the expansion anyway (executor-OOM at scale).
-        est = sum(
-            d.position_count if d.format == "bitmap" else d.record_count
-            for d in dfiles
-        ) * _DELETE_ROW_EST_BYTES
+        est = sum(d.position_count for d in dfiles) * _DELETE_ROW_EST_BYTES
         if est <= _BROADCAST_DELETES_BYTES:
             deletes = F.broadcast(deletes)
         else:
@@ -1170,7 +1160,6 @@ class MoonTable:
                 file_path=f.file_path,
                 record_count=f.record_count,
                 file_size_bytes=f.file_size_bytes,
-                format="bitmap",
                 position_count=int(
                     (f.stats.get("n_positions") or {}).get("sum") or 0
                 ),

@@ -191,7 +191,7 @@ def test_merge_probe_prunes_by_key_stats(spark, tmp_path):
         F.format_string("k%03d", F.col("id")).alias("image_id"),
         F.col("id").alias("v"),
     ).withColumn("_bin", (F.col("v") / 100).cast("int"))
-    t.append(df, explicit_bins=df, num_bins=4)
+    t.append(df, num_bins=4)
     assert len(t.data_files()) == 4
 
     # change batch touches only the first range

@@ -50,7 +50,7 @@ def _many_file_table(spark, root) -> MoonTable:
         F.format_string("k%04d", F.col("id")).alias("image_id"),
         F.col("id").alias("v"),
     ).withColumn("_bin", (F.col("v") / 10).cast("int"))
-    t.append(df, explicit_bins=df, num_bins=N_FILES)
+    t.append(df, num_bins=N_FILES)
     assert len(t.data_files()) == N_FILES
     return t
 

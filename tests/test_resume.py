@@ -112,7 +112,7 @@ def test_compaction_splits_oversized_file(spark, tmp_table_root):
     big = generate_images_df(spark, 3000, seed=9).withColumn(
         "image_id", F.concat(F.lit("big-"), F.col("image_id"))
     ).withColumn("_bin", F.lit(0))
-    table.append(big, explicit_bins=big, num_bins=1, run_id="bigf")
+    table.append(big, num_bins=1, run_id="bigf")
     huge = max(table.data_files(), key=lambda f: f.file_size_bytes)
     expected = _rows(table)
 
