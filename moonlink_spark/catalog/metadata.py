@@ -72,9 +72,12 @@ class DeleteFile:
     """A deletion-vector parquet file.
 
     format="bitmap", the only format written or read: one row per TARGET
-    data file —
+    data file per DV file —
     (file_path string, words array<bigint>, n_positions long) where `words`
-    is the packed 64-bit-word bitmap over row positions. The parquet-native
+    is the packed 64-bit-word bitmap over row positions. Several DV files
+    of a snapshot may each hold a row for the same target file (one per
+    merge until a rewrite folds them); that file's deleted set is the OR of
+    its rows over all of the snapshot's DV files. The parquet-native
     stand-in for moonlink's roaring-bitmap puffin blobs (deletion_vector.rs;
     delete_vector.rs:9-15): a 131072-row file costs ≤16 KB of bitmap
     regardless of delete ratio, ~20× smaller at heavy ratios than the

@@ -11,17 +11,23 @@ Reference semantics being re-created (SURVEY.md §2 rows 2-3, 10-12; §3.2):
 
 Spark-first design: moonlink resolves delete positions by probing its
 bucketed hash file-index (persisted_bucket_hash_map.rs) — here *the join is
-the index*: the deduped change batch (small) is broadcast-joined against a
-positional scan of the target that reads ONLY the key column plus parquet
-metadata (_metadata.file_path/row_index) — Catalyst prunes every payload
-column, so the probe never touches image bytes. Matched positions become
-position-delete files (the puffin-DV analog); surviving change rows become
-fresh data files. One atomic snapshot commit publishes both.
+the index*: a positional scan of the manifest-pruned target files reads ONLY
+the key column plus parquet metadata (_metadata.file_path/row_index; Catalyst
+prunes every payload column, so the probe never touches image bytes) and is
+semi-joined with the deduped change keys (broadcast below a byte gate). The
+probe is ONE Spark action that collects (file_path, pos) to the driver. It
+does not anti-join the existing deletion vectors, so it returns the live row
+of each batch key plus any dead versions of those keys that no rewrite has
+removed yet: its size is bounded by the batch and the batch keys' history,
+never by the table. The driver drops the positions the snapshot's deletion
+vectors already set (liveness), folds the rest into one bitmap row per
+target file and writes them as one position-delete file (the puffin-DV
+analog). Surviving change rows become fresh data files. One atomic snapshot
+commit publishes both.
 
 At 100 TB scale: the target-side scan is embarrassingly parallel and
-column-pruned; the only shuffle is on the (small) change batch; skewed keys
-are impossible post-LWW (keys are unique). AQE skew-join handles pathological
-file/row distribution on the probe side.
+column-pruned; the only shuffle is on the (small) change batch, none on the
+delete side; skewed keys are impossible post-LWW (keys are unique).
 """
 
 from __future__ import annotations
@@ -33,7 +39,7 @@ from pyspark.sql import DataFrame, Window, functions as F
 
 from moonlink_spark.catalog.metadata import norm_path
 from moonlink_spark.plans.physical import hash_bin, write_datafiles
-from moonlink_spark.table import MoonTable
+from moonlink_spark.table import MoonTable, fold_live_positions
 
 # broadcast the deduped change-key projection below this ESTIMATED size —
 # gate on bytes, not rows: 5M wide string keys would be a multi-hundred-MB
@@ -81,22 +87,6 @@ def _overlapping_foreign_appends(
             continue
         if not (fmax < klo or fmin > khi):
             out.append(f)
-    return out
-
-
-def _per_file_positions(delete_files: list) -> dict[str, int]:
-    """Per-target-file deleted-position counts, read back from freshly
-    written bitmap delete files (one row per target file; the files are
-    ≤16 KB bitmaps, so a driver-side columnar read of just
-    (file_path, n_positions) is metadata-cardinality work)."""
-    import pyarrow.parquet as pq
-
-    out: dict[str, int] = {}
-    for d in delete_files:
-        t = pq.read_table(d.file_path, columns=["file_path", "n_positions"])
-        for p, n in zip(t.column(0).to_pylist(), t.column(1).to_pylist()):
-            p = norm_path(p)
-            out[p] = out.get(p, 0) + int(n)
     return out
 
 
@@ -175,11 +165,11 @@ def _merge_locked(
     # per-partition lineage (north rule) for the INSERT writes only: their
     # bin contents are a pure function of the change batch (LWW collapse +
     # hash binning), so a merge killed mid-write resumes skipping completed
-    # bins. The DELETE write gets NO lineage on purpose: its positions come
+    # bins. The DELETE file gets NO lineage on purpose: its positions come
     # from probing TABLE STATE, which a lock-free append can change between
-    # a failed attempt and its retry — resuming stale delete bins would
-    # silently skip newly-matched positions. Deletes re-write fully on
-    # retry (idempotent: same file names, tiny bitmaps).
+    # a failed attempt and its retry — resuming a stale delete file would
+    # silently skip newly-matched positions. It is re-written fully on
+    # retry (idempotent: same file name, tiny bitmaps).
     lineage_root = os.path.join(table.catalog.metadata_dir, "lineage", run_id)
     ins_lineage = os.path.join(lineage_root, "inserts")
 
@@ -225,34 +215,37 @@ def _merge_locked(
         # can't intersect the batch's key range can't hold a matching row —
         # skip probing it entirely (the moonlink analog: per-file min/max
         # Datum stats gating the index probe; on a key-clustered table this
-        # turns a full-table probe into a few files)
-        all_files = table.data_files()
+        # turns a full-table probe into a few files). Data files, probe
+        # files and prior deletion vectors all come from one pinned snapshot.
+        planned_sid = table.current_snapshot_id()
+        all_files = table.data_files(planned_sid)
         if n_final == 0:
             probe_files = []  # empty batch: nothing can match, skip the probe
         elif head["klo"] is not None:
-            probe_files = table.plan_files({key: (head["klo"], head["khi"])})
+            probe_files = table.plan_files(
+                {key: (head["klo"], head["khi"])}, snapshot_id=planned_sid
+            )
         else:
             probe_files = all_files
         new_delete_files: list = []
         per_file_deletes: dict[str, int] = {}
         if probe_files:
-            target_pos = table.scan(
-                with_position=True, columns=[key, "_fp", "_pos"], files=probe_files
+            positions = (
+                table._read_data(probe_files, with_position=True)
+                .select(key, "_fp", "_pos")
+                .join(keys_df, key, "left_semi")
+                .select(F.col("_fp").alias("file_path"), F.col("_pos").alias("pos"))
+                .toArrow()
             )
-            matched = target_pos.join(keys_df, key, "left_semi").select(
-                F.col("_fp").alias("file_path"), F.col("_pos").alias("pos")
-            )
-            # ONE job resolves positions AND writes the bitmap DVs; the
-            # per-file counts the commit needs come back from the written
-            # bitmap rows (one (file_path, n_positions) row per target
-            # file, read driver-side from the tiny at-rest files) — the
-            # old separate groupBy+collect count job and the cache of the
-            # probe output are gone. Bins are sized from the batch row
-            # count (an upper bound on matches; identical below 4M rows).
-            new_delete_files = table.write_position_deletes(
-                matched, run_id=run_id, num_bins=table.dv_rewrite_bins(n_final)
-            )
-            per_file_deletes = _per_file_positions(new_delete_files)
+            touched = set(positions.column("file_path").to_pylist())
+            prior = table.read_bitmap_rows(table.delete_files(planned_sid), touched)
+            bitmaps = fold_live_positions(positions, prior)
+            if bitmaps.num_rows:
+                new_delete_files = [table.write_bitmap_file(bitmaps, run_id)]
+            per_file_deletes = dict(zip(
+                map(norm_path, bitmaps.column("file_path").to_pylist()),
+                bitmaps.column("n_positions").to_pylist(),
+            ))
         n_matched = int(sum(per_file_deletes.values()))
         stage_t["probe_delete_sec"] = round(_time.time() - _t0, 3)
         _t0 = _time.time()

@@ -46,9 +46,13 @@ def word_shingles(
 ) -> DataFrame:
     """Distinct word k-shingles per doc: (id, shingle). Map-side explode —
     no shuffle until the consumer aggregates: per-doc distinctness is
-    ``array_distinct`` in the array domain BEFORE the explode (ids are
-    unique per input row), where the old row-level ``.distinct()`` paid a
-    full shuffle of every (id, shingle) string for the same result."""
+    ``array_distinct`` in the array domain BEFORE the explode, where the
+    old row-level ``.distinct()`` paid a full shuffle of every (id, shingle)
+    string for the same result.
+
+    Precondition: *id_col* is unique per input row. Two rows sharing an id
+    each emit their own shingles, so the id's (id, shingle) pairs repeat and
+    any shingle-count or Jaccard built on them is wrong."""
     words = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
     shingles = F.when(
         F.size(words) >= k,

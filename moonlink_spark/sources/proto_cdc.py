@@ -256,7 +256,9 @@ def _scalar_decoder(dt: T.DataType) -> Decoder:
 
 
 def _proto3_default(dt: T.DataType):
-    """proto3 scalar default for a field omitted from the wire."""
+    """proto3 default for a map-entry key or value omitted from the wire, in
+    the decoder's own value form: a struct is a row of its fields'
+    defaults, a date or timestamp is the epoch."""
     if isinstance(dt, T.StringType):
         return ""
     if isinstance(dt, T.BinaryType):
@@ -265,7 +267,15 @@ def _proto3_default(dt: T.DataType):
         return False
     if isinstance(dt, (T.DoubleType, T.FloatType)):
         return 0.0
-    return 0
+    if isinstance(dt, (T.IntegerType, T.LongType, T.ShortType, T.ByteType)):
+        return 0
+    if isinstance(dt, T.TimestampType):
+        return pd.Timestamp(0)
+    if isinstance(dt, T.DateType):
+        return pd.Timestamp(0).date()
+    if isinstance(dt, T.StructType):
+        return {f.name: _proto3_default(f.dataType) for f in dt.fields}
+    raise TypeError(f"no proto3 default for {dt.simpleString()}")
 
 
 def _decode_message(buf: bytes, pos: int, end: int, layout: list[tuple],

@@ -53,9 +53,12 @@ _DELETE_ROW_EST_BYTES = 96
 _UNSET = object()
 
 # rows per writer bin when (re)writing position-delete bitmaps — shared by
-# merge's delete write and compaction/clustering's surviving-DV carry-over
-# so no DV write path ever collapses to a single serial reduce task
+# the DataFrame DV writes (compaction/clustering carry-over, Iceberg import)
+# so none of them ever collapses to a single serial reduce task
 DV_REWRITE_ROWS_PER_BIN = 4_000_000
+
+# the at-rest schema of a bitmap deletion-vector file (DeleteFile)
+BITMAP_SCHEMA = "file_path string, words array<bigint>, n_positions long"
 
 # maintenance-lock heartbeat TTL: an acquirer may break a lock whose
 # heartbeat (mtime, refreshed every ttl/4 by the holder) is older than this
@@ -551,15 +554,8 @@ class MoonTable:
         raises ValueError."""
         if not dfiles:
             return None
-        for d in dfiles:
-            if d.format != "bitmap":
-                raise ValueError(
-                    f"delete file {d.file_path} has format {d.format!r}; "
-                    "only 'bitmap' deletion vectors can be read"
-                )
-        raw = self.spark.read.schema(
-            "file_path string, words array<bigint>, n_positions long"
-        ).parquet(*[d.file_path for d in dfiles])
+        _check_bitmap(dfiles)
+        raw = self.spark.read.schema(BITMAP_SCHEMA).parquet(*[d.file_path for d in dfiles])
         exp = raw.select(
             "file_path", F.posexplode("words").alias("widx", "word")
         ).filter(F.col("word") != 0)
@@ -569,6 +565,22 @@ class MoonTable:
             "THEN widx * 64 + CAST(b AS BIGINT) END), x -> x IS NOT NULL)"
         )
         return exp.select("file_path", F.explode(bits).alias("pos"))
+
+    def read_bitmap_rows(self, dfiles: list[DeleteFile], file_paths) -> "pa.Table | None":
+        """The (file_path, words) bitmap rows of *dfiles* that target one of
+        *file_paths*, read on the driver (a few KB per DV file). A file in
+        any other format raises ValueError, as in read_delete_rows."""
+        import pyarrow.dataset as ds
+
+        if not dfiles:
+            return None
+        _check_bitmap(dfiles)
+        return ds.dataset(
+            [d.file_path for d in dfiles], format="parquet", schema=_bitmap_arrow_schema()
+        ).to_table(
+            columns=["file_path", "words"],
+            filter=ds.field("file_path").isin(list(file_paths)),
+        )
 
     def _read_deletes(self, dfiles: list[DeleteFile]) -> DataFrame | None:
         deletes = self.read_delete_rows(dfiles)
@@ -1095,6 +1107,28 @@ class MoonTable:
                 out.add(norm_path(d.file_path))
         return out
 
+    def write_bitmap_file(self, bitmaps: "pa.Table", run_id: str) -> DeleteFile:
+        """Write bitmap rows (fold_live_positions' output) from the driver as
+        ONE DV file through the writer core's file handle: the name, the
+        .inprogress + rename and the at-rest schema of write_position_deletes'
+        bin 0, so readers cannot tell the two apart."""
+        from moonlink_spark.plans.physical import _OpenFile
+
+        name = f"del-{run_id}-b00000.parquet"
+        out = _OpenFile(
+            os.path.join(self.catalog.data_dir, name), 0, f".inprogress.{os.getpid()}",
+            _bitmap_arrow_schema(), "snappy", None, set(),
+        )
+        for rb in bitmaps.to_batches():
+            out.write(rb)
+        rec = out.close(None)
+        return DeleteFile(
+            file_path=rec["file_path"],
+            record_count=rec["record_count"],
+            file_size_bytes=rec["file_size_bytes"],
+            position_count=sum(bitmaps.column("n_positions").to_pylist()),
+        )
+
     def dv_rewrite_bins(self, n_delete_rows: int) -> int:
         """Writer-task count for a position-delete (re)write: one bin per
         DV_REWRITE_ROWS_PER_BIN surviving rows. At 100 TB a compaction/
@@ -1166,3 +1200,72 @@ class MoonTable:
             )
             for f in files
         ]
+
+
+def _check_bitmap(dfiles: list[DeleteFile]) -> None:
+    for d in dfiles:
+        if d.format != "bitmap":
+            raise ValueError(
+                f"delete file {d.file_path} has format {d.format!r}; "
+                "only 'bitmap' deletion vectors can be read"
+            )
+
+
+def _bitmap_arrow_schema() -> "pa.Schema":
+    """BITMAP_SCHEMA as the Arrow schema the writer core gives it."""
+    import pyarrow as pa
+
+    return pa.schema([
+        ("file_path", pa.string()),
+        ("words", pa.list_(pa.field("element", pa.int64()))),
+        ("n_positions", pa.int64()),
+    ])
+
+
+def fold_live_positions(positions: "pa.Table", prior: "pa.Table | None" = None) -> "pa.Table":
+    """Fold (file_path, pos) rows into bitmap rows (BITMAP_SCHEMA), one per
+    target file, sorted by file_path, with the words and n_positions of
+    write_position_deletes' JVM fold — after dropping every position already
+    set in *prior* bitmap rows. A file's prior set is the OR of all of its
+    rows; a file left with no new position gets no row."""
+    import numpy as np
+    import pyarrow as pa
+
+    dead: dict[str, np.ndarray] = {}
+    if prior is not None:
+        for fp, w in zip(prior.column("file_path").to_pylist(), prior.column("words").to_pylist()):
+            w = np.asarray(w, dtype=np.int64).view(np.uint64)
+            have = dead.get(fp)
+            if have is not None:
+                w = np.pad(w, (0, max(0, len(have) - len(w))))
+                w[: len(have)] |= have
+            dead[fp] = w
+
+    paths = positions.column("file_path").to_numpy(zero_copy_only=False)
+    pos = positions.column("pos").to_numpy().astype(np.int64)
+    files, inv = np.unique(paths, return_inverse=True)
+    order = np.argsort(inv, kind="stable")
+    groups = np.split(pos[order], np.cumsum(np.bincount(inv, minlength=len(files)))[:-1])
+    out_fp, out_words, out_n = [], [], []
+    for fp, p in zip(files, groups):
+        p = np.unique(p)
+        have = dead.get(fp)
+        if have is not None:
+            have = np.pad(have, (0, max(0, int(p[-1]) // 64 + 1 - len(have))))
+            p = p[((have[p >> 6] >> (p & 63).astype(np.uint64)) & np.uint64(1)) == 0]
+        if not len(p):
+            continue
+        words = np.zeros(int(p[-1]) // 64 + 1, dtype=np.uint64)
+        np.bitwise_or.at(words, p >> 6, np.uint64(1) << (p & 63).astype(np.uint64))
+        out_fp.append(str(fp))
+        out_words.append(words.view(np.int64))
+        out_n.append(len(p))
+    schema = _bitmap_arrow_schema()
+    return pa.table(
+        [
+            pa.array(out_fp, pa.string()),
+            pa.array(out_words, schema.field("words").type),
+            pa.array(out_n, pa.int64()),
+        ],
+        schema=schema,
+    )

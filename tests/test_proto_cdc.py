@@ -180,3 +180,35 @@ def test_proto_streaming_ingest(spark, tmp_path):
                    format="proto")
     assert {r["image_id"] for r in t.scan().collect()} == {"a1"}
     assert t.current_flush_lsn() == 20
+
+
+def test_proto_map_entry_default_struct_and_temporal_values():
+    """An omitted map-entry value takes its type's proto3 default in the
+    decoder's value form: a struct is a row of its fields' defaults, a date
+    or timestamp is the epoch. A value type with no proto3 default raises."""
+    import datetime
+
+    import pandas as pd
+
+    from moonlink_spark.sources.proto_cdc import _proto3_default
+
+    inner = T.StructType([
+        T.StructField("x", T.LongType()),
+        T.StructField("s", T.StringType()),
+        T.StructField("ok", T.BooleanType()),
+    ])
+    entry = bytes([0x0A, 0x01, ord("k")])  # key "k", value omitted
+    buf = bytes([0x0A, len(entry)]) + entry
+    for vt, want in [
+        (inner, {"x": 0, "s": "", "ok": False}),
+        (T.DateType(), datetime.date(1970, 1, 1)),
+        (T.TimestampType(), pd.Timestamp("1970-01-01")),
+    ]:
+        layout = [("m", 1, T.MapType(T.StringType(), vt))]
+        got = _decode_message(buf, 0, len(buf), layout, True)
+        assert got == {"m": {"k": want}}, vt
+        # the default is the same value the decoder gives an encoded zero
+        enc = _enc(layout, {"m": {"k": want}})
+        assert _decode_message(enc, 0, len(enc), layout, True) == got
+    with pytest.raises(TypeError, match="no proto3 default"):
+        _proto3_default(T.ArrayType(T.LongType()))

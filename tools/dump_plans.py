@@ -7,9 +7,10 @@ Usage:
 Pipeline mode explains the declared queries' returned DataFrames directly.
 Maint mode builds a small fixture table, runs merge / fused cluster /
 force-full compact, and intercepts every distributed write
-(plans.physical.write_datafiles) to dump the physical plan of the exact
-DataFrame each op executes — the rewrite plans the bench times, which the
-query functions' returned scans would not show.
+(plans.physical.write_datafiles) and the merge probe's collect
+(DataFrame.toArrow) to dump the physical plan of the exact DataFrame each op
+executes — the plans the bench times, which the query functions' returned
+scans would not show.
 
 Run once from the round-start tree (SUFFIX "before", via a git worktree)
 and once from the optimized tree ("after") so plan-shape claims in the
@@ -87,7 +88,19 @@ def dump_maint(spark, outdir: str, suffix: str) -> None:
     root = "/tmp/dump_plans_tbl"
     shutil.rmtree(root, ignore_errors=True)
     t = create_images_table(spark, root, 3000, seed=42)
-    merge_into(t, generate_changes_df(spark, 3000, 600, seed=42), run_id="dp-merge")
+    # the merge probe is the one DataFrame the merge collects to the driver
+    frame_cls = type(spark.range(1))
+    orig_to_arrow = frame_cls.toArrow
+
+    def to_arrow(self):
+        captured.append(("dp-merge-probe", _explain(self)))
+        return orig_to_arrow(self)
+
+    frame_cls.toArrow = to_arrow
+    try:
+        merge_into(t, generate_changes_df(spark, 3000, 600, seed=42), run_id="dp-merge")
+    finally:
+        frame_cls.toArrow = orig_to_arrow
     optimize(t, mode="full", cluster_by=["phash", "w", "h"], run_id="dp-fused",
              target_bytes=1 << 20)
     compact(t, CompactionConfig(mode="force_full", target_bytes=1 << 20),
@@ -95,7 +108,8 @@ def dump_maint(spark, outdir: str, suffix: str) -> None:
     shutil.rmtree(root, ignore_errors=True)
 
     names = {
-        "dp-merge": "merge_delete_write",  # first dp-merge capture
+        "dp-merge-probe": "merge_probe",
+        "dp-merge": "merge_insert_write",  # the merge's only distributed write
         "dp-fused": "cluster_fused_rewrite",
         "dp-compact": "compact_rewrite",
     }
@@ -104,9 +118,7 @@ def dump_maint(spark, outdir: str, suffix: str) -> None:
         base = names.get(run_id, run_id)
         k = seen.get(run_id, 0)
         seen[run_id] = k + 1
-        if run_id == "dp-merge" and k == 1:
-            base = "merge_insert_write"
-        elif k:
+        if k:
             base = f"{base}{k}"
         path = os.path.join(outdir, f"{base}_{suffix}.txt")
         with open(path, "w") as f:
