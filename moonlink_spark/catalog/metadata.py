@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from dataclasses import asdict, dataclass, field
 from typing import Any
 
@@ -81,17 +82,17 @@ class DeleteFile:
     stand-in for moonlink's roaring-bitmap puffin blobs (deletion_vector.rs;
     delete_vector.rs:9-15): a 131072-row file costs ≤16 KB of bitmap
     regardless of delete ratio, ~20× smaller at heavy ratios than the
-    (file_path, pos) row form, and expands back to positions JVM-side at
-    scan time (no Python). ``MoonTable.read_delete_rows`` rejects any
-    other format.
+    (file_path, pos) row form. A scan never expands it to positions: it
+    joins each row to its file's bitmap rows and tests the row's bit
+    (``MoonTable.join_deletes``). Readers reject any other format.
     """
 
     file_path: str
     record_count: int
     file_size_bytes: int
     format: str = "bitmap"
-    # total deleted positions across the file (drives the scan-side
-    # broadcast gate: the EXPANDED join relation is what must fit)
+    # total deleted positions across the file, recorded for audit; the
+    # scan-side broadcast gate counts bitmap rows (record_count) instead
     position_count: int = 0
 
 
@@ -209,3 +210,22 @@ def norm_path(p: str) -> str:
     elif p.startswith("file:/"):
         p = p[5:]
     return os.path.abspath(p)
+
+
+# characters a local path keeps as they are in Spark's _metadata.file_path URI
+_URI_PLAIN = re.compile(r"[A-Za-z0-9/._~!$&'()*+,;=:@-]*")
+
+
+def file_path_col(paths):
+    """Each row's file path in the form manifests and deletion-vector rows
+    store (norm_path's), from Spark's _metadata.file_path. That column is a
+    URI: a file: prefix, and a space, %, #, ? or non-ASCII character
+    %-escaped. The escapes are decoded only when one of *paths* (the files
+    read) has such a character; url_decode would read a '+' (literal in a URI
+    path) as a space, so '+' is escaped first."""
+    from pyspark.sql import functions as F
+
+    fp = F.regexp_replace(F.col("_metadata.file_path"), "^file:", "")
+    if all(_URI_PLAIN.fullmatch(norm_path(p)) for p in paths):
+        return fp
+    return F.url_decode(F.regexp_replace(fp, r"\+", "%2B"))

@@ -29,11 +29,14 @@ import pyspark.sql.types as T
 from pyspark.sql import SparkSession, functions as F
 
 from moonlink_spark.iceberg.reader import (
+    _canon_partition,
     _manifest_entries,
     _manifest_list_entries,
     check_supported,
+    equality_delete_join,
     identity_partition_sources,
     load_iceberg_metadata,
+    partition_pruner_fields,
     resolve_schema,
 )
 from moonlink_spark.table import MoonTable
@@ -82,13 +85,16 @@ def _equality_to_position_deletes(
 
     Spec semantics: an equality delete applies to rows in data files whose
     data sequence number is STRICTLY LESS than the delete file's, matching
-    on the equality-id columns with NULL == NULL (Iceberg spec, "Equality
-    Delete Files"). At 100 TB this is a shuffle of the table keyed on the
-    equality columns against the (much smaller) delete set — the same
-    plan an engine-native eq-delete apply runs."""
+    on the equality-id columns with NULL == NULL, and, for a delete written
+    under a partitioned spec, only in data files of the same spec and
+    partition tuple (Iceberg spec, "Equality Delete Files";
+    reader.equality_delete_join, which the Iceberg scan shares). At 100 TB
+    this is a shuffle of the table keyed on the equality columns against
+    the (much smaller) delete set — the same plan an engine-native
+    eq-delete apply runs."""
     from collections import defaultdict
 
-    from moonlink_spark.catalog.metadata import norm_path
+    from moonlink_spark.catalog.metadata import file_path_col, norm_path
 
     id_to_name = {f["id"]: f["name"] for f in ice_schema["fields"]}
     groups: dict[tuple, list[dict]] = defaultdict(list)
@@ -106,45 +112,21 @@ def _equality_to_position_deletes(
             ) from None
         groups[key].append(e)
 
-    data_seq_df = spark.createDataFrame(
-        [(norm_path(e["file_path"]), int(e["_seq"])) for e in data_entries],
-        "file_path string, _dseq long",
-    )
+    data_seq_df = F.broadcast(spark.createDataFrame(
+        [(norm_path(e["file_path"]), int(e["_seq"]), e["_pkey"]) for e in data_entries],
+        "file_path string, _dseq long, _pkey string",
+    ))
+    data_paths = [e["file_path"] for e in data_entries]
     parts = []
     for key_cols, entries in groups.items():
-        data = (
-            spark.read.parquet(*[e["file_path"] for e in data_entries])
-            .select(
-                *key_cols,
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:(//)?", ""
-                ).alias("file_path"),
-                F.col("_metadata.row_index").alias("pos"),
-            )
-            .join(F.broadcast(data_seq_df), "file_path")
-        )
-        del_seq_df = spark.createDataFrame(
-            [(norm_path(e["file_path"]), int(e["_seq"])) for e in entries],
-            "_delfp string, _xseq long",
-        )
-        dels = (
-            spark.read.parquet(*[e["file_path"] for e in entries])
-            .select(
-                *[F.col(c).alias(f"_k_{c}") for c in key_cols],
-                F.regexp_replace(
-                    F.col("_metadata.file_path"), "^file:(//)?", ""
-                ).alias("_delfp"),
-            )
-            .join(F.broadcast(del_seq_df), "_delfp")
-            .select(*[f"_k_{c}" for c in key_cols], "_xseq")
-            .distinct()
-        )
-        cond = [data[c].eqNullSafe(dels[f"_k_{c}"]) for c in key_cols]
+        data = spark.read.parquet(*data_paths).select(
+            *key_cols,
+            file_path_col(data_paths).alias("file_path"),
+            F.col("_metadata.row_index").alias("pos"),
+        ).join(data_seq_df, "file_path")
         parts.append(
-            data.join(dels, cond, "inner")
-            .where(F.col("_xseq") > F.col("_dseq"))
+            equality_delete_join(spark, data, entries, key_cols, "left_semi")
             .select("file_path", F.col("pos").cast("long"))
-            .distinct()
         )
     out = parts[0]
     for p in parts[1:]:
@@ -227,15 +209,22 @@ def import_iceberg(
     key_columns = key_columns or [ice_schema["fields"][0]["name"]]
 
     spec_sources = identity_partition_sources(meta)
+    spec_pruners = partition_pruner_fields(meta)
     data_entries: list[dict] = []
     delete_paths: list[str] = []
     puffin_entries: list[dict] = []
     eq_entries: list[dict] = []
     for m in _manifest_list_entries(spark, snap["manifest-list"]):
         src_by_pfield = spec_sources.get(m.get("partition_spec_id", 0), {})
+        spec_id = m.get("partition_spec_id", 0)
         for e in _manifest_entries(spark, m["manifest_path"]):
             if e["status"] == 2:
                 continue
+            # (spec, partition tuple) key scoping equality deletes, as the
+            # Iceberg scan does
+            e["_pkey"] = _canon_partition(
+                spec_id, spec_pruners.get(spec_id, []), e.get("partition") or {}
+            )
             e["_part_cols"] = sorted(
                 src_by_pfield[name]
                 for name in (e.get("partition") or {})

@@ -26,19 +26,69 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-# broadcast the position-delete relation below this many rows (mirrors the
-# expanded-size gate on the native scan path, table.py _read_deletes)
+from moonlink_spark.catalog.metadata import file_path_col, norm_path
+
+# broadcast the position-delete relation below this many rows; Iceberg
+# position deletes are (file_path, pos) rows, so the count is their size
+# (the native scan gates its bitmap rows instead, table.py join_deletes)
 _BROADCAST_DELETE_ROWS = 2_000_000
 
 
-def _canon_partition(spec_id: int, part: dict) -> str:
-    """Canonical string for a manifest entry's (spec, partition tuple) —
-    used to scope equality deletes to their own partition. Both sides come
-    through the same Avro decode, so repr-based canonicalization is
-    deterministic across entries."""
-    import json as _json
+def _canon_partition(spec_id: int, fields: list[dict], part: dict) -> str | None:
+    """Key scoping equality deletes to their (spec, partition tuple), over
+    the spec's non-void *fields* (partition_pruner_fields), each value in
+    the spec's storage form (a date as days), so decoders that give one
+    value as an int or as a date agree. None for an unpartitioned spec,
+    whose deletes apply globally; a missing value is NULL, not global."""
+    from moonlink_spark.iceberg.transforms import apply_transform
 
-    return f"{spec_id}|" + _json.dumps(part, sort_keys=True, default=repr)
+    if not fields:
+        return None
+    vals = []
+    for pf in fields:
+        v = part.get(pf["name"])
+        if pf["transform"] == "identity":
+            v = apply_transform("identity", v, pf["type"])
+        elif pf["transform"] == "day" and v is not None and not isinstance(v, int):
+            v = apply_transform("identity", v, "date")  # day's result type is date
+        vals.append(v.hex() if isinstance(v, (bytes, bytearray)) else v)
+    return json.dumps([spec_id, vals], default=str)
+
+
+def equality_delete_join(
+    spark: SparkSession, rows: DataFrame, entries: list[dict], key_cols, how: str
+) -> DataFrame:
+    """Join *rows* (carrying the equality columns *key_cols*, their file's
+    data sequence _dseq and partition key _pkey) with the equality-delete
+    files *entries* (each with its _seq and _pkey) under the spec's rule:
+    equal key columns with NULL == NULL, the delete's sequence number
+    strictly greater, and the delete's partition key NULL (an unpartitioned
+    spec: global) or equal to the row's. left_anti keeps the surviving rows,
+    left_semi the deleted ones. The delete side broadcasts below
+    _BROADCAST_DELETE_ROWS."""
+    del_seq_df = spark.createDataFrame(
+        [(norm_path(e["file_path"]), int(e["_seq"]), e["_pkey"]) for e in entries],
+        "_delfp string, _xseq long, _delpkey string",
+    )
+    del_paths = [e["file_path"] for e in entries]
+    dels = (
+        spark.read.parquet(*del_paths)
+        .select(
+            *[F.col(c).alias(f"_k_{c}") for c in key_cols],
+            file_path_col(del_paths).alias("_delfp"),
+        )
+        .join(F.broadcast(del_seq_df), "_delfp")
+        .select(*[f"_k_{c}" for c in key_cols], "_xseq", "_delpkey")
+        .distinct()
+    )
+    if sum(e["record_count"] for e in entries) <= _BROADCAST_DELETE_ROWS:
+        dels = F.broadcast(dels)
+    pred = (dels["_xseq"] > rows["_dseq"]) & (
+        dels["_delpkey"].isNull() | (dels["_delpkey"] == rows["_pkey"])
+    )
+    for c in key_cols:
+        pred = pred & rows[c].eqNullSafe(dels[f"_k_{c}"])
+    return rows.join(dels, pred, how)
 
 
 def read_avro_via_jvm(spark: SparkSession, path: str) -> list:
@@ -489,7 +539,7 @@ def read_iceberg_scan(
     # path → (lower_bounds, upper_bounds) as {field-id: Appendix-D bytes}
     file_bounds: dict[str, tuple] = {}
     file_seqs: dict[str, int] = {}  # path → data sequence number
-    file_pkeys: dict[str, str] = {}  # path → canonical (spec, partition) key
+    file_pkeys: dict[str, str | None] = {}  # path → canonical (spec, partition) key
     delete_paths: list[str] = []
     puffin_entries: list[dict] = []
     eq_entries: list[dict] = []
@@ -576,7 +626,7 @@ def read_iceberg_scan(
                 )
                 part = e.get("partition") or {}
                 file_pkeys[e["file_path"]] = _canon_partition(
-                    m.get("partition_spec_id", 0), part
+                    m.get("partition_spec_id", 0), pruner_fields, part
                 )
                 file_parts[e["file_path"]] = {
                     src_by_pfield[name]: v
@@ -589,9 +639,9 @@ def read_iceberg_scan(
                     if pf["name"] in part
                 ]
             elif e["content"] == 2:
-                eq_entries.append(
-                    {**e, "_seq": seq, "_spec_id": m.get("partition_spec_id", 0)}
-                )
+                eq_entries.append({**e, "_seq": seq, "_pkey": _canon_partition(
+                    m.get("partition_spec_id", 0), pruner_fields, e.get("partition") or {}
+                )})
                 n_delete_rows += e["record_count"]
             elif e.get("file_format") == "PUFFIN":
                 puffin_entries.append(e)
@@ -813,7 +863,7 @@ def read_iceberg_scan(
 
     with_pos = df.select(
         *read_cols,
-        F.regexp_replace(F.col("_metadata.file_path"), "^file:", "").alias("_fp"),
+        file_path_col(data_paths).alias("_fp"),
         F.col("_metadata.row_index").alias("_pos"),
     )
     if fill_cols:
@@ -895,7 +945,7 @@ def read_iceberg_scan(
             # force a shuffled-hash anti-join above the gate: the at-rest
             # delete files are small, so Spark's size estimator would
             # otherwise broadcast a relation whose in-memory row count is
-            # huge (same rationale as the native scan's expanded-size gate)
+            # huge (same rationale as the native scan's bitmap gate)
             dels = dels.hint("shuffle_hash")
         with_pos = with_pos.join(dels, ["_fp", "_pos"], "left_anti")
     if eq_groups:
@@ -908,52 +958,16 @@ def read_iceberg_scan(
         # the equality ids don't cover the partition source
         seq_map = F.broadcast(
             spark.createDataFrame(
-                [(p, int(file_seqs[p]), file_pkeys.get(p, "")) for p in data_paths],
+                [(p, int(file_seqs[p]), file_pkeys.get(p)) for p in data_paths],
                 "_fp string, _dseq long, _pkey string",
             )
         )
         with_pos = with_pos.join(seq_map, "_fp")
         for key_cols, entries in eq_groups.items():
-            del_seq_df = spark.createDataFrame(
-                [
-                    (
-                        e["file_path"],
-                        int(e["_seq"]),
-                        _canon_partition(e["_spec_id"], e.get("partition") or {}),
-                        not (e.get("partition") or {}),
-                    )
-                    for e in entries
-                ],
-                "_delfp string, _xseq long, _delpkey string, _pglobal boolean",
-            )
-            dels = (
-                spark.read.parquet(*[e["file_path"] for e in entries])
-                .select(
-                    *[F.col(c).alias(f"_k_{c}") for c in key_cols],
-                    F.regexp_replace(
-                        F.col("_metadata.file_path"), "^file:", ""
-                    ).alias("_delfp"),
-                )
-                .join(F.broadcast(del_seq_df), "_delfp")
-                .select(
-                    *[f"_k_{c}" for c in key_cols], "_xseq", "_delpkey", "_pglobal"
-                )
-                .distinct()
-            )
-            if sum(e["record_count"] for e in entries) <= _BROADCAST_DELETE_ROWS:
-                dels = F.broadcast(dels)
-            cond = [with_pos[c].eqNullSafe(dels[f"_k_{c}"]) for c in key_cols]
-            cond.append(dels["_xseq"] > with_pos["_dseq"])
-            # partition scoping: unpartitioned-spec deletes are global;
-            # partitioned-spec deletes require an identical partition tuple
-            cond.append(dels["_pglobal"] | (dels["_delpkey"] == with_pos["_pkey"]))
-            pred = cond[0]
-            for c in cond[1:]:
-                pred = pred & c
             # one hash anti-join keyed on the equality columns per group —
             # the table shuffles once per distinct equality-id set, the
             # delete side broadcasts below the gate
-            with_pos = with_pos.join(dels, pred, "left_anti")
+            with_pos = equality_delete_join(spark, with_pos, entries, key_cols, "left_anti")
         with_pos = with_pos.drop("_dseq", "_pkey")
     if not with_row_ids:
         return with_pos.select(*cols)

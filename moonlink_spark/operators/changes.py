@@ -27,9 +27,9 @@ Semantics per snapshot in (from, to], walked in sequence order:
   rewrites are skipped entirely (Iceberg's changelog scan does the same).
 
 Scale shape: each delta is a column-pruned parquet scan of only the files
-ADDED by that snapshot, plus (for merges) a positional semi-join of the
+ADDED by that snapshot, plus (for merges) a bitmap semi-join of the
 parent scan restricted to the files the new deletes actually reference —
-no full-table diff, no driver-side rows.
+no full-table diff, no driver-side data rows.
 """
 
 from __future__ import annotations
@@ -95,97 +95,50 @@ def scan_changes(
             removed_files = [f for f in prev_data if norm_path(f.file_path) not in cur_files]
             added_dels = [d for d in cur_del_entries if norm_path(d.file_path) not in prev_dels]
             removed_dels = [d for d in prev_del_entries if norm_path(d.file_path) not in cur_dels]
-            # the current state's full delete set, expanded at most once per
-            # snapshot delta and shared by the branches below (plans, not jobs)
-            cur_del_rows = table._read_deletes(cur_del_entries)
 
             def _tag(df: DataFrame, op: str) -> DataFrame:
                 return df.withColumn("_change_op", F.lit(op)).withColumn(
                     "_change_snapshot_id", F.lit(s.snapshot_id).cast("long")
                 )
 
+            def _targets(dels: list, files: list) -> list:
+                # the data files among *files* that *dels* hold bitmap rows
+                # for, read on the driver
+                rows = table.read_bitmap_rows(dels)
+                named = {norm_path(p) for p in rows.column("file_path").to_pylist()}
+                return [f for f in files if norm_path(f.file_path) in named]
+
             if added_files:
                 # rows of freshly-added files, minus positions the SAME
                 # snapshot already deletes ON THOSE FILES (a merge's insert
-                # files carry no deletes, so the filtered delete side is
-                # empty there; a rollback into a DV-carrying state must not
-                # replay suppressed rows)
-                ins = table._read_data(added_files, with_position=cur_del_rows is not None)
-                if cur_del_rows is not None:
-                    added_paths = [norm_path(f.file_path) for f in added_files]
-                    on_added = cur_del_rows.filter(F.col("file_path").isin(added_paths))
-                    ins = ins.join(
-                        on_added,
-                        (ins["_fp"] == on_added["file_path"])
-                        & (ins["_pos"] == on_added["pos"]),
-                        "left_anti",
-                    )
+                # files carry no deletes; a rollback into a DV-carrying state
+                # must not replay suppressed rows)
+                ins = table._read_data(added_files, with_position=bool(cur_del_entries))
+                ins = table.join_deletes(ins, added_files, cur_del_entries)
                 parts.append(_tag(ins.select(*cols), "I"))
             if removed_files:
                 # semantic delete of every row still LIVE in prev (a file
                 # dropped together with its DVs must not re-emit rows those
                 # DVs had already suppressed)
                 old = table._read_data(removed_files, with_position=True)
-                prev_del_rows = table._read_deletes(prev_del_entries)
-                if prev_del_rows is not None:
-                    old = old.join(
-                        prev_del_rows,
-                        (old["_fp"] == prev_del_rows["file_path"])
-                        & (old["_pos"] == prev_del_rows["pos"]),
-                        "left_anti",
-                    )
+                old = table.join_deletes(old, removed_files, prev_del_entries)
                 parts.append(_tag(old.select(*cols), "D"))
             if added_dels:
-                # _read_deletes applies the expanded-position broadcast gate
-                # (broadcast small, force shuffle join when the bitmap
-                # expansion is large) — never an unconditional broadcast
-                dels = table._read_deletes(added_dels)
                 # the new deletes name their target files — scan only those
-                targets = {
-                    norm_path(r["file_path"])
-                    for r in dels.select("file_path").distinct().collect()
-                }
-                target_files = [
-                    f for f in prev_data
-                    if norm_path(f.file_path) in targets
-                ]
+                target_files = _targets(added_dels, prev_data)
                 old = table._read_data(target_files, with_position=True)
-                pre_image = old.join(
-                    dels,
-                    (old["_fp"] == dels["file_path"]) & (old["_pos"] == dels["pos"]),
-                    "left_semi",
-                ).select(*cols)
-                parts.append(_tag(pre_image, "D"))
+                pre_image = table.join_deletes(old, target_files, added_dels, "left_semi")
+                parts.append(_tag(pre_image.select(*cols), "D"))
             if removed_dels:
                 # positions a dropped delete file had suppressed come back
                 # to life — IF their target file survives into the new state
                 # and the new state doesn't still delete them
-                restored = table._read_deletes(removed_dels)
-                if cur_del_rows is not None:
-                    restored = restored.join(
-                        cur_del_rows,
-                        ["file_path", "pos"],
-                        "left_anti",
-                    )
-                # the final semi-join only reads SURVIVING target files, so
-                # restored positions of files that were dropped too simply
-                # never match — no explicit path filter needed
-                targets = {
-                    norm_path(r["file_path"])
-                    for r in restored.select("file_path").distinct().collect()
-                } & cur_files
-                if targets:
-                    target_files = [
-                        f for f in cur_data if norm_path(f.file_path) in targets
-                    ]
+                target_files = _targets(removed_dels, cur_data)
+                if target_files:
                     live = table._read_data(target_files, with_position=True)
-                    back = live.join(
-                        restored,
-                        (live["_fp"] == restored["file_path"])
-                        & (live["_pos"] == restored["pos"]),
-                        "left_semi",
-                    ).select(*cols)
-                    parts.append(_tag(back, "I"))
+                    back = table.join_deletes(live, target_files, removed_dels, "left_semi")
+                    back = table.join_deletes(back, target_files, cur_del_entries)
+                    parts.append(_tag(back.select(*cols), "I"))
         prev = s
 
     if not parts:

@@ -581,8 +581,7 @@ def _cluster_locked(
     if scope == "incremental":
         delete_files = table.delete_files()
         if delete_files:
-            deletes_df = table._read_deletes(delete_files)
-            surviving = exclude_file_paths(deletes_df, plan.victims)
+            surviving = exclude_file_paths(table.read_delete_rows(delete_files), plan.victims)
             n_surviving_deletes = surviving.count()
             if n_surviving_deletes > 0:
                 new_delete_entries = table.write_position_deletes(

@@ -9,7 +9,7 @@ Re-creates moonlink's compaction job family (SURVEY.md §2 rows 18-20):
   (ForceFull: min 2, size ∞, any delete ratio — snapshot_options.rs:13-23,
   snapshot_maintenance.rs:66-67).
 - EXECUTION mirrors compactor.rs:180-306: stream-read each victim, apply its
-  deletion vector inline (anti-join), concatenate into ~512MiB zstd-4 files
+  deletion vector inline (bitmap anti-join), concatenate into ~512MiB zstd-4 files
   (parquet_utils.rs:16-20). New files start DV-free; surviving deletes for
   non-victim files are rewritten into fresh position-delete files (the DV
   carry-over of iceberg_table_syncer.rs:315-350 without the remap, because
@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 from moonlink_spark.catalog.metadata import (
     COMPACT_TARGET_BYTES,
     DataFile,
+    file_path_col,
     norm_path,
 )
 from moonlink_spark.plans.physical import (
@@ -192,8 +193,7 @@ def _compact_locked(
     lineage_dir = os.path.join(table.catalog.metadata_dir, "lineage", run_id)
 
     delete_files = table.delete_files()
-    deletes_df = table._read_deletes(delete_files)
-    live_by_path = {norm_path(f.file_path): f.live_bytes for f in table.data_files()}
+    file_by_path = {norm_path(f.file_path): f for f in table.data_files()}
 
     # bin-value namespace per group: group gi owns [gi*STRIDE, (gi+1)*STRIDE)
     # so split sub-bins never collide across groups (bin value = output file
@@ -218,7 +218,7 @@ def _compact_locked(
         # never packs past target otherwise) is SPLIT across nb parallel
         # writers: without this, a 10 GB foreign file becomes one serial
         # write task — the tail that caps ForceFull's parallelism
-        group_live = sum(live_by_path.get(p, 0) for p in group)
+        group_live = sum(file_by_path[p].live_bytes for p in group if p in file_by_path)
         nb = max(1, min(_SPLIT_STRIDE - 1, -(-group_live // max(1, config.target_bytes))))
         if nb == 1:
             # resume fast-path: an unsplit group whose bin a previous attempt
@@ -234,20 +234,16 @@ def _compact_locked(
     new_files: list[DataFile] = list(resumed)
     total_bins = sum(nb for _, _, nb in read_groups)
     if read_groups:
-        df = spark.read.schema(schema).parquet(
-            *[p for _, group, _ in read_groups for p in group]
-        )
-        df = df.select(
+        scan_paths = [p for _, group, _ in read_groups for p in group]
+        df = spark.read.schema(schema).parquet(*scan_paths).select(
             "*",
-            F.regexp_replace(F.col("_metadata.file_path"), "^file:", "").alias("_fp"),
+            file_path_col(scan_paths).alias("_fp"),
             F.col("_metadata.row_index").alias("_pos"),
         )
-        if deletes_df is not None:
-            df = df.join(
-                deletes_df,
-                (df["_fp"] == deletes_df["file_path"]) & (df["_pos"] == deletes_df["pos"]),
-                "left_anti",
-            )
+        # a resumed plan may name a file that is no longer live: it has no
+        # DV rows in this snapshot
+        live = [file_by_path[p] for p in scan_paths if p in file_by_path]
+        df = table.join_deletes(df, live, delete_files)
         bin_map = spark.createDataFrame(
             [(p, base, nb) for base, group, nb in read_groups for p in group],
             "_fp string, _base int, _nb int",
@@ -288,14 +284,13 @@ def _compact_locked(
     # per-partition lineage metrics (north rule: files-in/files-out, bytes,
     # row counts per partition so a killed run resumes + is auditable);
     # outputs map back to their group through the bin id in the file name
-    by_path = {norm_path(f.file_path): f for f in table.data_files()}
     outs_by_group: dict[int, list[DataFile]] = {}
     for f in new_files:
         b = int(os.path.basename(f.file_path).rsplit("-b", 1)[1].split(".")[0])
         outs_by_group.setdefault(b // _SPLIT_STRIDE, []).append(f)
     metrics = []
     for gi, group in enumerate(plan.groups):
-        ins = [by_path[p] for p in group if p in by_path]
+        ins = [file_by_path[p] for p in group if p in file_by_path]
         outs = outs_by_group.get(gi, [])
         metrics.append({
             "bin": gi,
@@ -319,7 +314,7 @@ def _compact_locked(
     n_surviving_deletes = 0
     all_victims = {norm_path(f.file_path) for f in table.data_files()} <= victim_set
     if delete_files and not all_victims:
-        surviving = exclude_file_paths(deletes_df, victim_set)
+        surviving = exclude_file_paths(table.read_delete_rows(delete_files), victim_set)
         n_surviving_deletes = surviving.count()
         if n_surviving_deletes > 0:
             new_delete_entries = table.write_position_deletes(

@@ -38,15 +38,21 @@ from moonlink_spark.catalog.metadata import (
     Snapshot,
     TableMetadata,
     assign_field_ids,
+    file_path_col,
     norm_path,
     schema_paths,
 )
 from moonlink_spark.plans.physical import hash_bin, write_datafiles
 
-# broadcast position-delete sets up to this EXPANDED size during scans
+# broadcast a scan's deletion-vector bitmap rows up to this decoded size
 _BROADCAST_DELETES_BYTES = 256 * 1024 * 1024
-# per-(file_path, pos) row estimate in a broadcast hash relation
-_DELETE_ROW_EST_BYTES = 96
+
+# a row at (_fp, _pos) is deleted when its bit is set in a bitmap row of its
+# file; a position past the bitmap's last word reads NULL (get, not [])
+_DV_BIT_SET = (
+    "(shiftright(get(_dv_words, CAST(shiftright(_pos, 6) AS INT)), "
+    "CAST(_pos & 63 AS INT)) & 1) = 1"
+)
 
 # sentinel: "caller did not pass expected_parent_snapshot" (None is a valid
 # expectation — committing against an empty table)
@@ -529,7 +535,8 @@ class MoonTable:
         parts: list[DataFrame] = []
         for provided, fs in groups.items():
             sub = _prune_struct(schema, set(provided), "")
-            reader = self.spark.read.schema(sub).parquet(*[f.file_path for f in fs])
+            paths = [f.file_path for f in fs]
+            reader = self.spark.read.schema(sub).parquet(*paths)
             readable = _struct_paths(sub)
             cols = [
                 _project_by_path(fld.name, fld.dataType, readable).alias(fld.name)
@@ -537,7 +544,7 @@ class MoonTable:
             ]
             if with_position:
                 cols += [
-                    F.regexp_replace(F.col("_metadata.file_path"), "^file:", "").alias("_fp"),
+                    file_path_col(paths).alias("_fp"),
                     F.col("_metadata.row_index").alias("_pos"),
                 ]
             parts.append(reader.select(*cols))
@@ -550,7 +557,9 @@ class MoonTable:
         """The logical (file_path, pos) rows of a set of bitmap
         deletion-vector files, expanded JVM-side: posexplode the word array,
         then unpack each non-zero word's set bits with a codegen'd
-        transform+filter — no Python worker. A file in any other format
+        transform+filter — no Python worker. Scans never expand (see
+        join_deletes); this serves the compaction and clustering DV
+        carry-over and the Iceberg export. A file in any other format
         raises ValueError."""
         if not dfiles:
             return None
@@ -566,10 +575,11 @@ class MoonTable:
         )
         return exp.select("file_path", F.explode(bits).alias("pos"))
 
-    def read_bitmap_rows(self, dfiles: list[DeleteFile], file_paths) -> "pa.Table | None":
-        """The (file_path, words) bitmap rows of *dfiles* that target one of
-        *file_paths*, read on the driver (a few KB per DV file). A file in
-        any other format raises ValueError, as in read_delete_rows."""
+    def read_bitmap_rows(self, dfiles: list[DeleteFile], file_paths=None) -> "pa.Table | None":
+        """The (file_path, words) bitmap rows of *dfiles*, read on the driver
+        (a few KB per DV file); with *file_paths*, only rows targeting one of
+        them. A file in any other format raises ValueError, as in
+        read_delete_rows."""
         import pyarrow.dataset as ds
 
         if not dfiles:
@@ -579,24 +589,44 @@ class MoonTable:
             [d.file_path for d in dfiles], format="parquet", schema=_bitmap_arrow_schema()
         ).to_table(
             columns=["file_path", "words"],
-            filter=ds.field("file_path").isin(list(file_paths)),
+            filter=None if file_paths is None else ds.field("file_path").isin(list(file_paths)),
         )
 
-    def _read_deletes(self, dfiles: list[DeleteFile]) -> DataFrame | None:
-        deletes = self.read_delete_rows(dfiles)
-        if deletes is None:
-            return None
-        # gate on the EXPANDED relation (position count), not at-rest bytes:
-        # a 16KB bitmap can expand to millions of join rows. When too big,
-        # actively FORCE a shuffled join — Spark's own auto-broadcast
-        # estimator sees only the tiny at-rest file size and would broadcast
-        # the expansion anyway (executor-OOM at scale).
-        est = sum(d.position_count for d in dfiles) * _DELETE_ROW_EST_BYTES
-        if est <= _BROADCAST_DELETES_BYTES:
-            deletes = F.broadcast(deletes)
+    def join_deletes(
+        self, df: DataFrame, files: list[DataFile], dfiles: list[DeleteFile], how: str = "left_anti"
+    ) -> DataFrame:
+        """The rows of *df* (read from *files*, carrying _fp/_pos) that the
+        bitmap DVs *dfiles* do not delete (left_anti) or do (left_semi): one
+        join on the target path whose condition tests the row's bit, no
+        expansion to positions. A target's rows in several DV files OR
+        together. The bitmap rows are read on the driver and broadcast while
+        a metadata-only bound of their decoded size, DV rows × (largest
+        scanned record_count / 8 + path bytes), fits _BROADCAST_DELETES_BYTES;
+        above it Spark reads them and the join is forced to shuffle (Spark's
+        estimator sees only the at-rest size and would broadcast anyway)."""
+        if not dfiles:
+            return df if how == "left_anti" else df.limit(0)
+        _check_bitmap(dfiles)
+        per_row = max((f.record_count // 8 + len(f.file_path) for f in files), default=0)
+        if sum(d.record_count for d in dfiles) * per_row <= _BROADCAST_DELETES_BYTES:
+            import pyarrow as pa
+
+            rows = self.read_bitmap_rows(dfiles)
+            scanned = {norm_path(f.file_path) for f in files}
+            keep = [norm_path(fp) in scanned for fp in rows.column("file_path").to_pylist()]
+            rows = rows.filter(pa.array(keep, pa.bool_()))
+            # one chunk per column: createDataFrame rejects a chunkless column
+            dv = F.broadcast(self.spark.createDataFrame(pa.table(
+                [c.combine_chunks() for c in rows.columns], names=["_dv_fp", "_dv_words"]
+            )))
         else:
-            deletes = deletes.hint("shuffle_hash")
-        return deletes
+            dv = (
+                self.spark.read.schema(BITMAP_SCHEMA)
+                .parquet(*[d.file_path for d in dfiles])
+                .select(F.col("file_path").alias("_dv_fp"), F.col("words").alias("_dv_words"))
+                .hint("shuffle_hash")
+            )
+        return df.join(dv, (F.col("_fp") == F.col("_dv_fp")) & F.expr(_DV_BIT_SET), how)
 
     # ------------------------------------------------------- snapshot tags
     def create_tag(self, name: str, snapshot_id: int | None = None) -> int:
@@ -835,9 +865,10 @@ class MoonTable:
         files: list[DataFile] | None = None,
         ref: str | None = None,
     ) -> DataFrame:
-        """Snapshot-isolated read: data files of the snapshot, anti-joined
-        with its position deletes (reference read path:
-        snapshot_read.rs:152-241 + DV RowSelection in table_provider.rs).
+        """Snapshot-isolated read: data files of the snapshot minus the rows
+        whose bit is set in its deletion vectors, one bitmap join
+        (join_deletes; reference read path: snapshot_read.rs:152-241 + the
+        DV RowSelection in table_provider.rs).
 
         Column pruning and filter pushdown stay with Catalyst — when the
         caller filters/projects the returned DataFrame, the parquet scan
@@ -858,14 +889,7 @@ class MoonTable:
         files = self.data_files(snapshot_id) if files is None else files
         dfiles = self.delete_files(snapshot_id)
         need_pos = with_position or bool(dfiles)
-        df = self._read_data(files, with_position=need_pos)
-        deletes = self._read_deletes(dfiles)
-        if deletes is not None:
-            df = df.join(
-                deletes,
-                (df["_fp"] == deletes["file_path"]) & (df["_pos"] == deletes["pos"]),
-                "left_anti",
-            )
+        df = self.join_deletes(self._read_data(files, with_position=need_pos), files, dfiles)
         if not with_position and need_pos:
             df = df.drop("_fp", "_pos")
         if columns:
@@ -1149,7 +1173,7 @@ class MoonTable:
         at heavy delete ratios; fixed ≤16 KB per 131072-row target file.
         Folded JVM-side, no Python worker: one word per (file_path,
         pos >> 6) by bit_or, then per file a dense word array with zero
-        words in the gaps; read back JVM-side by read_delete_rows. The rows
+        words in the gaps; scans test bits in it (join_deletes). The rows
         are hash-partitioned by the writer's _bin first, so both
         aggregations and the writer share that one exchange."""
         words = (

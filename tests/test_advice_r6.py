@@ -303,3 +303,110 @@ def test_proto_map_entry_defaults(spark):
     buf = bytes([0x0A, len(entry)]) + entry
     out = _decode_message(buf, 0, len(buf), layout, strict=True)
     assert out["m"] == {"k": 0}
+
+
+def _date_partitioned_with_eq_delete(tmp_path):
+    """x1 lives in partitions d1 and d2; an equality delete of x1 written
+    under the same date-partitioned spec targets partition d1 only."""
+    from datetime import date
+
+    import pyarrow as pa
+
+    days1 = (date(2024, 3, 1) - date(1970, 1, 1)).days
+    schema_fields = [
+        {"id": 1, "name": "image_id", "required": True, "type": "string"},
+        {"id": 2, "name": "d", "required": False, "type": "date"},
+    ]
+    specs = [
+        {"spec-id": 1,
+         "fields": [{"name": "d", "transform": "identity", "source-id": 2,
+                     "field-id": 1000,
+                     "avro-type": {"type": "int", "logicalType": "date"}}]},
+    ]
+
+    def build(rows):
+        return pa.table({
+            "image_id": [r[0] for r in rows],
+            "d": pa.array([r[1] for r in rows], pa.int32()).cast(pa.date32()),
+        })
+
+    root = _write_external(
+        tmp_path,
+        data_entries=[
+            ("f1.parquet", {"d": days1}, 1, 1, [("x0", days1), ("x1", days1)], None),
+            ("f2.parquet", {"d": days1 + 1}, 1, 1, [("x1", days1 + 1)], None),
+        ],
+        delete_entries=[("d1.parquet", {"d": days1}, 1, 2, [("x1", days1)], [1])],
+        schema_fields=schema_fields,
+        partition_specs=specs,
+        data_builder=build,
+    )
+    return root, days1
+
+
+def _with_delete_partition(monkeypatch, convert):
+    """Decode the delete entries' partition tuples through *convert*, as a
+    manifest decoder other than the data entries' one might."""
+    from moonlink_spark.iceberg import reader
+
+    orig = reader._manifest_entries
+
+    def entries(spark, path):
+        out = orig(spark, path)
+        for e in out:
+            if e["content"] == 2:
+                e["partition"] = convert(e["partition"])
+        return out
+
+    monkeypatch.setattr(reader, "_manifest_entries", entries)
+
+
+def test_eq_delete_scope_compares_storage_form(spark, tmp_path, monkeypatch):
+    """A delete whose date partition value decodes as a date object (the Avro
+    date logical type applied) still matches data entries that decoded the
+    same value as days: scoping compares the spec's storage form, not repr.
+    Before the fix the delete matched nothing and x1 stayed in d1."""
+    from datetime import date, timedelta
+
+    from moonlink_spark.iceberg import read_iceberg_scan
+
+    root, days1 = _date_partitioned_with_eq_delete(tmp_path)
+    _with_delete_partition(
+        monkeypatch, lambda p: {k: date(1970, 1, 1) + timedelta(days=v) for k, v in p.items()}
+    )
+    got = sorted((r["image_id"], r["d"]) for r in read_iceberg_scan(spark, root).collect())
+    assert got == [("x0", date(2024, 3, 1)), ("x1", date(2024, 3, 2))]
+
+
+def test_eq_delete_partitioned_spec_never_global(spark, tmp_path, monkeypatch):
+    """A delete written under a partitioned spec whose tuple decodes empty is
+    scoped to a NULL partition, which no data file here has: it must not
+    apply globally. Before the fix it deleted x1 from both partitions."""
+    from datetime import date
+
+    from moonlink_spark.iceberg import read_iceberg_scan
+
+    root, _ = _date_partitioned_with_eq_delete(tmp_path)
+    _with_delete_partition(monkeypatch, lambda p: {})
+    got = sorted((r["image_id"], r["d"]) for r in read_iceberg_scan(spark, root).collect())
+    assert got == [("x0", date(2024, 3, 1)), ("x1", date(2024, 3, 1)), ("x1", date(2024, 3, 2))]
+
+
+@pytest.mark.parametrize("dirname", ["plain", "a b%c"])
+def test_eq_delete_scoped_on_import(spark, tmp_path, dirname):
+    """import_iceberg converts a partitioned-spec equality delete within its
+    partition only, as the Iceberg scan applies it (before the fix it
+    deleted x1 from both partitions). Under "a b%c", Spark URI-escapes
+    _metadata.file_path ("a%20b%25c") while manifests hold the plain path;
+    the delete must still apply in both reads."""
+    from datetime import date
+
+    from moonlink_spark.iceberg import read_iceberg_scan
+    from moonlink_spark.iceberg.importer import import_iceberg
+
+    root, _ = _date_partitioned_with_eq_delete(tmp_path / dirname)
+    want = [("x0", date(2024, 3, 1)), ("x1", date(2024, 3, 2))]
+    got = sorted((r["image_id"], r["d"]) for r in read_iceberg_scan(spark, root).collect())
+    assert got == want
+    t = import_iceberg(spark, str(root), str(tmp_path / "adopted"))
+    assert sorted((r["image_id"], r["d"]) for r in t.scan().collect()) == want

@@ -3,7 +3,9 @@ the engine first used: the JVM fold in write_position_deletes and the
 driver fold a merge uses (fold_live_positions + write_bitmap_file). Same
 word array and position count per target file, same at-rest schema, and
 read_delete_rows expands them back to the same (file_path, pos) set. The
-driver fold also drops positions that prior bitmaps already set."""
+driver fold also drops positions that prior bitmaps already set. The scan's
+bitmap join (join_deletes) deletes exactly the rows the join over those
+expanded rows does."""
 
 import os
 
@@ -12,6 +14,7 @@ import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pyspark.sql.types as T
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from moonlink_spark.table import MoonTable, fold_live_positions
@@ -165,3 +168,121 @@ def test_driver_fold_of_no_live_positions_is_empty():
     out = fold_live_positions(_positions([("/t/a.parquet", 2)]), prior)
     assert out.num_rows == 0
     assert out.schema.equals(fold_live_positions(_positions([])).schema)
+
+
+def _scan_rows(spark, files):
+    """(_fp, _pos) rows for every position of every DataFile in *files*."""
+    return spark.createDataFrame(
+        [(f.file_path, f.record_count) for f in files], "_fp string, n long"
+    ).select("_fp", F.explode(F.sequence(F.lit(0).cast("long"), F.col("n") - 1)).alias("_pos"))
+
+
+def test_bitmap_join_matches_expanded_join(spark, tmp_path, monkeypatch):
+    """join_deletes tests each row's bit against the bitmap rows; it must
+    keep (left_anti) and pick (left_semi) exactly the rows the join over the
+    expanded (file_path, pos) rows does, on the broadcast and the shuffle
+    side."""
+    import moonlink_spark.table as table_mod
+    from moonlink_spark.catalog.metadata import DataFile
+
+    t = _table(spark, tmp_path)
+    rows = _cases()
+    dv1 = t.write_position_deletes(
+        spark.createDataFrame(rows + [("/t/shared.parquet", 5), ("/t/shared.parquet", 700)],
+                              "file_path string, pos long"),
+        run_id="dv1", num_bins=2,
+    )
+    # a second DV file with another row for shared.parquet (overlapping at
+    # 700) and for word-edges.parquet: each target's rows OR together
+    dv2 = t.write_bitmap_file(fold_live_positions(_positions(
+        [("/t/shared.parquet", 6), ("/t/shared.parquet", 700), ("/t/shared.parquet", 1000),
+         ("/t/word-edges.parquet", 1)]
+    )), run_id="dv2")
+    dfiles = dv1 + [dv2]
+
+    # every bitmap's target is scanned past its last word; clean.parquet has
+    # no DV row; random-8.parquet has DV rows but is not scanned
+    last = {}
+    for fp, p in rows + [("/t/shared.parquet", 1000)]:
+        last[fp] = max(last.get(fp, 0), p)
+    last["/t/clean.parquet"] = 100
+    del last["/t/random-8.parquet"]
+    files = [DataFile(file_path=fp, record_count=p + 130, file_size_bytes=0)
+             for fp, p in sorted(last.items())]
+    scan = _scan_rows(spark, files)
+    ref = t.read_delete_rows(dfiles)
+
+    def pairs(df):
+        return {(r["_fp"], r["_pos"]) for r in df.select("_fp", "_pos").collect()}
+
+    want = {
+        how: pairs(scan.join(
+            ref, (scan["_fp"] == ref["file_path"]) & (scan["_pos"] == ref["pos"]), how
+        ))
+        for how in ("left_anti", "left_semi")
+    }
+    assert ("/t/word-edges.parquet", 1) in want["left_semi"]
+    assert ("/t/word-edges.parquet", 128) in want["left_anti"]  # past the last word
+    assert ("/t/shared.parquet", 1000) in want["left_semi"]
+    for shuffle in (False, True):
+        if shuffle:
+            monkeypatch.setattr(table_mod, "_BROADCAST_DELETES_BYTES", -1)
+        for how in ("left_anti", "left_semi"):
+            joined = t.join_deletes(scan, files, dfiles, how)
+            plan = joined._jdf.queryExecution().executedPlan().toString()
+            assert ("BroadcastHashJoin" in plan) != shuffle, plan
+            assert "posexplode" not in plan
+            assert pairs(joined) == want[how], (shuffle, how)
+
+    # a scan none of whose files has a DV row broadcasts an empty bitmap side
+    monkeypatch.undo()
+    clean = [f for f in files if f.file_path == "/t/clean.parquet"]
+    clean_scan = _scan_rows(spark, clean)
+    assert pairs(t.join_deletes(clean_scan, clean, dfiles)) == pairs(clean_scan)
+    assert not pairs(t.join_deletes(clean_scan, clean, dfiles, "left_semi"))
+
+
+def test_dvs_under_an_escaped_table_path(spark, tmp_path):
+    """Spark's _metadata.file_path URI-escapes a path ("a b%c" ->
+    "a%20b%25c"); manifests and DV rows hold the plain path. Under such a
+    table path a merge must still hide the rows it replaced (scan and
+    changelog) and count them on the files it hit; a compaction must find
+    every scanned file in its plan, drop its victims' DV rows and carry the
+    survivors' over, and the result must equal the same steps under a plain
+    path."""
+    from moonlink_spark.catalog.metadata import norm_path
+    from moonlink_spark.operators.changes import scan_changes
+    from moonlink_spark.operators.compaction import CompactionConfig, compact
+    from moonlink_spark.operators.merge import merge_into
+    from moonlink_spark.sources.fixtures import create_images_table, generate_changes_df
+
+    def state(t):
+        live = {norm_path(f.file_path) for f in t.data_files()}
+        targets = {
+            norm_path(r["file_path"])
+            for r in t.read_delete_rows(t.delete_files()).select("file_path").distinct().collect()
+        }
+        assert targets and targets <= live
+        return (
+            sorted((r["image_id"], r["caption"]) for r in t.scan().collect()),
+            sum(f.deleted_count for f in t.data_files()),
+            sum(d.position_count for d in t.delete_files()),
+        )
+
+    def run(root):
+        t = create_images_table(spark, root, 300, seed=42)
+        pre = t.current_snapshot_id()
+        merge_into(t, generate_changes_df(spark, 300, 50, seed=42), run_id="m1")
+        after_merge = state(t)
+        changes = sorted(
+            (r["_change_op"], r["image_id"])
+            for r in scan_changes(t, pre, columns=["image_id"]).collect()
+        )
+        # the two smallest files (one with DV rows) are victims; the largest
+        # keeps its DV rows
+        compact(t, CompactionConfig(mode="force_regular", max_files=2), run_id="c1")
+        return after_merge, changes, state(t)
+
+    plain = run(str(tmp_path / "plain"))
+    assert plain[0][1] == plain[0][2] > 0
+    assert run(str(tmp_path / "a b%c")) == plain

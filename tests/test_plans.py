@@ -68,8 +68,10 @@ def test_merge_change_keys_are_broadcast(spark, tmp_table_root):
 
 
 def test_delete_antijoin_broadcast_gated_by_positions(spark, tmp_table_root):
-    """The scan-side delete anti-join broadcasts when the EXPANDED position
-    count is small, and must NOT broadcast when it would be huge."""
+    """The scan-side bitmap anti-join broadcasts the bitmap rows from a
+    LocalTableScan when their decoded size bound (bitmap rows × scanned
+    positions / 8) is small, and must NOT broadcast when it would be huge.
+    Neither side expands a bitmap into positions (no Generate)."""
     from moonlink_spark.catalog.metadata import DeleteFile
     from moonlink_spark.operators.merge import merge_into
 
@@ -77,29 +79,30 @@ def test_delete_antijoin_broadcast_gated_by_positions(spark, tmp_table_root):
     merge_into(t, generate_changes_df(spark, 400, 60, seed=42), run_id="m1")
     dfiles = t.delete_files()
     assert dfiles and all(d.format == "bitmap" for d in dfiles)
-    assert "BroadcastHashJoin" in _plan(t.scan(columns=["image_id"]))
+    plan = _plan(t.scan(columns=["image_id"]).filter(F.col("image_id") != "x").groupBy().count())
+    assert "BroadcastHashJoin" in plan
+    assert "Generate" not in plan
+    tree = plan.split("\n\n")[0].splitlines()
+    exchange = next(i for i, ln in enumerate(tree) if "BroadcastExchange" in ln)
+    assert "LocalTableScan" in tree[exchange + 1], tree
 
-    # same files, metadata claiming billions of positions: the gate must
+    # same files, metadata claiming billions of bitmap rows: the gate must
     # FORCE a shuffled join — Spark's own estimator only sees the tiny
-    # at-rest bitmap and would happily broadcast the expansion
+    # at-rest bitmap and would happily broadcast it
     huge = [
         DeleteFile(
-            file_path=d.file_path, record_count=d.record_count,
+            file_path=d.file_path, record_count=10_000_000_000,
             file_size_bytes=d.file_size_bytes, format="bitmap",
-            position_count=10_000_000_000,
+            position_count=d.position_count,
         )
         for d in dfiles
     ]
-    deletes = t._read_deletes(huge)
-    scan = t._read_data(t.data_files(), with_position=True)
-    joined = scan.join(
-        deletes,
-        (scan["_fp"] == deletes["file_path"]) & (scan["_pos"] == deletes["pos"]),
-        "left_anti",
-    )
+    files = t.data_files()
+    joined = t.join_deletes(t._read_data(files, with_position=True), files, huge)
     plan = _plan(joined)
     assert "BroadcastHashJoin" not in plan
     assert "ShuffledHashJoin" in plan or "SortMergeJoin" in plan
+    assert "Generate" not in plan
 
 
 def test_clustering_amplifies_file_skipping(spark, tmp_table_root):

@@ -10,7 +10,9 @@ force-full compact, and intercepts every distributed write
 (plans.physical.write_datafiles) and the merge probe's collect
 (DataFrame.toArrow) to dump the physical plan of the exact DataFrame each op
 executes — the plans the bench times, which the query functions' returned
-scans would not show.
+scans would not show. It also dumps `scan_with_dvs`, a filtered count over
+the table while the merge's deletion vectors are live: the scan's bitmap
+join.
 
 Run once from the round-start tree (SUFFIX "before", via a git worktree)
 and once from the optimized tree ("after") so plan-shape claims in the
@@ -101,6 +103,12 @@ def dump_maint(spark, outdir: str, suffix: str) -> None:
         merge_into(t, generate_changes_df(spark, 3000, 600, seed=42), run_id="dp-merge")
     finally:
         frame_cls.toArrow = orig_to_arrow
+    # the merge left deletion vectors: a filtered count shows the scan's
+    # bitmap join
+    from pyspark.sql import functions as F
+
+    dv_scan = t.scan().filter(F.col("phash") > 0).groupBy().count()
+    captured.append(("dp-scan", _explain(dv_scan)))
     optimize(t, mode="full", cluster_by=["phash", "w", "h"], run_id="dp-fused",
              target_bytes=1 << 20)
     compact(t, CompactionConfig(mode="force_full", target_bytes=1 << 20),
@@ -110,6 +118,7 @@ def dump_maint(spark, outdir: str, suffix: str) -> None:
     names = {
         "dp-merge-probe": "merge_probe",
         "dp-merge": "merge_insert_write",  # the merge's only distributed write
+        "dp-scan": "scan_with_dvs",
         "dp-fused": "cluster_fused_rewrite",
         "dp-compact": "compact_rewrite",
     }
