@@ -8,6 +8,11 @@ POSIX filesystem the CAS is `open(path, "x")` on the versioned metadata file
 hint. Single-writer discipline per table matches moonlink's per-table event
 loop (table_handler.rs event_loop); concurrent committers lose the CAS and
 must retry on fresh state.
+
+Every write to a table goes through one commit loop, FileCatalog.update: it
+pins the metadata, lets the caller edit it (or build a complete file list
+from it, MoonTable.commit_files), publishes it with the CAS, and retries
+only a lost CAS, at most COMMIT_ATTEMPTS times.
 """
 
 from __future__ import annotations
@@ -15,6 +20,9 @@ from __future__ import annotations
 import os
 
 from moonlink_spark.catalog.metadata import TableMetadata
+
+# pins per commit before a run of lost CASes is given up as CommitConflict
+COMMIT_ATTEMPTS = 5
 
 
 class CommitConflict(Exception):
@@ -59,12 +67,12 @@ class FileCatalog:
     def load_pinned(self) -> tuple[TableMetadata, int]:
         """Read the version hint FIRST, then load exactly that version.
 
-        Every CAS retry loop must use this (not load() + current_version()
-        as two independent reads): a commit landing between the two reads
-        would pair NEWER version number with STALE metadata content, so the
-        CAS succeeds while silently dropping the intervening commit — a
-        parent-snapshot pin can't catch it because it is checked against
-        the same stale load."""
+        Only the commit loop (update) and MoonTable.commit_snapshot call
+        this; not load() + current_version() as two independent reads: a
+        commit landing between the two reads would pair NEWER version
+        number with STALE metadata content, so the CAS succeeds while
+        silently dropping the intervening commit — a parent-snapshot pin
+        can't catch it because it is checked against the same stale load."""
         version = self.current_version()
         return self.load(version), version
 
@@ -76,6 +84,36 @@ class FileCatalog:
         return sorted(out)
 
     # -- commit (CAS) --------------------------------------------------------
+    def update(self, edit, what: str, publish=None):
+        """The one commit loop: pin, edit, publish; retry only a lost CAS.
+
+        Each attempt pins the current metadata (load_pinned) and calls
+        *edit(meta)*, which changes it in place and returns the caller's
+        result. A refusal edit raises propagates at once, a CommitConflict
+        included. An edit that leaves the metadata as it found it commits
+        nothing; otherwise the change is CASed against the pinned version.
+        With *publish*, edit instead returns what *publish(meta, built)*
+        commits as a new version itself (MoonTable.commit_files), checked
+        against the same pinned metadata edit saw. Only a CommitConflict
+        from the CAS re-pins and retries, COMMIT_ATTEMPTS times in all;
+        *what* names the write in the final error."""
+        last: CommitConflict | None = None
+        for _ in range(COMMIT_ATTEMPTS):
+            meta, version = self.load_pinned()
+            before = meta.to_json() if publish is None else None
+            result = edit(meta)
+            try:
+                if publish is not None:
+                    return publish(meta, result)
+                if meta.to_json() != before:
+                    self.commit(meta, expected_version=version)
+                return result
+            except CommitConflict as e:
+                last = e
+        raise CommitConflict(
+            f"could not {what} after {COMMIT_ATTEMPTS} attempts: {last}"
+        ) from last
+
     def commit(self, meta: TableMetadata, expected_version: int) -> int:
         """Commit *meta* as version expected_version+1.
 

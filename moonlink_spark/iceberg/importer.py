@@ -28,6 +28,7 @@ import os
 import pyspark.sql.types as T
 from pyspark.sql import SparkSession, functions as F
 
+from moonlink_spark.catalog.metadata import TableMetadata
 from moonlink_spark.iceberg.reader import (
     _canon_partition,
     _manifest_entries,
@@ -253,15 +254,16 @@ def import_iceberg(
     t = MoonTable.create(spark, dest_root, schema, key_columns=key_columns)
     # adopt the source's field ids (incl. nested) so evolution continues
     # from the same id space; ids are never reused afterwards
-    tmeta, version = t.catalog.load_pinned()
     ids = _adopt_ids(ice_schema["fields"])
-    tmeta.field_ids = ids
-    # never reuse an id from ANY schema in the source's history (dropped
-    # columns in newer/older schemas must not be resurrected under a new name)
-    tmeta.next_field_id = (
-        max([meta.get("last-column-id", 0)] + list(ids.values())) + 1
-    )
-    t.catalog.commit(tmeta, expected_version=version)
+
+    def adopt(tmeta: TableMetadata) -> None:
+        tmeta.field_ids = ids
+        # never reuse an id from ANY schema in the source's history (dropped
+        # columns in newer/older schemas must not be resurrected under a
+        # new name)
+        tmeta.next_field_id = max([meta.get("last-column-id", 0)] + list(ids.values())) + 1
+
+    t.catalog.update(adopt, "adopt the source's field ids")
 
     t.add_files(data_paths, run_id="iceberg-import")
 
@@ -305,15 +307,17 @@ def import_iceberg(
             r["file_path"]: r["cnt"]
             for r in dels.groupBy("file_path").agg(F.count("*").alias("cnt")).collect()
         }
-        data_files = t.data_files()
-        for f in data_files:
-            extra = per_file.get(f.file_path, 0)
-            if extra:
-                f.deleted_count += int(extra)
-        t.commit_snapshot(
+
+        def build(data, deletes):
+            for f in data:
+                extra = per_file.get(f.file_path, 0)
+                if extra:
+                    f.deleted_count += int(extra)
+            return data, deletes + delete_files
+
+        t.commit_files(
             "import-deletes",
-            data_files,
-            delete_files,
+            build,
             summary={
                 "imported-from": os.path.abspath(src_root),
                 "imported-position-deletes": n,

@@ -26,7 +26,7 @@ import json
 
 import pyspark.sql.types as T
 
-from moonlink_spark.catalog.metadata import assign_field_ids, schema_paths
+from moonlink_spark.catalog.metadata import TableMetadata, assign_field_ids, schema_paths
 from moonlink_spark.table import MoonTable
 
 
@@ -81,64 +81,65 @@ def alter_table(
     pre-existing files have no value for them)."""
     add_columns = add_columns or []
     drop_columns = drop_columns or []
-    meta, version = table.catalog.load_pinned()
-    schema = T.StructType.fromJson(json.loads(meta.schema_json))
-    paths = {p for p, _ in schema_paths(schema)}
 
-    for c in drop_columns:
-        if c in table.key_columns:
-            raise ValueError(f"cannot drop key column {c!r}")
-        if c not in paths:
-            raise ValueError(f"cannot drop unknown column {c!r}")
-    new_schema = schema
-    for c in drop_columns:
-        new_schema = _drop_at(new_schema, c.split("."), c)
+    def edit(meta: TableMetadata) -> None:
+        schema = T.StructType.fromJson(json.loads(meta.schema_json))
+        paths = {p for p, _ in schema_paths(schema)}
 
-    # validate adds against the EVOLVING schema, not the pre-alter paths
-    # snapshot: add_columns=[meta, meta.x] in one call is legal (the parent
-    # exists by the time the child is applied), while a child under a
-    # just-dropped or never-added parent still fails cleanly in _add_at
-    live = {p for p, _ in schema_paths(new_schema)}
-    for f in add_columns:
-        if f.name in live:
-            raise ValueError(f"column {f.name!r} already exists")
-        if not f.nullable:
-            raise ValueError(f"added column {f.name!r} must be nullable")
-        parts = f.name.split(".")
-        leaf = T.StructField(parts[-1], f.dataType, True, f.metadata)
-        new_schema = _add_at(new_schema, parts[:-1], leaf, f.name)
-        live.add(f.name)
-        live.update(f"{f.name}.{sub}" for sub, _ in schema_paths(f.dataType))
+        for c in drop_columns:
+            if c in meta.key_columns:
+                raise ValueError(f"cannot drop key column {c!r}")
+            if c not in paths:
+                raise ValueError(f"cannot drop unknown column {c!r}")
+        new_schema = schema
+        for c in drop_columns:
+            new_schema = _drop_at(new_schema, c.split("."), c)
 
-    meta.schema_json = new_schema.json()
-    # field-id ledger over DOTTED PATHS: drops RETIRE the id (and every
-    # descendant id — never reused); adds take fresh ids for the new path
-    # and any nested paths inside an added struct — so a field re-added
-    # under a dropped name, at any depth, gets a new id and scans of
-    # pre-drop files project NULL instead of the stale physical values
-    # (Iceberg field-id semantics; iceberg_table_manager.rs:88-89)
-    if not meta.field_ids:  # legacy table: adopt ids for the pre-alter schema
-        meta.field_ids, meta.next_field_id = assign_field_ids(schema)
-    for c in drop_columns:
-        meta.field_ids.pop(c, None)
-        for k in [k for k in meta.field_ids if k.startswith(c + ".")]:
-            meta.field_ids.pop(k)
-    for f in add_columns:
-        meta.field_ids[f.name] = meta.next_field_id
-        meta.next_field_id += 1
-        # fresh ids for every nested slot of the added type — struct
-        # fields AND list element / map key/value sub-paths
-        for sub, _ in schema_paths(f.dataType):
-            meta.field_ids[f"{f.name}.{sub}"] = meta.next_field_id
+        # validate adds against the EVOLVING schema, not the pre-alter paths
+        # snapshot: add_columns=[meta, meta.x] in one call is legal (the parent
+        # exists by the time the child is applied), while a child under a
+        # just-dropped or never-added parent still fails cleanly in _add_at
+        live = {p for p, _ in schema_paths(new_schema)}
+        for f in add_columns:
+            if f.name in live:
+                raise ValueError(f"column {f.name!r} already exists")
+            if not f.nullable:
+                raise ValueError(f"added column {f.name!r} must be nullable")
+            parts = f.name.split(".")
+            leaf = T.StructField(parts[-1], f.dataType, True, f.metadata)
+            new_schema = _add_at(new_schema, parts[:-1], leaf, f.name)
+            live.add(f.name)
+            live.update(f"{f.name}.{sub}" for sub, _ in schema_paths(f.dataType))
+
+        meta.schema_json = new_schema.json()
+        # field-id ledger over DOTTED PATHS: drops RETIRE the id (and every
+        # descendant id — never reused); adds take fresh ids for the new path
+        # and any nested paths inside an added struct — so a field re-added
+        # under a dropped name, at any depth, gets a new id and scans of
+        # pre-drop files project NULL instead of the stale physical values
+        # (Iceberg field-id semantics; iceberg_table_manager.rs:88-89)
+        if not meta.field_ids:  # legacy table: adopt ids for the pre-alter schema
+            meta.field_ids, meta.next_field_id = assign_field_ids(schema)
+        for c in drop_columns:
+            meta.field_ids.pop(c, None)
+            for k in [k for k in meta.field_ids if k.startswith(c + ".")]:
+                meta.field_ids.pop(k)
+        for f in add_columns:
+            meta.field_ids[f.name] = meta.next_field_id
             meta.next_field_id += 1
-    table.catalog.commit(meta, expected_version=version)
+            # fresh ids for every nested slot of the added type — struct
+            # fields AND list element / map key/value sub-paths
+            for sub, _ in schema_paths(f.dataType):
+                meta.field_ids[f"{f.name}.{sub}"] = meta.next_field_id
+                meta.next_field_id += 1
+
+    table.catalog.update(edit, "alter the schema")
     # force an (empty-change) snapshot carrying the schema update, mirroring
     # moonlink's "force empty iceberg snapshot w/ schema update"
     # (table_handler.rs:449-467)
-    return table.commit_snapshot(
+    return table.commit_files(
         "alter",
-        table.data_files(),
-        table.delete_files(),
+        lambda data, deletes: (data, deletes),
         summary={
             "added-columns": [f.name for f in add_columns],
             "dropped-columns": list(drop_columns),

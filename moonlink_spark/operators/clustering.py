@@ -37,11 +37,7 @@ from pyspark.sql import functions as F
 
 from moonlink_spark.catalog.metadata import COMPACT_TARGET_BYTES, norm_path
 from moonlink_spark.functions.zorder import DEFAULT_BITS, curve_key
-from moonlink_spark.plans.physical import (
-    exclude_file_paths,
-    read_bin_records,
-    write_datafiles,
-)
+from moonlink_spark.plans.physical import read_bin_records, write_datafiles
 from moonlink_spark.table import MoonTable
 
 # sampled keys for boundary estimation: ~500 keys/bin at 128 bins — plenty
@@ -535,10 +531,8 @@ def _cluster_locked(
     # read ONLY the plan's victims (== every file in full scope); scan()
     # still applies the table's deletion vectors, so victim rows suppressed
     # by a DV are dropped inline and victims' delete entries die with them
-    victim_set_early = set(plan.victims)
-    victim_files = [
-        f for f in table.data_files() if norm_path(f.file_path) in victim_set_early
-    ]
+    victim_set = set(plan.victims)
+    victim_files = [f for f in table.data_files() if norm_path(f.file_path) in victim_set]
     df = assign_keys_and_bins(
         table.scan(files=victim_files), plan, key_col=key_col, bits=bits
     )
@@ -568,72 +562,38 @@ def _cluster_locked(
             done[b].cluster_by = plan.curve
             new_files.append(done[b])
 
-    in_files = [f for f in table.data_files() if norm_path(f.file_path) in set(plan.victims)]
+    in_files = [f for f in table.data_files() if norm_path(f.file_path) in victim_set]
     stage_t["reconstruct_sec"] = round(time.time() - t0, 3)
 
-    # surviving deletes: full scope rewrote every file, so the table is
-    # DV-free; incremental scope must carry over delete rows that target
-    # SURVIVORS (compaction's DV carry-over — victims' deletes were applied
-    # inline by the scan above and die with the victims)
+    # surviving deletes: victims' deletes were applied inline by the scan
+    # above and die with the victims; delete rows that target survivors
+    # (incremental scope) are carried over
     t0 = time.time()
-    new_delete_entries: list = []
-    n_surviving_deletes = 0
-    if scope == "incremental":
-        delete_files = table.delete_files()
-        if delete_files:
-            surviving = exclude_file_paths(table.read_delete_rows(delete_files), plan.victims)
-            n_surviving_deletes = surviving.count()
-            if n_surviving_deletes > 0:
-                new_delete_entries = table.write_position_deletes(
-                    surviving,
-                    run_id=run_id + "-dv",
-                    num_bins=table.dv_rewrite_bins(n_surviving_deletes),
-                )
+    new_delete_entries, n_surviving_deletes = table.carry_over_deletes(victim_set, run_id)
     stage_t["dv_carryover_sec"] = round(time.time() - t0, 3)
 
-    # commit rebase on conflict: merges/compactions can't race (same lock)
-    # but lock-free additive appends can — recompute survivors from fresh
-    # state so their files survive the rewrite commit
-    from moonlink_spark.catalog.catalog import CommitConflict
-
-    victim_set = set(plan.victims)
-    out_set = {norm_path(f.file_path) for f in new_files}
-    last_conflict: Exception | None = None
-    snapshot_id: int | None = None
+    # merges/compactions can't race (same lock) but lock-free additive
+    # appends can; commit_files rebuilds the survivors on top of them
+    replaced = victim_set | {norm_path(f.file_path) for f in new_files}
     t0 = time.time()
-    for _ in range(5):
-        # pin the commit to the parent read BEFORE the survivor list — an
-        # append CASing in between would otherwise be silently clobbered
-        parent_sid = table.current_snapshot_id()
-        survivors = [
-            f
-            for f in table.data_files()
-            if norm_path(f.file_path) not in victim_set
-            and norm_path(f.file_path) not in out_set
-        ]
-        try:
-            snapshot_id = table.commit_snapshot(
-                "cluster",
-                survivors + new_files,
-                new_delete_entries,
-                expected_parent_snapshot=parent_sid,
-                summary={
-                    "run_id": run_id,
-                    "curve": plan.curve,
-                    "by": plan.by,
-                    "scope": scope,
-                    "removed-files": len(plan.victims),
-                    "added-files": len(new_files),
-                    "added-records": sum(f.record_count for f in new_files),
-                    "surviving-delete-positions": n_surviving_deletes,
-                    "salted-bins": int(sum(1 for s in plan.salts if s > 1)),
-                },
-            )
-            break
-        except CommitConflict as e:
-            last_conflict = e
-    if snapshot_id is None:
-        raise last_conflict  # type: ignore[misc]
+    snapshot_id = table.commit_files(
+        "cluster",
+        lambda data, deletes: (
+            [f for f in data if norm_path(f.file_path) not in replaced] + new_files,
+            new_delete_entries,
+        ),
+        summary={
+            "run_id": run_id,
+            "curve": plan.curve,
+            "by": plan.by,
+            "scope": scope,
+            "removed-files": len(plan.victims),
+            "added-files": len(new_files),
+            "added-records": sum(f.record_count for f in new_files),
+            "surviving-delete-positions": n_surviving_deletes,
+            "salted-bins": int(sum(1 for s in plan.salts if s > 1)),
+        },
+    )
     stage_t["commit_sec"] = round(time.time() - t0, 3)
 
     # per-run lineage metrics (files-in/out, bytes, rows; per-bin detail

@@ -37,17 +37,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import functions as F
 
-from moonlink_spark.catalog.metadata import (
-    COMPACT_TARGET_BYTES,
-    DataFile,
-    file_path_col,
-    norm_path,
-)
-from moonlink_spark.plans.physical import (
-    exclude_file_paths,
-    read_bin_record,
-    write_datafiles,
-)
+from moonlink_spark.catalog.metadata import COMPACT_TARGET_BYTES, DataFile, norm_path
+from moonlink_spark.plans.physical import read_bin_record, write_datafiles
 from moonlink_spark.table import MoonTable
 
 
@@ -188,7 +179,6 @@ def _compact_locked(
         return None
 
     spark = table.spark
-    schema = table.schema
     victim_set = set(plan.victims)
     lineage_dir = os.path.join(table.catalog.metadata_dir, "lineage", run_id)
 
@@ -230,20 +220,18 @@ def _compact_locked(
                 continue
         read_groups.append((base, group, nb))
 
+    # a resumed plan may name a victim that is no longer live (another run
+    # rewrote it since the plan was made): its rows live on in that run's
+    # output, so only the plan's live victims are read — and a plan with
+    # none left and no bin of its own written has nothing to do
+    live = [file_by_path[p] for _, group, _ in read_groups for p in group if p in file_by_path]
+    if not live and not resumed:
+        return None
     _t0 = _time.time()
     new_files: list[DataFile] = list(resumed)
     total_bins = sum(nb for _, _, nb in read_groups)
-    if read_groups:
-        scan_paths = [p for _, group, _ in read_groups for p in group]
-        df = spark.read.schema(schema).parquet(*scan_paths).select(
-            "*",
-            file_path_col(scan_paths).alias("_fp"),
-            F.col("_metadata.row_index").alias("_pos"),
-        )
-        # a resumed plan may name a file that is no longer live: it has no
-        # DV rows in this snapshot
-        live = [file_by_path[p] for p in scan_paths if p in file_by_path]
-        df = table.join_deletes(df, live, delete_files)
+    if live:
+        df = table.join_deletes(table._read_data(live, with_position=True), live, delete_files)
         bin_map = spark.createDataFrame(
             [(p, base, nb) for base, group, nb in read_groups for p in group],
             "_fp string, _base int, _nb int",
@@ -304,69 +292,36 @@ def _compact_locked(
     with open(os.path.join(lineage_dir, "metrics.json"), "w") as f:
         json.dump(metrics, f)
 
-    # rewrite the surviving delete set: victims' deletes die with the victims.
-    # When every data file is a victim (force_full) no survivor can carry a
-    # delete — skip the count/rewrite job outright (deletes can only target
-    # data files, and concurrent lock-free appends are DV-free by
-    # construction: only the lock-holding merge writes DVs).
     _t0 = _time.time()
-    new_delete_entries: list = []
-    n_surviving_deletes = 0
-    all_victims = {norm_path(f.file_path) for f in table.data_files()} <= victim_set
-    if delete_files and not all_victims:
-        surviving = exclude_file_paths(table.read_delete_rows(delete_files), victim_set)
-        n_surviving_deletes = surviving.count()
-        if n_surviving_deletes > 0:
-            new_delete_entries = table.write_position_deletes(
-                surviving,
-                run_id=run_id + "-dv",
-                num_bins=table.dv_rewrite_bins(n_surviving_deletes),
-            )
+    new_delete_entries, n_surviving_deletes = table.carry_over_deletes(victim_set, run_id)
+    stage_t["dv_carryover_sec"] = round(_time.time() - _t0, 3)
 
     # survivors = current files that are neither victims nor this run's own
     # outputs (a re-run of a completed run_id reconstructs new_files from
     # lineage — without the second exclusion they'd be double-committed).
-    # Commit rebases on conflict: merges/clusters can't race (same lock) but
-    # lock-free additive appends can — recomputing survivors from fresh state
-    # folds their files in.
-    from moonlink_spark.catalog.catalog import CommitConflict
-
-    stage_t["dv_carryover_sec"] = round(_time.time() - _t0, 3)
+    # Merges/clusters can't race (same lock) but lock-free additive appends
+    # can; commit_files rebuilds the survivors on top of them.
+    _t0 = _time.time()
+    replaced = victim_set | {norm_path(f.file_path) for f in new_files}
+    sid = table.commit_files(
+        "compact",
+        lambda data, deletes: (
+            [f for f in data if norm_path(f.file_path) not in replaced] + new_files,
+            new_delete_entries,
+        ),
+        summary={
+            "run_id": run_id,
+            "removed-files": len(plan.victims),
+            "added-files": len(new_files),
+            "added-records": sum(f.record_count for f in new_files),
+            "surviving-delete-positions": n_surviving_deletes,
+            "groups": len(plan.groups),
+        },
+    )
+    stage_t["commit_sec"] = round(_time.time() - _t0, 3)
     # cross-run stage observability (observability/iceberg_persistence.rs:
     # 61-81 analog): per-run stage timings next to the per-bin metrics, fed
     # into the per-table rollup by moonlink_spark.observability
-    _t0 = _time.time()
-    out_set = {norm_path(f.file_path) for f in new_files}
-    last_conflict: Exception | None = None
-    for _ in range(5):
-        # pin the commit to the parent read BEFORE the survivor list — an
-        # append CASing in between would otherwise be silently clobbered
-        parent_sid = table.current_snapshot_id()
-        survivors = [
-            f
-            for f in table.data_files()
-            if norm_path(f.file_path) not in victim_set
-            and norm_path(f.file_path) not in out_set
-        ]
-        try:
-            sid = table.commit_snapshot(
-                "compact",
-                survivors + new_files,
-                new_delete_entries,
-                expected_parent_snapshot=parent_sid,
-                summary={
-                    "run_id": run_id,
-                    "removed-files": len(plan.victims),
-                    "added-files": len(new_files),
-                    "added-records": sum(f.record_count for f in new_files),
-                    "surviving-delete-positions": n_surviving_deletes,
-                    "groups": len(plan.groups),
-                },
-            )
-            stage_t["commit_sec"] = round(_time.time() - _t0, 3)
-            with open(os.path.join(lineage_dir, "stage_metrics.json"), "w") as f:
-                json.dump({"op": "compact", "stage_seconds": stage_t}, f)
-            return sid
-        except CommitConflict as e:
-            last_conflict = e
-    raise last_conflict  # type: ignore[misc]
+    with open(os.path.join(lineage_dir, "stage_metrics.json"), "w") as f:
+        json.dump({"op": "compact", "stage_seconds": stage_t}, f)
+    return sid

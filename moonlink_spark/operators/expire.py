@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, functions as F
 
 _LOG = logging.getLogger("moonlink_spark.expire")
 
-from moonlink_spark.catalog.metadata import norm_path
+from moonlink_spark.catalog.metadata import TableMetadata, norm_path
 from moonlink_spark.table import MoonTable
 
 _LIST_BATCH = 200_000  # dirents per listing batch (bounds driver memory)
@@ -66,31 +66,32 @@ def expire_snapshots(table: MoonTable, retain_last: int = 3) -> list[int]:
     other once they fall out of the newest-K window — a later
     publish_snapshot of an expired stage fails cleanly (Iceberg expires
     stale WAP snapshots the same way); tag a stage to pin it."""
-    meta, version = table.catalog.load_pinned()
-    snaps = sorted(meta.snapshots, key=lambda s: s.sequence_number)
-    if len(snaps) <= retain_last:
-        return []
-    keep = snaps[-retain_last:]
-    keep_ids = {s.snapshot_id for s in keep}
-    if meta.current_snapshot_id is not None:
-        keep_ids.add(meta.current_snapshot_id)
-    # tagged snapshots are pinned (Iceberg tag semantics): a tag is an
-    # explicit promise that scan(ref=...) keeps working until drop_tag
-    keep_ids.update(meta.refs.values())
-    # branch heads are pinned WITH their ancestry back to a retained
-    # snapshot: fast_forward_main must still find an unbroken parent chain,
-    # and branch scans read the head's manifests
-    by_id = {s.snapshot_id: s for s in snaps}
-    for head in meta.branches.values():
-        cur = head
-        while cur is not None and cur not in keep_ids:
-            keep_ids.add(cur)
-            s = by_id.get(cur)
-            cur = s.parent_id if s is not None else None
-    expired = [s.snapshot_id for s in snaps if s.snapshot_id not in keep_ids]
-    meta.snapshots = [s for s in snaps if s.snapshot_id in keep_ids]
-    table.catalog.commit(meta, expected_version=version)
-    return expired
+
+    def edit(meta: TableMetadata) -> list[int]:
+        snaps = sorted(meta.snapshots, key=lambda s: s.sequence_number)
+        if len(snaps) <= retain_last:
+            return []
+        keep = snaps[-retain_last:]
+        keep_ids = {s.snapshot_id for s in keep}
+        if meta.current_snapshot_id is not None:
+            keep_ids.add(meta.current_snapshot_id)
+        # tagged snapshots are pinned (Iceberg tag semantics): a tag is an
+        # explicit promise that scan(ref=...) keeps working until drop_tag
+        keep_ids.update(meta.refs.values())
+        # branch heads are pinned WITH their ancestry back to a retained
+        # snapshot: fast_forward_main must still find an unbroken parent
+        # chain, and branch scans read the head's manifests
+        by_id = {s.snapshot_id: s for s in snaps}
+        for head in meta.branches.values():
+            cur = head
+            while cur is not None and cur not in keep_ids:
+                keep_ids.add(cur)
+                s = by_id.get(cur)
+                cur = s.parent_id if s is not None else None
+        meta.snapshots = [s for s in snaps if s.snapshot_id in keep_ids]
+        return [s.snapshot_id for s in snaps if s.snapshot_id not in keep_ids]
+
+    return table.catalog.update(edit, "expire snapshots")
 
 
 def _reachable_df(table: MoonTable) -> DataFrame | None:

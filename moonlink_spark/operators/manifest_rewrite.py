@@ -22,27 +22,28 @@ def rewrite_manifests(
     recompute_stats: bool = False,
     max_entries: int = MANIFEST_MAX_ENTRIES,
 ) -> int:
-    """Rewrite the current snapshot's manifests; returns the new snapshot id."""
-    files = table.data_files()
-    deletes = table.delete_files()
-    if recompute_stats and files:
-        stats_by_path = footer_stats(table.spark, [f.file_path for f in files])
+    """Rewrite the current snapshot's manifests; returns the new snapshot id.
+    A file appended after the footer read keeps the stats it was committed
+    with."""
+    stats_by_path = (
+        footer_stats(table.spark, [f.file_path for f in table.data_files()])
+        if recompute_stats else {}
+    )
+    summary = {
+        "manifest-max-entries": max_entries,
+        "recomputed-stats": bool(recompute_stats),
+    }
+
+    def build(files, deletes):
         for f in files:
             got = stats_by_path.get(f.file_path)
             if got:
                 f.stats = got["stats"]
                 f.record_count = got["record_count"]
                 f.file_size_bytes = got["file_size_bytes"]
-    return table.commit_snapshot(
-        "rewrite-manifests",
-        files,
-        deletes,
-        summary={
-            "manifest-max-entries": max_entries,
-            "data-files": len(files),
-            "recomputed-stats": bool(recompute_stats),
-        },
-        # coalesce: regular commits reuse chunks incrementally; THIS job's
-        # purpose is to fold accumulated small chunks into full-size ones
-        force_rewrite=True,
-    )
+        summary["data-files"] = len(files)
+        return files, deletes
+
+    # coalesce: regular commits reuse chunks incrementally; THIS job's
+    # purpose is to fold accumulated small chunks into full-size ones
+    return table.commit_files("rewrite-manifests", build, summary, force_rewrite=True)

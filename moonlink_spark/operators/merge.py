@@ -287,32 +287,22 @@ def _merge_locked(
     # --- atomic commit ----------------------------------------------------
     # a re-run of a completed run_id rewrites the same file names; exclude
     # them from "existing" or they'd be committed twice (same guard as
-    # compaction's survivor set). The commit REBASES on CommitConflict:
-    # compact/cluster can't race (they take the same lock), but lock-free
-    # appends can — they're purely additive, so re-reading fresh state and
-    # re-committing folds their files into the survivor set (their rows were
-    # not visible at plan time and are correctly left unprobed).
-    from moonlink_spark.catalog.catalog import CommitConflict
-
+    # compaction's survivor set). compact/cluster can't race (they take the
+    # same lock), but lock-free appends can — commit_files rebuilds the list
+    # on top of them (their rows were not visible at plan time and are
+    # correctly left unprobed).
     out_set = {norm_path(f.file_path) for f in new_data_files}
     out_del = {norm_path(f.file_path) for f in new_delete_files}
     planned_paths = {norm_path(f.file_path) for f in all_files}
-    last_conflict: Exception | None = None
-    for _ in range(5):
-        # read the parent BEFORE the file lists and pin the commit to it:
-        # without the pin, an append committing between this read and the
-        # CAS would be silently clobbered (our complete list lacks its
-        # files but the version CAS still succeeds)
-        parent_sid = table.current_snapshot_id()
-        data_files = [
-            f for f in table.data_files() if norm_path(f.file_path) not in out_set
-        ]
+
+    def build(data, deletes):
+        data = [f for f in data if norm_path(f.file_path) not in out_set]
         # rebase safety: folding a concurrent append in unprobed is only
         # sound when its key range can't intersect the batch's — otherwise
         # fail retryable instead of committing a duplicate-key state
         if n_final > 0:
             foreign = _overlapping_foreign_appends(
-                data_files, planned_paths, out_set, key, head["klo"], head["khi"]
+                data, planned_paths, out_set, key, head["klo"], head["khi"]
             )
             if foreign:
                 raise ConcurrentAppendOverlap(
@@ -321,35 +311,27 @@ def _merge_locked(
                     f"[{head['klo']!r}, {head['khi']!r}] — re-run the merge "
                     f"(same run_id) to probe them"
                 )
-        prior_deletes = [
-            d for d in table.delete_files() if norm_path(d.file_path) not in out_del
-        ]
-        for f in data_files:
+        for f in data:
             extra = per_file_deletes.get(norm_path(f.file_path), 0)
             if extra:
                 f.deleted_count += int(extra)
-        try:
-            sid = table.commit_snapshot(
-                "merge",
-                data_files + new_data_files,
-                prior_deletes + new_delete_files,
-                summary={
-                    "run_id": run_id,
-                    "matched-keys": n_matched,
-                    "added-records": n_inserts,
-                    "added-files": len(new_data_files),
-                    "added-delete-files": len(new_delete_files),
-                    "flush-lsn": flush_lsn,
-                    "probed-files": len(probe_files),
-                    "total-files": len(all_files),
-                },
-                expected_parent_snapshot=parent_sid,
-            )
-            break
-        except CommitConflict as e:
-            last_conflict = e
-    else:
-        raise last_conflict  # type: ignore[misc]
+        prior_deletes = [d for d in deletes if norm_path(d.file_path) not in out_del]
+        return data + new_data_files, prior_deletes + new_delete_files
+
+    sid = table.commit_files(
+        "merge",
+        build,
+        summary={
+            "run_id": run_id,
+            "matched-keys": n_matched,
+            "added-records": n_inserts,
+            "added-files": len(new_data_files),
+            "added-delete-files": len(new_delete_files),
+            "flush-lsn": flush_lsn,
+            "probed-files": len(probe_files),
+            "total-files": len(all_files),
+        },
+    )
     stage_t["commit_sec"] = round(_time.time() - _t0, 3)
     # stage split in lineage (same observability as cluster's metrics.json):
     # lww_head = LWW collapse + one-action scalars, probe = position

@@ -47,7 +47,11 @@ def rollback_to(
 
     Raises KeyError if the target snapshot is not retained (expired), and
     CommitConflict if a concurrent commit lands in the window (see module
-    docstring — never silently discards a racing append)."""
+    docstring — never silently discards a racing append). This is the one
+    complete-list commit that does not go through MoonTable.commit_files:
+    its list is the target snapshot's, not one built on the current state,
+    so a retry would publish the same list over the racing commit and drop
+    it — one pinned attempt, and the operator decides."""
     run_id = run_id or uuid.uuid4().hex[:12]
     with table.maintenance_lock("rollback", run_id, wait_seconds=lock_wait_seconds):
         try:

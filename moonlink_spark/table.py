@@ -23,7 +23,7 @@ _LOG = logging.getLogger("moonlink_spark.table")
 from pyspark.sql import DataFrame, SparkSession, functions as F
 import pyspark.sql.types as T
 
-from moonlink_spark.catalog.catalog import FileCatalog
+from moonlink_spark.catalog.catalog import CommitConflict, FileCatalog
 from moonlink_spark.catalog.manifests import (
     read_data_manifests,
     read_delete_manifests,
@@ -42,7 +42,7 @@ from moonlink_spark.catalog.metadata import (
     norm_path,
     schema_paths,
 )
-from moonlink_spark.plans.physical import hash_bin, write_datafiles
+from moonlink_spark.plans.physical import exclude_file_paths, hash_bin, write_datafiles
 
 # broadcast a scan's deletion-vector bitmap rows up to this decoded size
 _BROADCAST_DELETES_BYTES = 256 * 1024 * 1024
@@ -234,13 +234,13 @@ class MoonTable:
 
         *expected_parent_snapshot*: when given, the commit fails with
         CommitConflict if the table's current snapshot is no longer that one.
-        Jobs that compute a COMPLETE file list from a snapshot (merge,
-        compact, cluster) must pass the snapshot they planned against —
-        otherwise a concurrent commit in the plan→commit window would be
-        silently clobbered (its files dropped from the published list) even
-        though the version CAS itself succeeds.
+        This is one attempt, never retried here: a complete file list built
+        from an older snapshot would silently drop the files of a commit
+        that landed since, even though the version CAS itself succeeds.
+        Writers that republish the current file list go through
+        commit_files, which builds the list from the pinned metadata, passes
+        its snapshot here and retries a lost race on fresh state.
         """
-        from moonlink_spark.catalog.catalog import CommitConflict
         from moonlink_spark.catalog.manifests import incremental_reuse
 
         meta, version = self.catalog.load_pinned()
@@ -414,9 +414,9 @@ class MoonTable:
             )
             self.advance_branch(branch, sid)
             return sid
-        return self._commit_additive(
+        return self.commit_files(
             "append",
-            new_files,
+            lambda data, deletes: (data + new_files, deletes),
             summary={
                 "added-files": len(new_files),
                 "added-records": sum(f.record_count for f in new_files),
@@ -427,36 +427,35 @@ class MoonTable:
             stage_only=stage_only,
         )
 
-    def _commit_additive(
-        self, operation: str, new_files: list[DataFile], summary: dict,
-        max_retries: int = 5, stage_only: bool = False,
+    def commit_files(
+        self, operation: str, build, summary: dict,
+        force_rewrite: bool = False, stage_only: bool = False,
     ) -> int:
-        """Commit purely-additive file sets with CAS rebase-retry: appends
-        never invalidate a concurrent commit (they only add files), so on a
-        CommitConflict the loser re-reads fresh state and re-commits its new
-        files on top — the etag-retry semantics of file_catalog.rs:639-665.
-        Jobs that REMOVE files (merge/compact/cluster) must not use this;
-        they re-plan under the maintenance lock instead."""
-        from moonlink_spark.catalog.catalog import CommitConflict
+        """Commit the complete file state *build(data_files, delete_files)*
+        returns, given the current snapshot's lists. Both are read from the
+        metadata FileCatalog.update pinned, and commit_snapshot checks its
+        parent against the same snapshot: a commit landing in between loses
+        the race, and the next attempt rebuilds the lists on top of it, so
+        no published file is ever dropped (the etag-retry semantics of
+        file_catalog.rs:639-665). *build* runs once per attempt and may
+        raise to refuse the commit."""
 
-        last: Exception | None = None
-        for _ in range(max_retries):
-            try:
-                # parent pinned BEFORE reading the file lists: a commit
-                # landing in between must conflict (and rebase), never be
-                # silently overwritten by our complete-list publish
-                parent_sid = self.current_snapshot_id()
-                return self.commit_snapshot(
-                    operation,
-                    self.data_files() + new_files,
-                    self.delete_files(),
-                    summary=summary,
-                    expected_parent_snapshot=parent_sid,
-                    stage_only=stage_only,
-                )
-            except CommitConflict as e:
-                last = e
-        raise last  # type: ignore[misc]
+        def files(meta: TableMetadata) -> tuple[list[DataFile], list[DeleteFile]]:
+            snap = meta.current_snapshot()
+            if snap is None:
+                return build([], [])
+            return build(
+                read_data_manifests(self.catalog.metadata_dir, snap.manifests),
+                read_delete_manifests(self.catalog.metadata_dir, snap.delete_manifests),
+            )
+
+        def publish(meta: TableMetadata, built) -> int:
+            return self.commit_snapshot(
+                operation, *built, summary=summary, force_rewrite=force_rewrite,
+                expected_parent_snapshot=meta.current_snapshot_id, stage_only=stage_only,
+            )
+
+        return self.catalog.update(files, f"commit {operation}", publish)
 
     def add_files(self, paths: list[str], run_id: str | None = None) -> int:
         """Register EXISTING parquet files as-is — no read, no rewrite, no
@@ -483,9 +482,9 @@ class MoonTable:
             )
             for p in norm
         ]
-        return self._commit_additive(
+        return self.commit_files(
             "add-files",
-            new_files,
+            lambda data, deletes: (data + new_files, deletes),
             summary={
                 "run_id": run_id,
                 "added-files": len(new_files),
@@ -635,44 +634,31 @@ class MoonTable:
         until drop_tag. Metadata-only CAS commit; re-creating an existing
         tag at the SAME snapshot is a no-op, at a different one an error
         (tags never move — that's what rollback/branching would be for)."""
-        from moonlink_spark.catalog.catalog import CommitConflict
 
-        for _ in range(5):
-            meta, version = self.catalog.load_pinned()
-            sid = self.current_snapshot_id() if snapshot_id is None else snapshot_id
+        def edit(meta: TableMetadata) -> int:
+            sid = meta.current_snapshot_id if snapshot_id is None else snapshot_id
             if sid is None:
                 raise ValueError("cannot tag an empty table (no snapshot)")
             meta.snapshot_by_id(sid)  # raises KeyError if expired
-            if name in meta.refs:
-                if meta.refs[name] == sid:
-                    return sid
+            if name in meta.refs and meta.refs[name] != sid:
                 raise ValueError(
                     f"tag {name!r} already points at snapshot {meta.refs[name]} "
                     f"(tags are immutable; drop it first)"
                 )
             meta.refs[name] = sid
-            try:
-                self.catalog.commit(meta, expected_version=version)
-                return sid
-            except CommitConflict:
-                continue  # racing commit bumped the version — re-read, retry
-        raise CommitConflict(f"could not commit tag {name!r} after retries")
+            return sid
+
+        return self.catalog.update(edit, f"commit tag {name!r}")
 
     def drop_tag(self, name: str) -> None:
         """Remove a tag; its snapshot becomes expirable again."""
-        from moonlink_spark.catalog.catalog import CommitConflict
 
-        for _ in range(5):
-            meta, version = self.catalog.load_pinned()
+        def edit(meta: TableMetadata) -> None:
             if name not in meta.refs:
                 raise KeyError(f"tag {name!r} not found")
             del meta.refs[name]
-            try:
-                self.catalog.commit(meta, expected_version=version)
-                return
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"could not drop tag {name!r} after retries")
+
+        self.catalog.update(edit, f"drop tag {name!r}")
 
     def refs(self) -> dict[str, int]:
         """Current tag name -> snapshot id mapping."""
@@ -684,10 +670,8 @@ class MoonTable:
         Iceberg branch semantics. Writers advance it fast-forward-only via
         append(branch=...) / advance_branch; main's pointer never moves.
         Branch heads and their ancestry are exempt from expiry."""
-        from moonlink_spark.catalog.catalog import CommitConflict
 
-        for _ in range(5):
-            meta, version = self.catalog.load_pinned()
+        def edit(meta: TableMetadata) -> int:
             sid = meta.current_snapshot_id if snapshot_id is None else snapshot_id
             if sid is None:
                 raise ValueError("cannot branch an empty table (no snapshot)")
@@ -697,28 +681,19 @@ class MoonTable:
             if name in meta.refs:
                 raise ValueError(f"{name!r} is a tag; tags and branches share a namespace")
             meta.branches[name] = sid
-            try:
-                self.catalog.commit(meta, expected_version=version)
-                return sid
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"could not create branch {name!r} after retries")
+            return sid
+
+        return self.catalog.update(edit, f"create branch {name!r}")
 
     def drop_branch(self, name: str) -> None:
         """Remove a branch; its unreachable snapshots become expirable."""
-        from moonlink_spark.catalog.catalog import CommitConflict
 
-        for _ in range(5):
-            meta, version = self.catalog.load_pinned()
+        def edit(meta: TableMetadata) -> None:
             if name not in meta.branches:
                 raise KeyError(f"branch {name!r} not found")
             del meta.branches[name]
-            try:
-                self.catalog.commit(meta, expected_version=version)
-                return
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"could not drop branch {name!r} after retries")
+
+        self.catalog.update(edit, f"drop branch {name!r}")
 
     def branches(self) -> dict[str, int]:
         """Current branch name -> head snapshot id mapping."""
@@ -740,28 +715,21 @@ class MoonTable:
         writer that advanced the branch first makes this fail with
         CommitConflict (retry by re-staging against the new head), never a
         silent overwrite of its commits."""
-        from moonlink_spark.catalog.catalog import CommitConflict
 
-        for _ in range(5):
-            meta, version = self.catalog.load_pinned()
+        def edit(meta: TableMetadata) -> int:
             if name not in meta.branches:
                 raise KeyError(f"branch {name!r} not found")
             head = meta.branches[name]
             meta.snapshot_by_id(snapshot_id)  # must exist
-            if snapshot_id == head:
-                return head
             if not self._is_ancestor(meta, head, snapshot_id):
                 raise CommitConflict(
                     f"branch {name!r} head {head} is not an ancestor of "
                     f"{snapshot_id} — not a fast-forward (concurrent writer?)"
                 )
             meta.branches[name] = snapshot_id
-            try:
-                self.catalog.commit(meta, expected_version=version)
-                return snapshot_id
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"could not advance branch {name!r} after retries")
+            return snapshot_id
+
+        return self.catalog.update(edit, f"advance branch {name!r}")
 
     def fast_forward_main(self, branch: str) -> int:
         """Publish a branch: fast-forward the table's current pointer to the
@@ -769,16 +737,12 @@ class MoonTable:
         main diverged and a merge, not a publish, is required). The branch
         snapshots become visible history: their 'staged' markers are
         stripped so read-at-LSN and the changelog walk them."""
-        from moonlink_spark.catalog.catalog import CommitConflict
 
-        for _ in range(5):
-            meta, version = self.catalog.load_pinned()
+        def edit(meta: TableMetadata) -> int:
             if branch not in meta.branches:
                 raise KeyError(f"branch {branch!r} not found")
             head = meta.branches[branch]
             cur = meta.current_snapshot_id
-            if cur == head:
-                return head
             if cur is not None and not self._is_ancestor(meta, cur, head):
                 raise CommitConflict(
                     f"current snapshot {cur} is not an ancestor of branch "
@@ -790,12 +754,9 @@ class MoonTable:
                 by_id[walk].summary.pop("staged", None)
                 walk = by_id[walk].parent_id
             meta.current_snapshot_id = head
-            try:
-                self.catalog.commit(meta, expected_version=version)
-                return head
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"could not fast-forward to branch {branch!r} after retries")
+            return head
+
+        return self.catalog.update(edit, f"fast-forward to branch {branch!r}")
 
     # ------------------------------------------------ write-audit-publish
     def publish_snapshot(self, snapshot_id: int) -> int:
@@ -805,10 +766,8 @@ class MoonTable:
         must still be current; otherwise raises CommitConflict and the
         caller re-stages against fresh state (publishing anyway would drop
         the intervening commits' files from the published list)."""
-        from moonlink_spark.catalog.catalog import CommitConflict
 
-        for _ in range(5):
-            meta, version = self.catalog.load_pinned()
+        def edit(meta: TableMetadata) -> int:
             snap = meta.snapshot_by_id(snapshot_id)
             if meta.current_snapshot_id == snapshot_id:
                 return snapshot_id  # already published
@@ -823,22 +782,17 @@ class MoonTable:
             # it now that this snapshot is becoming visible history
             snap.summary.pop("staged", None)
             meta.current_snapshot_id = snapshot_id
-            try:
-                self.catalog.commit(meta, expected_version=version)
-                return snapshot_id
-            except CommitConflict:
-                continue  # version race only; re-validate and retry
-        raise CommitConflict(f"could not publish snapshot {snapshot_id} after retries")
+            return snapshot_id
+
+        return self.catalog.update(edit, f"publish snapshot {snapshot_id}")
 
     def discard_staged(self, snapshot_id: int) -> None:
         """Drop an UNPUBLISHED staged snapshot (audit failed). Its files
         become unreachable and the orphan sweep reclaims them. Refuses to
         touch the current snapshot or any snapshot with descendants."""
-        from moonlink_spark.catalog.catalog import CommitConflict
 
-        for _ in range(5):
-            meta, version = self.catalog.load_pinned()
-            snap = meta.snapshot_by_id(snapshot_id)  # raises if unknown
+        def edit(meta: TableMetadata) -> None:
+            meta.snapshot_by_id(snapshot_id)  # raises if unknown
             if meta.current_snapshot_id == snapshot_id:
                 raise ValueError(f"snapshot {snapshot_id} is published (current) — not staged")
             children = [s.snapshot_id for s in meta.snapshots if s.parent_id == snapshot_id]
@@ -848,14 +802,9 @@ class MoonTable:
                 )
             if snapshot_id in meta.refs.values():
                 raise ValueError(f"snapshot {snapshot_id} is tagged — drop the tag first")
-            assert snap is not None
             meta.snapshots = [s for s in meta.snapshots if s.snapshot_id != snapshot_id]
-            try:
-                self.catalog.commit(meta, expected_version=version)
-                return
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"could not discard snapshot {snapshot_id} after retries")
+
+        self.catalog.update(edit, f"discard snapshot {snapshot_id}")
 
     def scan(
         self,
@@ -1161,6 +1110,25 @@ class MoonTable:
         serial tail; binning by hash(file_path) keeps each target file's
         bitmap whole while spreading the write."""
         return max(1, n_delete_rows // DV_REWRITE_ROWS_PER_BIN + 1)
+
+    def carry_over_deletes(self, victims: set[str], run_id: str) -> tuple[list[DeleteFile], int]:
+        """The DV carry-over of a rewrite that removes the data files
+        *victims* (normalized paths): the table's delete rows that target a
+        surviving file, rewritten as fresh DV files under *run_id*-dv, and
+        their count. Victims' deletes die with the victims (the rewrite
+        applied them inline). When every data file is a victim no survivor
+        can carry a delete, so no job runs (lock-free appends are DV-free by
+        construction: only the lock-holding merge writes DVs)."""
+        delete_files = self.delete_files()
+        if not delete_files or {norm_path(f.file_path) for f in self.data_files()} <= victims:
+            return [], 0
+        surviving = exclude_file_paths(self.read_delete_rows(delete_files), victims)
+        n = surviving.count()
+        if n == 0:
+            return [], 0
+        return self.write_position_deletes(
+            surviving, run_id=run_id + "-dv", num_bins=self.dv_rewrite_bins(n)
+        ), n
 
     def write_position_deletes(
         self, deletes_df: DataFrame, run_id: str, num_bins: int = 1,

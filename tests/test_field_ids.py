@@ -59,6 +59,24 @@ def test_added_column_reads_null_on_old_files(spark, tmp_table_root):
     assert got.filter(F.col("score").isNotNull()).count() == 0
 
 
+
+def test_compaction_does_not_resurrect_a_readded_column(spark, tmp_table_root):
+    """The compaction rewrite reads through the table's field-id projection:
+    a force_full rewrite of pre-drop files must write NULL for the re-added
+    column, not copy the stale physical values into fresh files."""
+    from moonlink_spark.operators.compaction import CompactionConfig, compact
+
+    table = create_images_table(spark, tmp_table_root, 300, seed=42)
+    alter_table(table, drop_columns=["fmt"])
+    alter_table(table, add_columns=[T.StructField("fmt", T.StringType(), True)])
+    assert table.scan().filter(F.col("fmt").isNotNull()).count() == 0
+
+    assert compact(table, CompactionConfig(mode="force_full"), run_id="c1") is not None
+    got = table.scan(columns=["image_id", "fmt"])
+    assert got.count() == 300
+    assert got.filter(F.col("fmt").isNotNull()).count() == 0
+
+
 NESTED_SCHEMA = T.StructType(
     [
         T.StructField("id", T.StringType(), False),

@@ -54,6 +54,20 @@ def test_compaction_resume_skips_done_bins(spark, tmp_table_root):
     assert _rows(table) == expected
 
 
+
+def test_compaction_resume_of_a_stale_plan_reinserts_nothing(spark, tmp_table_root):
+    """A run stopped after planning resumes after another run rewrote the
+    same victims: it must not read the no-longer-live victims again."""
+    table = create_images_table(spark, tmp_table_root, 300, seed=42)
+    expected = _rows(table)
+    cfg = CompactionConfig(mode="force_full")
+    assert plan_compaction(table, cfg, run_id="r1") is not None
+    assert compact(table, cfg, run_id="r2") is not None
+
+    compact(table, cfg, run_id="r1")
+    assert _rows(table) == expected
+
+
 def test_cluster_resume_deterministic(spark, tmp_table_root):
     table = create_images_table(spark, tmp_table_root, N, seed=42)
     merge_into(table, generate_changes_df(spark, N, 200, seed=42), run_id="m1")
