@@ -85,6 +85,10 @@ class DeleteFile:
     (file_path, pos) row form. A scan never expands it to positions: it
     joins each row to its file's bitmap rows and tests the row's bit
     (``MoonTable.join_deletes``). Readers reject any other format.
+    Every DV file is written by ``MoonTable.write_position_deletes`` from
+    bitmap rows folded on the driver: a merge's, a rewrite's carry-over
+    (which ORs a surviving target's rows into one) and the Iceberg
+    importer's.
     """
 
     file_path: str

@@ -16,8 +16,9 @@ and get a fully-maintainable MoonTable:
     are adopted into the dotted-path ledger, so later schema evolution
     stays consistent with the source table's ids.
 
-Scale: the only data-touching work is the footer-stats job and the
-delete-file read → bitmap write, both distributed; metadata work is
+Scale: the footer-stats job and the delete-file read are distributed; the
+deletes' (file_path, pos) rows are collected once and folded into bitmaps
+on the driver (see import_iceberg for the bound); metadata work is
 O(files/25k) driver-side like any Iceberg planner.
 """
 
@@ -40,7 +41,7 @@ from moonlink_spark.iceberg.reader import (
     partition_pruner_fields,
     resolve_schema,
 )
-from moonlink_spark.table import MoonTable
+from moonlink_spark.table import MoonTable, fold_live_positions
 
 
 from moonlink_spark.iceberg.spec import spark_type as _spark_type
@@ -193,7 +194,12 @@ def import_iceberg(
     *dest_root* (metadata only — data files stay where they are). Returns
     the loaded MoonTable; its scan equals the Iceberg scan of the same
     snapshot. *key_columns* defaults to the first schema column (needed
-    for MERGE; scans work regardless)."""
+    for MERGE; scans work regardless).
+
+    The source's position, puffin and equality deletes are collected to
+    the driver once as (file_path, pos) rows, folded into one bitmap row
+    per target file and written as one DV file: the driver holds imported
+    positions × (path + 8) bytes."""
     meta = load_iceberg_metadata(src_root)
     check_supported(meta, src_root)
     sid = snapshot_id if snapshot_id is not None else meta["current-snapshot-id"]
@@ -295,18 +301,17 @@ def import_iceberg(
         dels = parts[0]
         for p in parts[1:]:
             dels = dels.unionByName(p)
-        dels = dels.select(
+        positions = dels.select(
             F.regexp_replace(F.col("file_path"), "^file:(//)?", "").alias("file_path"),
             F.col("pos").cast("long"),
+        ).toArrow()
+        bitmaps = fold_live_positions(positions)
+        delete_files = (
+            [t.write_position_deletes(bitmaps, "iceberg-import-dv")] if bitmaps.num_rows else []
         )
-        n = dels.count()
-        delete_files = t.write_position_deletes(
-            dels, run_id="iceberg-import-dv", num_bins=t.dv_rewrite_bins(n)
-        )
-        per_file = {
-            r["file_path"]: r["cnt"]
-            for r in dels.groupBy("file_path").agg(F.count("*").alias("cnt")).collect()
-        }
+        per_file = dict(zip(
+            bitmaps.column("file_path").to_pylist(), bitmaps.column("n_positions").to_pylist()
+        ))
 
         def build(data, deletes):
             for f in data:
@@ -320,7 +325,7 @@ def import_iceberg(
             build,
             summary={
                 "imported-from": os.path.abspath(src_root),
-                "imported-position-deletes": n,
+                "imported-position-deletes": sum(per_file.values()),
                 "imported-delete-files": len(delete_paths) + len(puffin_entries),
             },
         )

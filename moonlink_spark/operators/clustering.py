@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from moonlink_spark.catalog.metadata import COMPACT_TARGET_BYTES, norm_path
 from moonlink_spark.functions.zorder import DEFAULT_BITS, curve_key
-from moonlink_spark.plans.physical import read_bin_records, write_datafiles
+from moonlink_spark.plans.physical import completed_outputs, read_bin_records, write_datafiles
 from moonlink_spark.table import MoonTable
 
 # sampled keys for boundary estimation: ~500 keys/bin at 128 bins — plenty
@@ -523,46 +523,51 @@ def _cluster_locked(
     key_col = table.key_columns[0] if table.key_columns else by[0]
     num_bins = int(plan.offsets[-1])
 
-    # resume: bins already written (lineage record present, file still
-    # there) are filtered out before the shuffle, so a resumed run re-reads
-    # only the missing bins' rows
-    done = read_bin_records(lineage_dir)
-
-    # read ONLY the plan's victims (== every file in full scope); scan()
-    # still applies the table's deletion vectors, so victim rows suppressed
-    # by a DV are dropped inline and victims' delete entries die with them
     victim_set = set(plan.victims)
-    victim_files = [f for f in table.data_files() if norm_path(f.file_path) in victim_set]
-    df = assign_keys_and_bins(
-        table.scan(files=victim_files), plan, key_col=key_col, bits=bits
-    )
-    if done:
-        df = df.filter(~F.col("_bin").isin(sorted(done)))
+    live = {norm_path(f.file_path): f for f in table.data_files()}
+    if not victim_set <= live.keys():
+        # a resumed plan with a victim that is no longer live: either its
+        # earlier attempt committed (re-commit those outputs) or another
+        # run has rewritten its victims since (stale: commit nothing)
+        new_files = completed_outputs(lineage_dir, live)
+        if new_files is None:
+            return None
+    else:
+        # resume: bins already written (lineage record present, file still
+        # there) are filtered out before the shuffle, so a resumed run
+        # re-reads only the missing bins' rows
+        done = read_bin_records(lineage_dir)
 
-    t0 = time.time()
-    new_files = write_datafiles(
-        df,
-        data_dir=table.catalog.data_dir,
-        run_id=run_id,
-        num_bins=num_bins,
-        compression="zstd",
-        compression_level=4,
-        sort_within=["_zkey"],
-        lineage_dir=lineage_dir,
-    )
-    stage_t["rewrite_sec"] = round(time.time() - t0, 3)
+        # read ONLY the plan's victims (== every file in full scope); scan()
+        # still applies the table's deletion vectors, so victim rows
+        # suppressed by a DV are dropped inline and victims' delete entries
+        # die with them
+        victim_files = [f for p, f in live.items() if p in victim_set]
+        df = assign_keys_and_bins(
+            table.scan(files=victim_files), plan, key_col=key_col, bits=bits
+        )
+        if done:
+            df = df.filter(~F.col("_bin").isin(sorted(done)))
+
+        t0 = time.time()
+        new_files = write_datafiles(
+            df,
+            data_dir=table.catalog.data_dir,
+            run_id=run_id,
+            num_bins=num_bins,
+            compression="zstd",
+            compression_level=4,
+            sort_within=["_zkey"],
+            lineage_dir=lineage_dir,
+        )
+        stage_t["rewrite_sec"] = round(time.time() - t0, 3)
+        # skipped bins are part of this run's output
+        have = {norm_path(f.file_path) for f in new_files}
+        new_files += [done[b] for b in sorted(done) if norm_path(done[b].file_path) not in have]
     t0 = time.time()
     for f in new_files:
         f.cluster_by = plan.curve
-
-    # skipped bins are part of this run's output
-    have = {norm_path(f.file_path) for f in new_files}
-    for b in sorted(done):
-        if norm_path(done[b].file_path) not in have:
-            done[b].cluster_by = plan.curve
-            new_files.append(done[b])
-
-    in_files = [f for f in table.data_files() if norm_path(f.file_path) in victim_set]
+    in_files = [f for p, f in live.items() if p in victim_set]
     stage_t["reconstruct_sec"] = round(time.time() - t0, 3)
 
     # surviving deletes: victims' deletes were applied inline by the scan

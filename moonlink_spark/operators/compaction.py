@@ -10,10 +10,10 @@ Re-creates moonlink's compaction job family (SURVEY.md §2 rows 18-20):
   snapshot_maintenance.rs:66-67).
 - EXECUTION mirrors compactor.rs:180-306: stream-read each victim, apply its
   deletion vector inline (bitmap anti-join), concatenate into ~512MiB zstd-4 files
-  (parquet_utils.rs:16-20). New files start DV-free; surviving deletes for
-  non-victim files are rewritten into fresh position-delete files (the DV
-  carry-over of iceberg_table_syncer.rs:315-350 without the remap, because
-  victims' deletes die with the victims).
+  (parquet_utils.rs:16-20). New files start DV-free; the bitmap rows of
+  non-victim files are OR'd per target on the driver and written as one
+  fresh DV file (the DV carry-over of iceberg_table_syncer.rs:315-350
+  without the remap, because victims' deletes die with the victims).
 
 Spark-first scale design: compaction is ONE job with ONE exchange. The
 planner greedily packs victim files into ~target-size groups (like
@@ -24,7 +24,9 @@ bytes cross the network exactly once; group count scales to 10^5 without
 per-group driver job submissions.
 
 Every group writes a per-partition lineage record (files-in/out, rows,
-bytes); a killed run resumes by skipping groups whose lineage exists.
+bytes); a killed run resumes by skipping groups whose lineage exists. A
+resumed plan whose victims another run has rewritten since commits
+nothing (``completed_outputs``).
 """
 
 from __future__ import annotations
@@ -38,7 +40,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import functions as F
 
 from moonlink_spark.catalog.metadata import COMPACT_TARGET_BYTES, DataFile, norm_path
-from moonlink_spark.plans.physical import read_bin_record, write_datafiles
+from moonlink_spark.plans.physical import completed_outputs, read_bin_record, write_datafiles
 from moonlink_spark.table import MoonTable
 
 
@@ -202,35 +204,37 @@ def _compact_locked(
     # scheme (same base/nb arithmetic, same xxhash64(_fp,_pos) split).
     resumed: list[DataFile] = []
     read_groups: list[tuple[int, list[str], int]] = []  # (base, paths, nb)
-    for gi, group in enumerate(plan.groups):
-        base = gi * _SPLIT_STRIDE
-        # a group bigger than target (one OVERSIZED victim — bin-packing
-        # never packs past target otherwise) is SPLIT across nb parallel
-        # writers: without this, a 10 GB foreign file becomes one serial
-        # write task — the tail that caps ForceFull's parallelism
-        group_live = sum(file_by_path[p].live_bytes for p in group if p in file_by_path)
-        nb = max(1, min(_SPLIT_STRIDE - 1, -(-group_live // max(1, config.target_bytes))))
-        if nb == 1:
-            # resume fast-path: an unsplit group whose bin a previous attempt
-            # fully wrote skips the read entirely (split groups rely on
-            # write_datafiles' per-bin skip instead)
-            prior = read_bin_record(lineage_dir, base)
-            if prior is not None:
-                resumed.append(prior)
-                continue
-        read_groups.append((base, group, nb))
+    if not victim_set <= file_by_path.keys():
+        # a resumed plan with a victim that is no longer live: either its
+        # earlier attempt committed (re-commit those outputs) or another
+        # run has rewritten its victims since (stale: commit nothing)
+        resumed = completed_outputs(lineage_dir, file_by_path)
+        if resumed is None:
+            return None
+    else:
+        for gi, group in enumerate(plan.groups):
+            base = gi * _SPLIT_STRIDE
+            # a group bigger than target (one OVERSIZED victim — bin-packing
+            # never packs past target otherwise) is SPLIT across nb parallel
+            # writers: without this, a 10 GB foreign file becomes one serial
+            # write task — the tail that caps ForceFull's parallelism
+            group_live = sum(file_by_path[p].live_bytes for p in group)
+            nb = max(1, min(_SPLIT_STRIDE - 1, -(-group_live // max(1, config.target_bytes))))
+            if nb == 1:
+                # resume fast-path: an unsplit group whose bin a previous attempt
+                # fully wrote skips the read entirely (split groups rely on
+                # write_datafiles' per-bin skip instead)
+                prior = read_bin_record(lineage_dir, base)
+                if prior is not None:
+                    resumed.append(prior)
+                    continue
+            read_groups.append((base, group, nb))
 
-    # a resumed plan may name a victim that is no longer live (another run
-    # rewrote it since the plan was made): its rows live on in that run's
-    # output, so only the plan's live victims are read — and a plan with
-    # none left and no bin of its own written has nothing to do
-    live = [file_by_path[p] for _, group, _ in read_groups for p in group if p in file_by_path]
-    if not live and not resumed:
-        return None
     _t0 = _time.time()
     new_files: list[DataFile] = list(resumed)
     total_bins = sum(nb for _, _, nb in read_groups)
-    if live:
+    if read_groups:
+        live = [file_by_path[p] for _, group, _ in read_groups for p in group]
         df = table.join_deletes(table._read_data(live, with_position=True), live, delete_files)
         bin_map = spark.createDataFrame(
             [(p, base, nb) for base, group, nb in read_groups for p in group],

@@ -21,9 +21,10 @@ of each batch key plus any dead versions of those keys that no rewrite has
 removed yet: its size is bounded by the batch and the batch keys' history,
 never by the table. The driver drops the positions the snapshot's deletion
 vectors already set (liveness), folds the rest into one bitmap row per
-target file and writes them as one position-delete file (the puffin-DV
-analog). Surviving change rows become fresh data files. One atomic snapshot
-commit publishes both.
+target file (fold_live_positions) and writes them as one deletion-vector
+file (the puffin-DV analog) through MoonTable.write_position_deletes, the
+writer every DV file goes through. Surviving change rows become fresh data
+files. One atomic snapshot commit publishes both.
 
 At 100 TB scale: the target-side scan is embarrassingly parallel and
 column-pruned; the only shuffle is on the (small) change batch, none on the
@@ -241,7 +242,7 @@ def _merge_locked(
             prior = table.read_bitmap_rows(table.delete_files(planned_sid), touched)
             bitmaps = fold_live_positions(positions, prior)
             if bitmaps.num_rows:
-                new_delete_files = [table.write_bitmap_file(bitmaps, run_id)]
+                new_delete_files = [table.write_position_deletes(bitmaps, run_id)]
             per_file_deletes = dict(zip(
                 map(norm_path, bitmaps.column("file_path").to_pylist()),
                 bitmaps.column("n_positions").to_pylist(),

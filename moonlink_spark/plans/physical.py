@@ -10,7 +10,7 @@ file, and the per-bin resume record.
   in Arrow buffers from the shuffle fetch to the parquet encoder.
 - ``write_datafiles`` picks the file from an explicit integer ``_bin``
   assigned by the *planner* (bin-packing for compaction, zkey range for
-  clustering, hash for inserts and deletes); ``repartition(num_bins,
+  clustering, hash for merge inserts); ``repartition(num_bins,
   "_bin")`` sends each bin to exactly one reduce task, so the file name
   ``{run_id}-b{bin:05d}`` derives from the bin id and a killed run resumes
   at bin granularity. ``write_datafiles_rolling`` rolls each input
@@ -20,7 +20,9 @@ file, and the per-bin resume record.
   a re-run under the same run_id skips the bins ``read_bin_record`` can
   reuse (reference intent: WAL replay, wal.rs:1117-1334). A record whose
   file is gone (an orphan sweep removed a killed run's uncommitted output)
-  is not reusable, so that bin is written again.
+  is not reusable, so that bin is written again. A resumed plan whose
+  victims another run has rewritten since reuses no bin
+  (``completed_outputs``).
 
 On a real cluster ``data_dir`` is a shared filesystem / object store mount;
 tasks write directly to it exactly as moonlink's iceberg syncer uploads data
@@ -40,7 +42,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-from moonlink_spark.catalog.metadata import DataFile
+from moonlink_spark.catalog.metadata import DataFile, norm_path
 
 LINEAGE_SCHEMA = (
     "bin int, file_path string, record_count long, file_size_bytes long, stats string"
@@ -127,6 +129,21 @@ def read_bin_records(lineage_dir: str) -> dict[int, DataFile]:
     return out
 
 
+def completed_outputs(lineage_dir: str, live: dict[str, DataFile]) -> list[DataFile] | None:
+    """For a resumed plan with a victim that is no longer live (*live*:
+    the current data files by normalized path): the live entries of every
+    bin its earlier attempt recorded when all of them are live (that
+    attempt committed; re-committing them changes nothing), else None. The
+    plan is then stale: another run rewrote its victims, and its recorded
+    bins hold rows that run's output already holds, so nothing may be
+    committed and no bin reused."""
+    recs = read_bin_records(lineage_dir)
+    paths = [norm_path(recs[b].file_path) for b in sorted(recs)]
+    if paths and all(p in live for p in paths):
+        return [live[p] for p in paths]
+    return None
+
+
 class _OpenFile:
     """One parquet file a write task is streaming: rows go to
     ``<path><tmp_suffix>`` and the per-column stats accumulate as they pass."""
@@ -209,7 +226,6 @@ def _write(
     compression_level: int | None,
     rows_per_file: int | None = None,
     lineage_dir: str | None = None,
-    file_prefix: str = "",
 ) -> list[DataFile]:
     """The writer core. With *rows_per_file* None, *df* is partitioned by its
     int ``_bin`` column and every bin becomes one file; otherwise every
@@ -277,9 +293,9 @@ def _write(
         def _open(b: int) -> _OpenFile:
             nonlocal seq
             if binned:
-                name = f"{file_prefix}{run_id}-b{b:05d}.parquet"
+                name = f"{run_id}-b{b:05d}.parquet"
             else:
-                name = f"{file_prefix}{run_id}-p{b:05d}-{seq:04d}.parquet"
+                name = f"{run_id}-p{b:05d}-{seq:04d}.parquet"
                 seq += 1
             return _OpenFile(
                 os.path.join(data_dir, name), b, tmp_suffix, arrow_schema, codec, level, statless
@@ -324,7 +340,6 @@ def write_datafiles(
     compression_level: int | None = None,
     sort_within: list[str] | None = None,
     lineage_dir: str | None = None,
-    file_prefix: str = "",
 ) -> list[DataFile]:
     """Write *df* (which must carry an int ``_bin`` column) as one parquet
     file per bin under *data_dir*; return DataFile entries with stats.
@@ -343,7 +358,6 @@ def write_datafiles(
         compression=compression,
         compression_level=compression_level,
         lineage_dir=lineage_dir,
-        file_prefix=file_prefix,
     )
 
 
@@ -385,28 +399,5 @@ def num_bins_for(total_bytes: int, target_bytes: int) -> int:
 
 def hash_bin(col_name: str, num_bins: int):
     """Deterministic, skew-free bin assignment by key hash (used for merge
-    insert files and position-delete files)."""
+    insert files and the Iceberg export's files)."""
     return F.pmod(F.xxhash64(F.col(col_name)), F.lit(num_bins)).cast("int")
-
-
-# Above this many excluded paths an IN-literal expression tree becomes a
-# driver-side analysis/codegen scale-killer (same class of problem as the
-# clustering boundary cutover, clustering._NATIVE_BOUNDARY_MAX) — switch to
-# a broadcast anti-join against a victims DataFrame instead.
-EXCLUDE_ISIN_MAX = 1_000
-
-
-def exclude_file_paths(df: DataFrame, paths, col: str = "file_path") -> DataFrame:
-    """Rows of *df* whose *col* is NOT one of *paths*.
-
-    Small lists stay a codegen'd ``NOT IN`` literal; large lists (a
-    force_full carry-over can name 10^5-10^6 victim files) become a
-    broadcast LEFT ANTI join, which is O(|paths|) driver work instead of a
-    multi-MB expression tree the analyzer must walk per plan.
-    """
-    paths = list(paths)
-    if len(paths) <= EXCLUDE_ISIN_MAX:
-        return df.filter(~F.col(col).isin(paths)) if paths else df
-    spark = df.sparkSession
-    victims = spark.createDataFrame([(p,) for p in paths], f"{col} string")
-    return df.join(F.broadcast(victims), on=col, how="left_anti")

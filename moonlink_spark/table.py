@@ -42,7 +42,7 @@ from moonlink_spark.catalog.metadata import (
     norm_path,
     schema_paths,
 )
-from moonlink_spark.plans.physical import exclude_file_paths, hash_bin, write_datafiles
+from moonlink_spark.plans.physical import write_datafiles
 
 # broadcast a scan's deletion-vector bitmap rows up to this decoded size
 _BROADCAST_DELETES_BYTES = 256 * 1024 * 1024
@@ -57,11 +57,6 @@ _DV_BIT_SET = (
 # sentinel: "caller did not pass expected_parent_snapshot" (None is a valid
 # expectation — committing against an empty table)
 _UNSET = object()
-
-# rows per writer bin when (re)writing position-delete bitmaps — shared by
-# the DataFrame DV writes (compaction/clustering carry-over, Iceberg import)
-# so none of them ever collapses to a single serial reduce task
-DV_REWRITE_ROWS_PER_BIN = 4_000_000
 
 # the at-rest schema of a bitmap deletion-vector file (DeleteFile)
 BITMAP_SCHEMA = "file_path string, words array<bigint>, n_positions long"
@@ -556,10 +551,10 @@ class MoonTable:
         """The logical (file_path, pos) rows of a set of bitmap
         deletion-vector files, expanded JVM-side: posexplode the word array,
         then unpack each non-zero word's set bits with a codegen'd
-        transform+filter — no Python worker. Scans never expand (see
-        join_deletes); this serves the compaction and clustering DV
-        carry-over and the Iceberg export. A file in any other format
-        raises ValueError."""
+        transform+filter — no Python worker. Only the Iceberg export (whose
+        spec position-delete files hold positions) and tests expand: scans
+        test bits (join_deletes) and the DV carry-over ORs bitmap rows. A
+        file in any other format raises ValueError."""
         if not dfiles:
             return None
         _check_bitmap(dfiles)
@@ -640,6 +635,8 @@ class MoonTable:
             if sid is None:
                 raise ValueError("cannot tag an empty table (no snapshot)")
             meta.snapshot_by_id(sid)  # raises KeyError if expired
+            if name in meta.branches:
+                raise ValueError(f"{name!r} is a branch; tags and branches share a namespace")
             if name in meta.refs and meta.refs[name] != sid:
                 raise ValueError(
                     f"tag {name!r} already points at snapshot {meta.refs[name]} "
@@ -1080,11 +1077,40 @@ class MoonTable:
                 out.add(norm_path(d.file_path))
         return out
 
-    def write_bitmap_file(self, bitmaps: "pa.Table", run_id: str) -> DeleteFile:
-        """Write bitmap rows (fold_live_positions' output) from the driver as
-        ONE DV file through the writer core's file handle: the name, the
-        .inprogress + rename and the at-rest schema of write_position_deletes'
-        bin 0, so readers cannot tell the two apart."""
+    def carry_over_deletes(self, victims: set[str], run_id: str) -> tuple[list[DeleteFile], int]:
+        """The DV carry-over of a rewrite that removes the data files
+        *victims* (normalized paths): the table's bitmap rows that target a
+        surviving file, OR'd into one row per target, written as one fresh
+        DV file under *run_id*-dv, and their position count. Victims'
+        deletes die with the victims (the rewrite applied them inline).
+        Driver-side, no Spark job: it holds every DV row of the snapshot,
+        DV rows × (words × 8 + path bytes), a few KB per DV file. When
+        every data file is a victim no survivor can carry a delete, so
+        nothing is read (lock-free appends are DV-free by construction:
+        only the lock-holding merge writes DVs)."""
+        import numpy as np
+        import pyarrow as pa
+
+        delete_files = self.delete_files()
+        if not delete_files or {norm_path(f.file_path) for f in self.data_files()} <= victims:
+            return [], 0
+        rows = self.read_bitmap_rows(delete_files)
+        keep = [norm_path(fp) not in victims for fp in rows.column("file_path").to_pylist()]
+        merged = _or_bitmap_rows(rows.filter(pa.array(keep, pa.bool_())))
+        if not merged:
+            return [], 0
+        fps = sorted(merged)
+        counts = [int(np.unpackbits(merged[fp].view(np.uint8)).sum()) for fp in fps]
+        bitmaps = _bitmap_rows(fps, [merged[fp].view(np.int64) for fp in fps], counts)
+        return [self.write_position_deletes(bitmaps, run_id + "-dv")], sum(counts)
+
+    def write_position_deletes(self, bitmaps: "pa.Table", run_id: str) -> DeleteFile:
+        """Write bitmap rows (BITMAP_SCHEMA, one per target file, as
+        fold_live_positions returns them) as ONE deletion-vector file,
+        del-{run_id}-b00000.parquet, through the writer core's file handle
+        (.inprogress + rename). The engine's only DV writer: the merge, the
+        compaction/clustering carry-over and the Iceberg importer all fold
+        on the driver and write here."""
         from moonlink_spark.plans.physical import _OpenFile
 
         name = f"del-{run_id}-b00000.parquet"
@@ -1101,97 +1127,6 @@ class MoonTable:
             file_size_bytes=rec["file_size_bytes"],
             position_count=sum(bitmaps.column("n_positions").to_pylist()),
         )
-
-    def dv_rewrite_bins(self, n_delete_rows: int) -> int:
-        """Writer-task count for a position-delete (re)write: one bin per
-        DV_REWRITE_ROWS_PER_BIN surviving rows. At 100 TB a compaction/
-        clustering carry-over can hold millions of DV rows spanning
-        thousands of target files — a single reduce task (num_bins=1) is a
-        serial tail; binning by hash(file_path) keeps each target file's
-        bitmap whole while spreading the write."""
-        return max(1, n_delete_rows // DV_REWRITE_ROWS_PER_BIN + 1)
-
-    def carry_over_deletes(self, victims: set[str], run_id: str) -> tuple[list[DeleteFile], int]:
-        """The DV carry-over of a rewrite that removes the data files
-        *victims* (normalized paths): the table's delete rows that target a
-        surviving file, rewritten as fresh DV files under *run_id*-dv, and
-        their count. Victims' deletes die with the victims (the rewrite
-        applied them inline). When every data file is a victim no survivor
-        can carry a delete, so no job runs (lock-free appends are DV-free by
-        construction: only the lock-holding merge writes DVs)."""
-        delete_files = self.delete_files()
-        if not delete_files or {norm_path(f.file_path) for f in self.data_files()} <= victims:
-            return [], 0
-        surviving = exclude_file_paths(self.read_delete_rows(delete_files), victims)
-        n = surviving.count()
-        if n == 0:
-            return [], 0
-        return self.write_position_deletes(
-            surviving, run_id=run_id + "-dv", num_bins=self.dv_rewrite_bins(n)
-        ), n
-
-    def write_position_deletes(
-        self, deletes_df: DataFrame, run_id: str, num_bins: int = 1,
-        lineage_dir: str | None = None,
-    ) -> list[DeleteFile]:
-        """Persist (file_path, pos) rows as BITMAP deletion-vector parquet:
-        one row per target data file carrying the packed 64-bit-word bitmap
-        of deleted positions (the roaring-puffin analog, deletion_vector.rs
-        / delete_vector.rs:9-15). ~20× smaller at rest than (path, pos) rows
-        at heavy delete ratios; fixed ≤16 KB per 131072-row target file.
-        Folded JVM-side, no Python worker: one word per (file_path,
-        pos >> 6) by bit_or, then per file a dense word array with zero
-        words in the gaps; scans test bits in it (join_deletes). The rows
-        are hash-partitioned by the writer's _bin first, so both
-        aggregations and the writer share that one exchange."""
-        words = (
-            deletes_df.select(
-                F.col("file_path").cast("string"), F.col("pos").cast("long")
-            )
-            .withColumn("_bin", hash_bin("file_path", num_bins))
-            .repartition(num_bins, "_bin")
-            .groupBy("_bin", "file_path", F.shiftright("pos", 6).alias("widx"))
-            .agg(F.expr("bit_or(shiftleft(1L, CAST(pos % 64 AS INT)))").alias("word"))
-        )
-        bitmaps = (
-            words.groupBy("_bin", "file_path")
-            .agg(
-                F.map_from_entries(F.collect_list(F.struct("widx", "word"))).alias("m"),
-                F.max("widx").alias("max_widx"),
-                F.sum(F.bit_count("word")).alias("n_positions"),
-            )
-            .select(
-                "_bin",
-                "file_path",
-                # cast restores the nullable element type the bitmap
-                # files have always been written with
-                F.expr("transform(sequence(0L, max_widx), i -> coalesce(m[i], 0L))")
-                .cast("array<bigint>")
-                .alias("words"),
-                "n_positions",
-            )
-        )
-        files = write_datafiles(
-            bitmaps,
-            data_dir=self.catalog.data_dir,
-            run_id=run_id,
-            num_bins=num_bins,
-            compression="snappy",
-            sort_within=["file_path"],
-            file_prefix="del-",
-            lineage_dir=lineage_dir,
-        )
-        return [
-            DeleteFile(
-                file_path=f.file_path,
-                record_count=f.record_count,
-                file_size_bytes=f.file_size_bytes,
-                position_count=int(
-                    (f.stats.get("n_positions") or {}).get("sum") or 0
-                ),
-            )
-            for f in files
-        ]
 
 
 def _check_bitmap(dfiles: list[DeleteFile]) -> None:
@@ -1214,25 +1149,46 @@ def _bitmap_arrow_schema() -> "pa.Schema":
     ])
 
 
-def fold_live_positions(positions: "pa.Table", prior: "pa.Table | None" = None) -> "pa.Table":
-    """Fold (file_path, pos) rows into bitmap rows (BITMAP_SCHEMA), one per
-    target file, sorted by file_path, with the words and n_positions of
-    write_position_deletes' JVM fold — after dropping every position already
-    set in *prior* bitmap rows. A file's prior set is the OR of all of its
-    rows; a file left with no new position gets no row."""
-    import numpy as np
+def _bitmap_rows(file_paths: list, words: list, counts: list) -> "pa.Table":
+    """Bitmap rows (BITMAP_SCHEMA) from one list per column."""
     import pyarrow as pa
 
-    dead: dict[str, np.ndarray] = {}
-    if prior is not None:
-        for fp, w in zip(prior.column("file_path").to_pylist(), prior.column("words").to_pylist()):
-            w = np.asarray(w, dtype=np.int64).view(np.uint64)
-            have = dead.get(fp)
-            if have is not None:
-                w = np.pad(w, (0, max(0, len(have) - len(w))))
-                w[: len(have)] |= have
-            dead[fp] = w
+    schema = _bitmap_arrow_schema()
+    return pa.table(
+        [
+            pa.array(file_paths, pa.string()),
+            pa.array(words, schema.field("words").type),
+            pa.array(counts, pa.int64()),
+        ],
+        schema=schema,
+    )
 
+
+def _or_bitmap_rows(rows: "pa.Table") -> "dict[str, np.ndarray]":
+    """Each target file's bitmap rows in *rows* (file_path, words) OR'd
+    into one uint64 word array, keyed by file_path."""
+    import numpy as np
+
+    out: dict[str, np.ndarray] = {}
+    for fp, w in zip(rows.column("file_path").to_pylist(), rows.column("words").to_pylist()):
+        w = np.asarray(w, dtype=np.int64).view(np.uint64)
+        have = out.get(fp)
+        if have is not None:
+            w = np.pad(w, (0, max(0, len(have) - len(w))))
+            w[: len(have)] |= have
+        out[fp] = w
+    return out
+
+
+def fold_live_positions(positions: "pa.Table", prior: "pa.Table | None" = None) -> "pa.Table":
+    """Fold (file_path, pos) rows into bitmap rows (BITMAP_SCHEMA), one per
+    target file, sorted by file_path: a dense word array up to the last set
+    position and its popcount — after dropping every position already set
+    in *prior* bitmap rows. A file's prior set is the OR of all of its
+    rows; a file left with no new position gets no row."""
+    import numpy as np
+
+    dead = _or_bitmap_rows(prior) if prior is not None else {}
     paths = positions.column("file_path").to_numpy(zero_copy_only=False)
     pos = positions.column("pos").to_numpy().astype(np.int64)
     files, inv = np.unique(paths, return_inverse=True)
@@ -1252,12 +1208,4 @@ def fold_live_positions(positions: "pa.Table", prior: "pa.Table | None" = None) 
         out_fp.append(str(fp))
         out_words.append(words.view(np.int64))
         out_n.append(len(p))
-    schema = _bitmap_arrow_schema()
-    return pa.table(
-        [
-            pa.array(out_fp, pa.string()),
-            pa.array(out_words, schema.field("words").type),
-            pa.array(out_n, pa.int64()),
-        ],
-        schema=schema,
-    )
+    return _bitmap_rows(out_fp, out_words, out_n)

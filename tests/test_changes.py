@@ -87,15 +87,18 @@ def test_bitmap_deletion_vectors_roundtrip_and_size(spark, tmp_table_root):
     """Bitmap DVs: (file_path, pos) -> packed words -> expanded positions is
     lossless, position_count is recorded, and at-rest size stays ~constant
     (bitmap) instead of growing linearly with delete count."""
-    from pyspark.sql import functions as F
+    import pyarrow as pa
+
+    from moonlink_spark.table import fold_live_positions
 
     t = create_images_table(spark, tmp_table_root, 400, seed=42)
     target = t.data_files()[0].file_path
     # a heavy delete ratio: 8000 positions against one (synthetic) target
-    pos = spark.range(0, 16000, 2).select(
-        F.lit(target).alias("file_path"), F.col("id").alias("pos")
-    )
-    dfiles = t.write_position_deletes(pos, run_id="dv1")
+    pos = pa.table({
+        "file_path": pa.array([target] * 8000, pa.string()),
+        "pos": pa.array(range(0, 16000, 2), pa.int64()),
+    })
+    dfiles = [t.write_position_deletes(fold_live_positions(pos), run_id="dv1")]
     assert all(d.format == "bitmap" for d in dfiles)
     assert sum(d.position_count for d in dfiles) == 8000
     # at rest: one bitmap row of 16000/64 words ≈ 2KB, far below the ~8000

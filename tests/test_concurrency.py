@@ -342,34 +342,6 @@ def test_merge_nonoverlapping_append_folds(spark, tmp_path):
     )
 
 
-def test_dv_rewrite_parallelism(spark, tmp_path, monkeypatch):
-    """The DataFrame position-delete write (compaction/clustering carry-over,
-    Iceberg import) must scale its writer-bin count with the delete-row
-    volume (a single reduce task is a serial tail at 100 TB). With the
-    rows-per-bin constant shrunk, re-writing a merge's DV rows the way the
-    carry-over does lands them in >1 delete file (one per hash bin of target
-    file_path). The merge itself folds its matches on the driver into one
-    delete file."""
-    import moonlink_spark.table as tbl_mod
-
-    assert tbl_mod.MoonTable.dv_rewrite_bins(None, 0) == 1
-    assert tbl_mod.MoonTable.dv_rewrite_bins(None, 3_999_999) == 1
-    assert tbl_mod.MoonTable.dv_rewrite_bins(None, 9_000_000) == 3
-
-    monkeypatch.setattr(tbl_mod, "DV_REWRITE_ROWS_PER_BIN", 10)
-    table = create_images_table(spark, str(tmp_path / "t"), 800, seed=42)
-    changes = generate_changes_df(spark, 800, 300, seed=42)  # same key universe
-    res = merge_into(table, changes, run_id="m1")
-    assert res.matched_keys > 30  # enough matches to span multiple bins
-    assert len(table.delete_files()) == 1
-    rows = table.read_delete_rows(table.delete_files())
-    carried = table.write_position_deletes(
-        rows, run_id="m1-dv", num_bins=table.dv_rewrite_bins(res.matched_keys)
-    )
-    assert len(carried) > 1
-    assert sum(d.position_count for d in carried) == res.matched_keys
-
-
 def test_lock_lost_holder_does_not_release_usurper(spark, tmp_path):
     """Ownership guard (round-4 ADVICE): a holder stalled past the TTL has
     its lock broken and re-acquired by another run. When the stalled holder

@@ -1,11 +1,12 @@
-"""Both deletion-vector folds must write the same bitmaps as the numpy fold
-the engine first used: the JVM fold in write_position_deletes and the
-driver fold a merge uses (fold_live_positions + write_bitmap_file). Same
-word array and position count per target file, same at-rest schema, and
+"""The driver fold (fold_live_positions), written by
+MoonTable.write_position_deletes, the engine's only deletion-vector writer,
+must give the bitmaps of the numpy fold the engine first used: the same word
+array and position count per target file and the same at-rest schema, and
 read_delete_rows expands them back to the same (file_path, pos) set. The
-driver fold also drops positions that prior bitmaps already set. The scan's
-bitmap join (join_deletes) deletes exactly the rows the join over those
-expanded rows does."""
+fold also drops positions that prior bitmaps already set. A rewrite's DV
+carry-over ORs each surviving target's rows into one row without a Spark
+job. The scan's bitmap join (join_deletes) deletes exactly the rows the join
+over the expanded rows does."""
 
 import os
 
@@ -23,7 +24,8 @@ BITMAP_SCHEMA = "file_path string, words array<bigint>, n_positions long"
 
 
 def _to_bitmap(pdf: pd.DataFrame) -> pd.DataFrame:
-    """The numpy fold the engine used before the JVM one: the reference."""
+    """The numpy fold the engine first used: the reference the driver fold
+    is compared with."""
     pos = np.unique(pdf["pos"].to_numpy().astype(np.int64))
     words = np.zeros(int(pos[-1]) // 64 + 1, dtype=np.uint64)
     np.bitwise_or.at(words, pos // 64, np.uint64(1) << (pos % 64).astype(np.uint64))
@@ -82,38 +84,52 @@ def _positions(rows) -> pa.Table:
     })
 
 
+def _write(t, rows, run_id):
+    return t.write_position_deletes(fold_live_positions(_positions(rows)), run_id)
+
+
+def _spark_positions(spark, rows) -> pa.Table:
+    """*rows* as a Spark DataFrame collected with toArrow: the form in which
+    the importer hands its (file_path, pos) rows to the driver fold."""
+    return spark.createDataFrame(rows, "file_path string, pos long").toArrow()
+
+
 def test_jvm_fold_matches_numpy_fold(spark, tmp_path):
+    """Spark rows once went through a JVM fold (bit_or) in
+    write_position_deletes; they are now collected and folded on the
+    driver, and must still give the numpy fold's bitmaps."""
     t = _table(spark, tmp_path)
     rows = _cases()
-    deletes = spark.createDataFrame(rows, "file_path string, pos long")
-    dfiles = t.write_position_deletes(deletes, run_id="fold", num_bins=3)
-    assert len(dfiles) > 1  # several bins written, each holding whole files
+    d = t.write_position_deletes(fold_live_positions(_spark_positions(spark, rows)), "fold")
 
     want = _reference(rows)
-    assert _bitmaps(dfiles) == want
-    assert sum(d.position_count for d in dfiles) == sum(n for _, n in want.values())
+    assert _bitmaps([d]) == want
+    assert d.position_count == sum(n for _, n in want.values())
 
-    back = {(r["file_path"], r["pos"]) for r in t.read_delete_rows(dfiles).collect()}
+    back = {(r["file_path"], r["pos"]) for r in t.read_delete_rows([d]).collect()}
     assert back == set(rows)
 
 
 def test_driver_fold_matches_numpy_and_jvm_folds(spark, tmp_path):
+    """The fold of pyarrow rows (the merge's) matches the numpy fold and the
+    fold of the same rows collected from Spark (the path the JVM fold
+    served)."""
     t = _table(spark, tmp_path)
     rows = _cases()
-    d = t.write_bitmap_file(fold_live_positions(_positions(rows)), run_id="drv")
+    d = _write(t, rows, "drv")
     assert os.path.basename(d.file_path) == "del-drv-b00000.parquet"
     assert d.format == "bitmap"
 
     want = _reference(rows)
     got = _bitmaps([d])
     assert got == want
-    jvm = t.write_position_deletes(
-        spark.createDataFrame(rows, "file_path string, pos long"), run_id="jvm", num_bins=3
+    from_spark = t.write_position_deletes(
+        fold_live_positions(_spark_positions(spark, rows)), "spark"
     )
-    assert got == _bitmaps(jvm)
+    assert got == _bitmaps([from_spark])
     assert d.position_count == sum(n for _, n in want.values())
     assert d.record_count == len(want)
-    # rows sorted by target file, as the JVM writer's sortWithinPartitions
+    # rows sorted by target file
     assert pq.read_table(d.file_path).column("file_path").to_pylist() == sorted(want)
 
     back = {(r["file_path"], r["pos"]) for r in t.read_delete_rows([d]).collect()}
@@ -123,15 +139,11 @@ def test_driver_fold_matches_numpy_and_jvm_folds(spark, tmp_path):
 def test_driver_fold_drops_positions_prior_bitmaps_set(spark, tmp_path):
     t = _table(spark, tmp_path)
     far = 64 * 40 + 2  # word 40, beyond the one-word prior bitmap of short.parquet
-    prior_jvm = [("/t/a.parquet", 3), ("/t/a.parquet", 70), ("/t/short.parquet", 1),
-                 ("/t/or.parquet", 3), ("/t/dead.parquet", 9), ("/t/untouched.parquet", 0)]
-    dv1 = t.write_position_deletes(
-        spark.createDataFrame(prior_jvm, "file_path string, pos long"), run_id="p1"
-    )
+    prior_rows = [("/t/a.parquet", 3), ("/t/a.parquet", 70), ("/t/short.parquet", 1),
+                  ("/t/or.parquet", 3), ("/t/dead.parquet", 9), ("/t/untouched.parquet", 0)]
     # a second DV file with another row for or.parquet: its prior set is the
     # OR of both rows
-    dv2 = t.write_bitmap_file(fold_live_positions(_positions([("/t/or.parquet", 130)])), "p2")
-    prior_files = dv1 + [dv2]
+    prior_files = [_write(t, prior_rows, "p1"), _write(t, [("/t/or.parquet", 130)], "p2")]
 
     new = [
         ("/t/a.parquet", 3), ("/t/a.parquet", 5), ("/t/a.parquet", 70), ("/t/a.parquet", 200),
@@ -151,7 +163,7 @@ def test_driver_fold_drops_positions_prior_bitmaps_set(spark, tmp_path):
         ("/t/or.parquet", 131),
         ("/t/fresh.parquet", 64),
     ]
-    d = t.write_bitmap_file(fold_live_positions(_positions(new), prior), run_id="m")
+    d = t.write_position_deletes(fold_live_positions(_positions(new), prior), run_id="m")
     got = _bitmaps([d])
     assert got == _reference(live)  # dead.parquet: every position already set
     assert d.position_count == len(live)
@@ -160,7 +172,7 @@ def test_driver_fold_drops_positions_prior_bitmaps_set(spark, tmp_path):
     all_rows = t.read_delete_rows(prior_files + [d]).collect()
     pairs = [(r["file_path"], r["pos"]) for r in all_rows]
     assert len(pairs) == len(set(pairs))
-    assert set(pairs) == set(prior_jvm) | {("/t/or.parquet", 130)} | set(live)
+    assert set(pairs) == set(prior_rows) | {("/t/or.parquet", 130)} | set(live)
 
 
 def test_driver_fold_of_no_live_positions_is_empty():
@@ -187,18 +199,12 @@ def test_bitmap_join_matches_expanded_join(spark, tmp_path, monkeypatch):
 
     t = _table(spark, tmp_path)
     rows = _cases()
-    dv1 = t.write_position_deletes(
-        spark.createDataFrame(rows + [("/t/shared.parquet", 5), ("/t/shared.parquet", 700)],
-                              "file_path string, pos long"),
-        run_id="dv1", num_bins=2,
-    )
+    dv1 = _write(t, rows + [("/t/shared.parquet", 5), ("/t/shared.parquet", 700)], "dv1")
     # a second DV file with another row for shared.parquet (overlapping at
     # 700) and for word-edges.parquet: each target's rows OR together
-    dv2 = t.write_bitmap_file(fold_live_positions(_positions(
-        [("/t/shared.parquet", 6), ("/t/shared.parquet", 700), ("/t/shared.parquet", 1000),
-         ("/t/word-edges.parquet", 1)]
-    )), run_id="dv2")
-    dfiles = dv1 + [dv2]
+    dv2 = _write(t, [("/t/shared.parquet", 6), ("/t/shared.parquet", 700),
+                     ("/t/shared.parquet", 1000), ("/t/word-edges.parquet", 1)], "dv2")
+    dfiles = [dv1, dv2]
 
     # every bitmap's target is scanned past its last word; clean.parquet has
     # no DV row; random-8.parquet has DV rows but is not scanned
@@ -286,3 +292,73 @@ def test_dvs_under_an_escaped_table_path(spark, tmp_path):
     plain = run(str(tmp_path / "plain"))
     assert plain[0][1] == plain[0][2] > 0
     assert run(str(tmp_path / "a b%c")) == plain
+
+
+def _merged_twice(spark, root) -> MoonTable:
+    """A 300-row table after two merges, each writing one DV file."""
+    from moonlink_spark.operators.merge import merge_into
+    from moonlink_spark.sources.fixtures import create_images_table, generate_changes_df
+
+    t = create_images_table(spark, root, 300, seed=42)
+    merge_into(t, generate_changes_df(spark, 300, 50, seed=42), run_id="m1")
+    # same key universe, more changes: also updates base rows m1 left live
+    merge_into(
+        t, generate_changes_df(spark, 300, 120, seed=42, lsn_start=9_000_000), run_id="m2"
+    )
+    assert len(t.delete_files()) == 2
+    return t
+
+
+def test_carry_over_ors_rows_per_surviving_target(spark, tmp_path):
+    """Two DV files with rows for the same surviving target are carried
+    over as one row holding the union of their positions, in the numpy
+    fold's words; rows that target a victim are gone."""
+    from moonlink_spark.catalog.metadata import norm_path
+
+    t = _merged_twice(spark, str(tmp_path / "t"))
+    dfiles = t.delete_files()
+    targets = t.read_bitmap_rows(dfiles).column("file_path").to_pylist()
+    shared = sorted({fp for fp in targets if targets.count(fp) > 1})
+    assert shared  # both merges hit the same file
+    victim = next(fp for fp in sorted(set(targets)) if fp != shared[-1])
+    victims = {norm_path(victim)}
+    before = {(r["file_path"], r["pos"]) for r in t.read_delete_rows(dfiles).collect()}
+
+    carried, n = t.carry_over_deletes(victims, "c1")
+    assert len(carried) == 1
+    assert os.path.basename(carried[0].file_path) == "del-c1-dv-b00000.parquet"
+    want = {(fp, p) for fp, p in before if norm_path(fp) not in victims}
+    assert shared[-1] in {fp for fp, _ in want}
+    got = _bitmaps(carried)  # also checks one row per target
+    assert got == _reference(sorted(want))
+    after = {(r["file_path"], r["pos"]) for r in t.read_delete_rows(carried).collect()}
+    assert after == want
+    assert n == carried[0].position_count == len(want)
+
+
+def test_carry_over_runs_no_spark_job(spark, tmp_path, monkeypatch):
+    """A force_regular compaction that leaves survivors with DVs carries
+    their bitmaps over on the driver: no Spark job runs inside
+    carry_over_deletes."""
+    from test_fixed_costs import _jobs_in_group
+
+    from moonlink_spark.operators.compaction import CompactionConfig, compact
+
+    t = _merged_twice(spark, str(tmp_path / "t"))
+    orig = MoonTable.carry_over_deletes
+    calls = []
+
+    def counted(self, victims, run_id):
+        out = []
+        jobs = _jobs_in_group(
+            spark, "carry-over", lambda: out.append(orig(self, victims, run_id))
+        )
+        calls.append((out[0], jobs))
+        return out[0]
+
+    monkeypatch.setattr(MoonTable, "carry_over_deletes", counted)
+    assert compact(t, CompactionConfig(mode="force_regular", max_files=2), run_id="c1")
+    [((carried, n), jobs)] = calls
+    assert carried and n > 0  # the survivors kept DV rows
+    assert jobs == []
+    assert [d.file_path for d in t.delete_files()] == [d.file_path for d in carried]

@@ -169,28 +169,3 @@ def test_iceberg_reader_plan_shape(spark, tmp_path):
     ]
     assert data_reads and all("bytes" not in ln for ln in data_reads)
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-
-
-def test_victim_exclusion_joins_above_isin_cap(spark):
-    """DV carry-over victim exclusion (round-5 VERDICT): above
-    EXCLUDE_ISIN_MAX paths the plan must be a broadcast LEFT ANTI join, not
-    a multi-MB IN-literal the driver has to analyze; below the cap it stays
-    a codegen'd NOT-IN filter. Results identical either way."""
-    from moonlink_spark.plans.physical import EXCLUDE_ISIN_MAX, exclude_file_paths
-
-    df = spark.range(5000).select(
-        F.concat(F.lit("f"), F.col("id")).alias("file_path"),
-        F.col("id").alias("pos"),
-    )
-    many = [f"f{i}" for i in range(EXCLUDE_ISIN_MAX + 500)]
-    big = exclude_file_paths(df, many)
-    plan_big = _plan(big)
-    assert "LeftAnti" in plan_big
-    assert "BroadcastHashJoin" in plan_big or "BroadcastNestedLoop" in plan_big
-    assert plan_big.count("f1499") == 0  # no literal list in the plan
-    assert big.count() == 5000 - (EXCLUDE_ISIN_MAX + 500)
-
-    few = exclude_file_paths(df, ["f1", "f2"])
-    plan_few = _plan(few)
-    assert "Join" not in plan_few and "f1" in plan_few  # literal NOT IN
-    assert few.count() == 4998

@@ -68,6 +68,59 @@ def test_compaction_resume_of_a_stale_plan_reinserts_nothing(spark, tmp_table_ro
     assert _rows(table) == expected
 
 
+def _killed_at_commit(monkeypatch, op):
+    """Run *op* until it tries to commit, as if the process died there."""
+    from moonlink_spark.table import MoonTable
+
+    def die(*a, **k):
+        raise RuntimeError("killed at commit")
+
+    with monkeypatch.context() as m:
+        m.setattr(MoonTable, "commit_snapshot", die)
+        try:
+            op()
+        except RuntimeError as e:
+            assert str(e) == "killed at commit"
+        else:
+            raise AssertionError("the op never tried to commit")
+
+
+def test_compaction_resume_after_another_run_rewrote_its_victims(
+    spark, tmp_table_root, monkeypatch
+):
+    """A run killed after writing its bins resumes after another run
+    rewrote the same victims: its bins hold rows the other run's output
+    already holds, so it commits nothing."""
+    table = create_images_table(spark, tmp_table_root, 300, seed=42)
+    expected = _rows(table)
+    cfg = CompactionConfig(mode="force_full")
+    _killed_at_commit(monkeypatch, lambda: compact(table, cfg, run_id="r1"))
+    assert compact(table, cfg, run_id="r2") is not None
+    sid = table.current_snapshot_id()
+
+    assert compact(table, cfg, run_id="r1") is None
+    assert table.current_snapshot_id() == sid
+    assert _rows(table) == expected
+
+
+def test_cluster_resume_after_another_run_rewrote_its_victims(
+    spark, tmp_table_root, monkeypatch
+):
+    """The clustering form of the case above: a killed cluster run whose
+    victims a compaction rewrote commits none of its recorded bins."""
+    table = create_images_table(spark, tmp_table_root, 300, seed=42)
+    expected = _rows(table)
+    _killed_at_commit(
+        monkeypatch, lambda: cluster(table, by=["phash", "w", "h"], run_id="z1")
+    )
+    assert compact(table, CompactionConfig(mode="force_full"), run_id="r2") is not None
+    sid = table.current_snapshot_id()
+
+    assert cluster(table, by=["phash", "w", "h"], run_id="z1") is None
+    assert table.current_snapshot_id() == sid
+    assert _rows(table) == expected
+
+
 def test_cluster_resume_deterministic(spark, tmp_table_root):
     table = create_images_table(spark, tmp_table_root, N, seed=42)
     merge_into(table, generate_changes_df(spark, N, 200, seed=42), run_id="m1")

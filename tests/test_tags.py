@@ -50,3 +50,13 @@ def test_tag_immutability_and_errors(spark, tmp_table_root):
         t.drop_tag("missing")
     with pytest.raises(ValueError):
         t.scan(ref="rel", snapshot_id=snap)
+
+
+def test_create_tag_refuses_a_branch_name(spark, tmp_table_root):
+    """Tags and branches share a namespace: the mirror of create_branch
+    refusing a tag's name."""
+    t = create_images_table(spark, tmp_table_root, 50, seed=42)
+    t.create_branch("x")
+    with pytest.raises(ValueError):
+        t.create_tag("x")
+    assert "x" not in t.refs()
