@@ -9,6 +9,7 @@ plain dataclasses serialized to JSON.
 Layout under a table root:
 
     <root>/data/<run>-b<bin>.parquet          data files
+    <root>/data/<run>-b<bin>.keys.parquet     their key-index sidecars
     <root>/data/del-<run>-b<bin>.parquet      deletion vectors (bitmap rows per target file)
     <root>/metadata/v<N>.metadata.json        table metadata versions
     <root>/metadata/version-hint.text         current version pointer (CAS)
@@ -35,8 +36,9 @@ COMPACT_TARGET_BYTES = 512 * 1024 * 1024  # compaction_config.rs:52 (zstd)
 
 @dataclass
 class DataFile:
-    """One parquet data file + stats (≈ Iceberg manifest entry / moonlink
-    DiskFileEntry, mooncake_table.rs:142-153)."""
+    """One parquet data file + stats + its key-index sidecar (≈ Iceberg
+    manifest entry / moonlink DiskFileEntry with its file index,
+    mooncake_table.rs:142-153)."""
 
     file_path: str
     record_count: int
@@ -56,6 +58,12 @@ class DataFile:
     # pre-drop files read as NULL instead of resurrecting stale values.
     # None = written before field-ids existed (treated as current-schema).
     field_ids: dict[str, int] | None = None
+    # the file's key-index sidecar (catalog/key_index.py): (key, pos) of
+    # every row, sorted by key. The writer core writes one beside every
+    # data file and add_files builds one for every foreign file, so every
+    # committed entry names one; the merge finds its delete positions and
+    # a point read its files in them.
+    key_index: str | None = None
 
     @property
     def live_count(self) -> int:

@@ -6,8 +6,9 @@ reference engine produces, iceberg_table_manager.rs) to `import_iceberg`
 and get a fully-maintainable MoonTable:
 
   - data parquet files are registered IN PLACE (add_files semantics,
-    batch_ingestion.rs:20-166 — no read, no rewrite; stats come from a
-    distributed parquet-footer job);
+    batch_ingestion.rs:20-166 — no rewrite; stats come from a distributed
+    parquet-footer job, which also reads each file's key column and writes
+    its key-index sidecar into the new table's data directory);
   - position-delete files are converted to our bitmap deletion vectors
     (the reverse of the export's DV→spec-parquet translation), with
     per-file deleted_count updated so compaction's delete-ratio trigger

@@ -38,7 +38,7 @@ from pyspark.sql import functions as F
 from moonlink_spark.catalog.metadata import COMPACT_TARGET_BYTES, norm_path
 from moonlink_spark.functions.zorder import DEFAULT_BITS, curve_key
 from moonlink_spark.plans.physical import completed_outputs, read_bin_records, write_datafiles
-from moonlink_spark.table import MoonTable
+from moonlink_spark.table import MoonTable, completed_run
 
 # sampled keys for boundary estimation: ~500 keys/bin at 128 bins — plenty
 # for quantile boundaries, and the driver-side quantile stays trivially fast
@@ -478,7 +478,8 @@ def cluster(
     scope: str = "full",
 ) -> int | None:
     """Clustering rewrite; returns the new snapshot id (None if incremental
-    scope found nothing to do).
+    scope found nothing to do). A *run_id* that already committed returns
+    its snapshot and writes nothing (``completed_run``).
 
     curve: "zorder" / "hilbert" lay rows out on a space-filling curve over
     NUMERIC columns; "align" groups rows by the DISTINCT value tuples of
@@ -512,6 +513,9 @@ def _cluster_locked(
     bits: int,
     scope: str = "full",
 ) -> int | None:
+    done = completed_run(table, "cluster", run_id)
+    if done is not None:
+        return done.snapshot_id
     stage_t: dict[str, float] = {}
     t0 = time.time()
     plan = _plan(table, run_id, by, curve, target_bytes, bits, scope)
@@ -520,7 +524,7 @@ def _cluster_locked(
     stage_t["plan_sec"] = round(time.time() - t0, 3)
     lineage_dir = os.path.join(table.catalog.metadata_dir, "lineage", run_id)
 
-    key_col = table.key_columns[0] if table.key_columns else by[0]
+    key_col = table.key_columns[0]
     num_bins = int(plan.offsets[-1])
 
     victim_set = set(plan.victims)
@@ -554,6 +558,7 @@ def _cluster_locked(
             df,
             data_dir=table.catalog.data_dir,
             run_id=run_id,
+            key=key_col,
             num_bins=num_bins,
             compression="zstd",
             compression_level=4,

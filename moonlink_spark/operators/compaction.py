@@ -26,7 +26,8 @@ per-group driver job submissions.
 Every group writes a per-partition lineage record (files-in/out, rows,
 bytes); a killed run resumes by skipping groups whose lineage exists. A
 resumed plan whose victims another run has rewritten since commits
-nothing (``completed_outputs``).
+nothing (``completed_outputs``), and a run whose snapshot is already in
+the history returns it and writes nothing (``completed_run``).
 """
 
 from __future__ import annotations
@@ -41,7 +42,7 @@ from pyspark.sql import functions as F
 
 from moonlink_spark.catalog.metadata import COMPACT_TARGET_BYTES, DataFile, norm_path
 from moonlink_spark.plans.physical import completed_outputs, read_bin_record, write_datafiles
-from moonlink_spark.table import MoonTable
+from moonlink_spark.table import MoonTable, completed_run
 
 
 @dataclass
@@ -149,6 +150,8 @@ def compact(
     lock_wait_seconds: float = 0.0,
 ) -> int | None:
     """Run compaction; returns the new snapshot id, or None if nothing to do.
+    A *run_id* that already committed returns its snapshot and writes
+    nothing (``completed_run``).
     With *lock_wait_seconds* > 0, waits for a concurrent merge/cluster to
     release the maintenance lock instead of raising MaintenanceInProgress.
     *max_concurrent_groups* is deprecated and ignored (passing it warns):
@@ -173,6 +176,9 @@ def _compact_locked(
 ) -> int | None:
     import time as _time
 
+    done = completed_run(table, "compact", run_id)
+    if done is not None:
+        return done.snapshot_id
     stage_t: dict[str, float] = {}
     _t0 = _time.time()
     plan = plan_compaction(table, config, run_id)
@@ -265,6 +271,7 @@ def _compact_locked(
                 binned,
                 data_dir=table.catalog.data_dir,
                 run_id=run_id,
+                key=table.key_columns[0],
                 num_bins=total_bins,
                 compression="zstd",
                 compression_level=4,

@@ -95,8 +95,9 @@ def expire_snapshots(table: MoonTable, retain_last: int = 3) -> list[int]:
 
 
 def _reachable_df(table: MoonTable) -> DataFrame | None:
-    """Every data/delete path referenced by any retained snapshot, as a
-    DISTRIBUTED DataFrame (manifest chunks parsed on executors)."""
+    """Every data, key-index and delete path referenced by any retained
+    snapshot, as a DISTRIBUTED DataFrame (manifest chunks parsed on
+    executors)."""
     meta = table.meta
     chunk_names: set[str] = set()
     for s in meta.snapshots:
@@ -105,12 +106,18 @@ def _reachable_df(table: MoonTable) -> DataFrame | None:
     if not chunk_names:
         return None
     paths = [os.path.join(table.catalog.metadata_dir, n) for n in sorted(chunk_names)]
-    # explicit single-field schema: skips the inference pass (a whole extra
-    # job over every chunk) and stays stable however the entry dicts evolve
-    raw = table.spark.read.schema("file_path string").json(paths, multiLine=True)
-    return raw.select(
-        F.regexp_replace(F.col("file_path"), "^file:(//)?", "").alias("path")
-    ).distinct()
+    # explicit schema: skips the inference pass (a whole extra job over
+    # every chunk) and stays stable however the entry dicts evolve; delete
+    # entries have no key_index, so theirs reads NULL
+    raw = table.spark.read.schema("file_path string, key_index string").json(
+        paths, multiLine=True
+    )
+    return (
+        raw.select(F.explode(F.array("file_path", "key_index")).alias("p"))
+        .filter(F.col("p").isNotNull())
+        .select(F.regexp_replace(F.col("p"), "^file:(//)?", "").alias("path"))
+        .distinct()
+    )
 
 
 def _listing_batches(data_dir: str):
@@ -172,7 +179,8 @@ def sweep_orphans(
     include_metadata: bool = True,
     older_than_seconds: float = 300.0,
 ) -> list[str]:
-    """Remove data/delete files not reachable from any retained snapshot.
+    """Remove data, key-index and delete files not reachable from any
+    retained snapshot.
 
     Two-phase: first call moves orphans into metadata/quarantine/; a later
     call with quarantine=False purges it (and deletes fresh orphans

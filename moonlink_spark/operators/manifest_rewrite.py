@@ -1,13 +1,15 @@
 """Manifest rewrite: coalesce manifest chunks + refresh per-file stats.
 
 Mirrors moonlink's manifest rewrite at commit (SURVEY.md §2 rows 15, 17, 21:
-data_file_manifest_manager.rs rolls manifests at 25k entries; index merge is
-moonlink's "merge many small metadata blobs" job — our manifest coalesce is
-the direct analog since Spark joins replace hash-file indexes).
+data_file_manifest_manager.rs rolls manifests at 25k entries). Moonlink's
+index merge folds many small per-file hash indexes into one; this engine's
+per-file index is the key-index sidecar (catalog/key_index.py), which no
+job merges yet, so optimize(mode="index") runs this manifest coalesce.
 
 Stats recomputation reads parquet FOOTERS only (row-group min/max), as a
 distributed Spark job over the file list — the same trick as
-parquet_stats_utils.rs:34-120 but fanned out across executors.
+parquet_stats_utils.rs:34-120 but fanned out across executors. It changes
+stats, row counts and sizes only: every entry keeps its key_index.
 """
 
 from __future__ import annotations

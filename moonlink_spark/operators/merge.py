@@ -9,26 +9,28 @@ Reference semantics being re-created (SURVEY.md §2 rows 2-3, 10-12; §3.2):
   - U is a FULL-ROW replace; I on an existing key upserts; D on a missing
     key is a no-op (delete_if_exists, mooncake_table.rs:1286-1288).
 
-Spark-first design: moonlink resolves delete positions by probing its
-bucketed hash file-index (persisted_bucket_hash_map.rs) — here *the join is
-the index*: a positional scan of the manifest-pruned target files reads ONLY
-the key column plus parquet metadata (_metadata.file_path/row_index; Catalyst
-prunes every payload column, so the probe never touches image bytes) and is
-semi-joined with the deduped change keys (broadcast below a byte gate). The
-probe is ONE Spark action that collects (file_path, pos) to the driver. It
-does not anti-join the existing deletion vectors, so it returns the live row
-of each batch key plus any dead versions of those keys that no rewrite has
-removed yet: its size is bounded by the batch and the batch keys' history,
-never by the table. The driver drops the positions the snapshot's deletion
-vectors already set (liveness), folds the rest into one bitmap row per
-target file (fold_live_positions) and writes them as one deletion-vector
-file (the puffin-DV analog) through MoonTable.write_position_deletes, the
-writer every DV file goes through. Surviving change rows become fresh data
-files. One atomic snapshot commit publishes both.
+Delete positions come from an index, as in moonlink, which probes a
+persisted hash index per data file (persisted_bucket_hash_map.rs). Here
+every data file has a key-index sidecar (catalog/key_index.py): its (key,
+pos) rows sorted by key. The LWW head's one Spark action also collects the
+batch keys. The driver then reads, from the sidecars of the manifest-pruned
+target files, only the row groups whose key range holds a batch key, and
+keeps the (file_path, pos) of the rows whose key is a batch key. No Spark
+job reads target data. The lookup does not consult the existing deletion
+vectors, so it returns the live row of each batch key plus any dead versions
+of those keys that no rewrite has removed yet. The driver drops the
+positions the snapshot's deletion vectors already set (liveness), folds the
+rest into one bitmap row per target file (fold_live_positions) and writes
+them as one deletion-vector file (the puffin-DV analog) through
+MoonTable.write_position_deletes, the writer every DV file goes through.
+Surviving change rows become fresh data files, each with its sidecar. One
+atomic snapshot commit publishes both.
 
-At 100 TB scale: the target-side scan is embarrassingly parallel and
-column-pruned; the only shuffle is on the (small) change batch, none on the
-delete side; skewed keys are impossible post-LWW (keys are unique).
+Driver bounds: the batch keys, batch rows × key bytes; per probed file, its
+sidecar footer plus min(sidecar bytes, row groups hit × row-group bytes);
+the matched positions, bounded by the batch and the batch keys' history,
+never by the table. The only shuffle is on the change batch; skewed keys
+are impossible post-LWW (keys are unique).
 """
 
 from __future__ import annotations
@@ -38,17 +40,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from moonlink_spark.catalog import key_index
 from moonlink_spark.catalog.metadata import norm_path
 from moonlink_spark.plans.physical import hash_bin, write_datafiles
-from moonlink_spark.table import MoonTable, fold_live_positions
-
-# broadcast the deduped change-key projection below this ESTIMATED size —
-# gate on bytes, not rows: 5M wide string keys would be a multi-hundred-MB
-# broadcast. Above the gate the probe falls back to a shuffle join (AQE picks
-# sort-merge / shuffled-hash and handles skew).
-_BROADCAST_CHANGE_BYTES = 64 * 1024 * 1024
-# per-key overhead on top of the raw key bytes (UnsafeRow + hash relation)
-_BROADCAST_KEY_OVERHEAD = 32
+from moonlink_spark.table import MoonTable, completed_run, fold_live_positions
 
 
 @dataclass
@@ -107,20 +102,16 @@ def last_writer_wins(changes: DataFrame, key: str) -> DataFrame:
 
 
 def _completed_run(table: MoonTable, run_id: str) -> MergeResult | None:
-    """exactly-once per run_id: a retry after a successful commit must not
-    re-apply (it would probe its own committed output files). Same pattern
-    as streaming epoch replay / Iceberg txn-version checks; the retry
-    window must precede snapshot expiry, like moonlink's WAL truncation
-    horizon (wal.rs truncates only ≤ the iceberg-persisted LSN)."""
-    for s in table.snapshots():
-        if s.operation == "merge" and s.summary.get("run_id") == run_id:
-            return MergeResult(
-                snapshot_id=s.snapshot_id,
-                inserted_rows=int(s.summary.get("added-records", 0)),
-                deleted_positions=int(s.summary.get("matched-keys", 0)),
-                matched_keys=int(s.summary.get("matched-keys", 0)),
-            )
-    return None
+    """The result of the merge *run_id* already committed (completed_run)."""
+    s = completed_run(table, "merge", run_id)
+    if s is None:
+        return None
+    return MergeResult(
+        snapshot_id=s.snapshot_id,
+        inserted_rows=int(s.summary.get("added-records", 0)),
+        deleted_positions=int(s.summary.get("matched-keys", 0)),
+        matched_keys=int(s.summary.get("matched-keys", 0)),
+    )
 
 
 def merge_into(
@@ -182,19 +173,20 @@ def _merge_locked(
     final = last_writer_wins(changes, key)
     final.cache()
     try:
-        # ONE action materializes the cache AND yields every scalar the plan
+        # ONE action materializes the cache AND yields everything the plan
         # needs: row count, commit-LSN baseline (mooncake_table.rs:1290-1312:
         # the snapshot's flush_lsn = highest lsn applied, consumed by
-        # read-at-LSN scans), broadcast byte estimate, batch key bounds for
-        # manifest pruning, and the delete-row count (insert count = n - d,
-        # saving a separate inserts.count() job)
+        # read-at-LSN scans), batch key bounds for manifest pruning, the
+        # delete-row count (insert count = n - d, saving a separate
+        # inserts.count() job) and the batch keys for the index lookup
+        # (collect_list skips null keys, which match nothing)
         head = final.agg(
             F.count("*").alias("n"),
             F.max("lsn").alias("mx"),
-            F.avg(F.length(F.col(key).cast("string"))).alias("keylen"),
             F.min(key).alias("klo"),
             F.max(key).alias("khi"),
             F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("nd"),
+            F.collect_list(key).alias("keys"),
         ).first()
         n_final = int(head["n"])
         # monotonic clamp: an empty batch (mx None -> parent) or an
@@ -206,17 +198,12 @@ def _merge_locked(
         stage_t["lww_head_sec"] = round(_time.time() - _t0, 3)
         _t0 = _time.time()
 
-        # --- position resolution: join IS the index (hash_index.rs analog) ----
-        keys_df = final.select(key)
-        est_bytes = n_final * (float(head["keylen"] or 8) + _BROADCAST_KEY_OVERHEAD)
-        if est_bytes <= _BROADCAST_CHANGE_BYTES:
-            keys_df = F.broadcast(keys_df)
-
+        # --- position resolution: the key-index sidecars (hash_index.rs analog)
         # manifest-stats file pruning: a file whose [min,max] key range
         # can't intersect the batch's key range can't hold a matching row —
         # skip probing it entirely (the moonlink analog: per-file min/max
         # Datum stats gating the index probe; on a key-clustered table this
-        # turns a full-table probe into a few files). Data files, probe
+        # turns a full-table lookup into a few files). Data files, probed
         # files and prior deletion vectors all come from one pinned snapshot.
         planned_sid = table.current_snapshot_id()
         all_files = table.data_files(planned_sid)
@@ -231,13 +218,7 @@ def _merge_locked(
         new_delete_files: list = []
         per_file_deletes: dict[str, int] = {}
         if probe_files:
-            positions = (
-                table._read_data(probe_files, with_position=True)
-                .select(key, "_fp", "_pos")
-                .join(keys_df, key, "left_semi")
-                .select(F.col("_fp").alias("file_path"), F.col("_pos").alias("pos"))
-                .toArrow()
-            )
+            positions = key_index.lookup(probe_files, head["keys"])
             touched = set(positions.column("file_path").to_pylist())
             prior = table.read_bitmap_rows(table.delete_files(planned_sid), touched)
             bitmaps = fold_live_positions(positions, prior)
@@ -276,6 +257,7 @@ def _merge_locked(
                 binned,
                 data_dir=table.catalog.data_dir,
                 run_id=run_id,
+                key=key,
                 num_bins=nb,
                 compression="snappy",
                 lineage_dir=ins_lineage,
@@ -335,8 +317,8 @@ def _merge_locked(
     )
     stage_t["commit_sec"] = round(_time.time() - _t0, 3)
     # stage split in lineage (same observability as cluster's metrics.json):
-    # lww_head = LWW collapse + one-action scalars, probe = position
-    # resolution join, delete/insert writes, commit = manifest publish
+    # lww_head = LWW collapse + one-action scalars and keys, probe = index
+    # lookup + DV write, insert write, commit = manifest publish
     os.makedirs(lineage_root, exist_ok=True)
     with open(os.path.join(lineage_root, "metrics.json"), "w") as fh:
         import json as _json

@@ -2,8 +2,9 @@
 
 Mirrors moonlink's optimize_table API (moonlink_backend/src/lib.rs:357-372;
 REST rest_api.rs:760-771): mode "data" -> best-effort compaction, "index" ->
-metadata merge (manifest rewrite — Spark joins replace moonlink's hash-file
-indexes, so the index-merge analog is manifest coalescing), "full" -> force
+metadata merge (manifest rewrite; the per-file key-index sidecars that stand
+in for moonlink's hash-file indexes are not merged — merges and point reads
+open one per candidate file), "full" -> force
 compaction of everything (ForceFull thresholds: min 2 files, size ∞, any
 delete ratio — snapshot_maintenance.rs:66-67), optionally clustered.
 """

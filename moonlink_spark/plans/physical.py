@@ -7,7 +7,10 @@ file, and the per-bin resume record.
   ``pyarrow.compute`` in the same pass — the analog of moonlink computing
   Iceberg Datum stats from parquet footers (reference:
   parquet_stats_utils.rs:34-120) without a second read. Binary payloads stay
-  in Arrow buffers from the shuffle fetch to the parquet encoder.
+  in Arrow buffers from the shuffle fetch to the parquet encoder. The task
+  also keeps each file's key column and, on close, writes the file's
+  key-index sidecar (``catalog/key_index.py``) before the data file is
+  renamed into place, so no data file exists without one.
 - ``write_datafiles`` picks the file from an explicit integer ``_bin``
   assigned by the *planner* (bin-packing for compaction, zkey range for
   clustering, hash for merge inserts); ``repartition(num_bins,
@@ -19,9 +22,9 @@ file, and the per-bin resume record.
 - With a ``lineage_dir`` each bin file is recorded as ``bin-NNNNN.json``;
   a re-run under the same run_id skips the bins ``read_bin_record`` can
   reuse (reference intent: WAL replay, wal.rs:1117-1334). A record whose
-  file is gone (an orphan sweep removed a killed run's uncommitted output)
-  is not reusable, so that bin is written again. A resumed plan whose
-  victims another run has rewritten since reuses no bin
+  file or sidecar is gone (an orphan sweep removed a killed run's
+  uncommitted output) is not reusable, so that bin is written again. A
+  resumed plan whose victims another run has rewritten since reuses no bin
   (``completed_outputs``).
 
 On a real cluster ``data_dir`` is a shared filesystem / object store mount;
@@ -45,7 +48,8 @@ from pyspark.sql import DataFrame, functions as F
 from moonlink_spark.catalog.metadata import DataFile, norm_path
 
 LINEAGE_SCHEMA = (
-    "bin int, file_path string, record_count long, file_size_bytes long, stats string"
+    "bin int, file_path string, record_count long, file_size_bytes long, stats string, "
+    "key_index string"
 )
 
 _STATLESS_TYPES = {"binary"}  # no min/max for opaque payload columns
@@ -83,6 +87,7 @@ def _datafile(rec) -> DataFile:
         record_count=int(rec["record_count"]),
         file_size_bytes=int(rec["file_size_bytes"]),
         stats=json.loads(rec["stats"]),
+        key_index=rec["key_index"],
     )
 
 
@@ -94,6 +99,7 @@ def _record(b: int, f: DataFile) -> dict:
         "record_count": f.record_count,
         "file_size_bytes": f.file_size_bytes,
         "stats": json.dumps(f.stats),
+        "key_index": f.key_index,
     }
 
 
@@ -103,14 +109,14 @@ def _bin_record_path(lineage_dir: str, b: int) -> str:
 
 def read_bin_record(lineage_dir: str, b: int) -> DataFile | None:
     """The file a previous attempt recorded for bin *b* under *lineage_dir*,
-    or None when there is no record or the recorded file no longer exists
-    (the bin must then be written again)."""
+    or None when there is no record or the recorded file or its key-index
+    sidecar no longer exists (the bin must then be written again)."""
     try:
         with open(_bin_record_path(lineage_dir, b)) as f:
             rec = json.load(f)
     except FileNotFoundError:
         return None
-    if not os.path.exists(rec["file_path"]):
+    if not (os.path.exists(rec["file_path"]) and os.path.exists(rec["key_index"])):
         return None
     return _datafile(rec)
 
@@ -146,15 +152,23 @@ def completed_outputs(lineage_dir: str, live: dict[str, DataFile]) -> list[DataF
 
 class _OpenFile:
     """One parquet file a write task is streaming: rows go to
-    ``<path><tmp_suffix>`` and the per-column stats accumulate as they pass."""
+    ``<path><tmp_suffix>`` and the per-column stats accumulate as they pass.
+    With a *key* column it is a data file: the key values are kept too, and
+    close() writes them as the file's key-index sidecar."""
 
-    def __init__(self, path: str, b: int, tmp_suffix: str, schema, codec, level, statless):
+    def __init__(
+        self, path: str, b: int, tmp_suffix: str, schema, codec, level, statless,
+        key: str | None = None,
+    ):
         import pyarrow.parquet as pq
 
         self.path = path
         self.bin = b
         self.tmp = path + tmp_suffix
+        self.tmp_suffix = tmp_suffix
         self.statless = statless
+        self.key = key
+        self.keys: list = []
         self.count = 0
         self.stats: dict[str, dict] = {}
         self.writer = pq.ParquetWriter(
@@ -167,6 +181,8 @@ class _OpenFile:
 
         self.writer.write_batch(rb)
         self.count += len(rb)
+        if self.key is not None:
+            self.keys.append(rb.column(self.key))
         for name, col in zip(rb.schema.names, rb.columns):
             st = self.stats.setdefault(name, {"min": None, "max": None, "null_count": 0})
             st["null_count"] += col.null_count
@@ -187,9 +203,18 @@ class _OpenFile:
                 st["max"] = mx
 
     def close(self, lineage_dir: str | None) -> dict:
-        """Finish the file, rename it into place and return its lineage
-        record (also written atomically under *lineage_dir* when given)."""
+        """Finish the file and its key-index sidecar, rename them into place
+        and return its lineage record (also written atomically under
+        *lineage_dir* when given)."""
+        import pyarrow as pa
+
+        from moonlink_spark.catalog.key_index import key_index_path, write_key_index
+
         self.writer.close()
+        index = None
+        if self.key is not None:
+            index = key_index_path(self.path, os.path.dirname(self.path))
+            write_key_index(pa.chunked_array(self.keys), index, self.tmp_suffix)
         os.rename(self.tmp, self.path)
         clean = {
             c: {
@@ -207,6 +232,7 @@ class _OpenFile:
                 record_count=self.count,
                 file_size_bytes=os.path.getsize(self.path),
                 stats=clean,
+                key_index=index,
             ),
         )
         if lineage_dir is not None:
@@ -222,6 +248,7 @@ def _write(
     *,
     data_dir: str,
     run_id: str,
+    key: str,
     compression: str,
     compression_level: int | None,
     rows_per_file: int | None = None,
@@ -229,7 +256,8 @@ def _write(
 ) -> list[DataFile]:
     """The writer core. With *rows_per_file* None, *df* is partitioned by its
     int ``_bin`` column and every bin becomes one file; otherwise every
-    partition rolls over to a new file each *rows_per_file* rows."""
+    partition rolls over to a new file each *rows_per_file* rows. Every file
+    gets a key-index sidecar over the *key* column."""
     import pyspark.sql.types as T
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -240,6 +268,8 @@ def _write(
     arrow_schema = to_arrow_schema(T.StructType(payload_fields))
     out_schema = to_arrow_schema(T.DataType.fromDDL(LINEAGE_SCHEMA))
     payload_cols = [f.name for f in payload_fields]
+    if key not in payload_cols:
+        raise ValueError(f"key column {key!r} is not among the written columns {payload_cols}")
     binned = rows_per_file is None
     limit = sys.maxsize if binned else rows_per_file  # a bin never rolls over
 
@@ -298,7 +328,8 @@ def _write(
                 name = f"{run_id}-p{b:05d}-{seq:04d}.parquet"
                 seq += 1
             return _OpenFile(
-                os.path.join(data_dir, name), b, tmp_suffix, arrow_schema, codec, level, statless
+                os.path.join(data_dir, name), b, tmp_suffix, arrow_schema, codec, level, statless,
+                key,
             )
 
         for batch in batches:
@@ -335,6 +366,7 @@ def write_datafiles(
     *,
     data_dir: str,
     run_id: str,
+    key: str,
     num_bins: int,
     compression: str = "snappy",
     compression_level: int | None = None,
@@ -342,10 +374,11 @@ def write_datafiles(
     lineage_dir: str | None = None,
 ) -> list[DataFile]:
     """Write *df* (which must carry an int ``_bin`` column) as one parquet
-    file per bin under *data_dir*; return DataFile entries with stats.
+    file per bin under *data_dir*, each with its key-index sidecar over the
+    table's *key* column; return DataFile entries with stats.
 
     Skips bins whose record under *lineage_dir* still names an existing file
-    (idempotent resume); any other bin is written again."""
+    and sidecar (idempotent resume); any other bin is written again."""
     if lineage_dir:
         os.makedirs(lineage_dir, exist_ok=True)
     part = df.repartition(max(num_bins, 1), "_bin")
@@ -355,6 +388,7 @@ def write_datafiles(
         part,
         data_dir=data_dir,
         run_id=run_id,
+        key=key,
         compression=compression,
         compression_level=compression_level,
         lineage_dir=lineage_dir,
@@ -366,6 +400,7 @@ def write_datafiles_rolling(
     *,
     data_dir: str,
     run_id: str,
+    key: str,
     rows_per_file: int,
     compression: str = "snappy",
     compression_level: int | None = None,
@@ -377,7 +412,8 @@ def write_datafiles_rolling(
     (the bin-count path needs a df.count() first — the upstream, e.g. a
     generator or a join, would execute twice).
 
-    File names are {run_id}-p{partition}-{seq}; Spark's task-retry semantics
+    File names are {run_id}-p{partition}-{seq}, each with its key-index
+    sidecar over the table's *key* column; Spark's task-retry semantics
     keep this safe (a re-executed task rewrites the same names via
     .inprogress + rename).
     """
@@ -385,6 +421,7 @@ def write_datafiles_rolling(
         df,
         data_dir=data_dir,
         run_id=run_id,
+        key=key,
         compression=compression,
         compression_level=compression_level,
         rows_per_file=rows_per_file,

@@ -375,6 +375,7 @@ class MoonTable:
                 df,
                 data_dir=self.catalog.data_dir,
                 run_id=run_id,
+                key=self.key_columns[0],
                 num_bins=num_bins,
                 compression="snappy",
             )
@@ -385,6 +386,7 @@ class MoonTable:
                 df,
                 data_dir=self.catalog.data_dir,
                 run_id=run_id,
+                key=self.key_columns[0],
                 rows_per_file=rows_per_file,
                 compression="snappy",
             )
@@ -457,7 +459,10 @@ class MoonTable:
         validation of row contents (moonlink's bulk ingest loads files
         verbatim, batch_ingestion.rs:20-166). Stats and row counts come from
         a distributed parquet-footer read, so table-level planning
-        (compaction selection, manifest stats) works immediately.
+        (compaction selection, manifest stats) works immediately. The same
+        job reads each file's key column and writes its key-index sidecar
+        into the table's data directory, so a merge or a point read finds
+        keys in foreign files as in the table's own.
         """
         from moonlink_spark.catalog.stats import footer_stats
 
@@ -467,13 +472,14 @@ class MoonTable:
         dup = existing_paths & set(norm)
         if dup:
             raise ValueError(f"files already registered: {sorted(dup)[:3]}...")
-        got = footer_stats(self.spark, norm)
+        got = footer_stats(self.spark, norm, key=self.key_columns[0], index_dir=self.catalog.data_dir)
         new_files = [
             DataFile(
                 file_path=p,
                 record_count=got[p]["record_count"],
                 file_size_bytes=got[p]["file_size_bytes"],
                 stats=got[p]["stats"],
+                key_index=got[p]["key_index"],
             )
             for p in norm
         ]
@@ -1031,7 +1037,11 @@ class MoonTable:
         rewrite, each file covers a tight key range, so a range predicate
         prunes most files here before Spark ever lists them
         (the reference analog: per-file Datum stats gating the index probe,
-        parquet_stats_utils.rs)."""
+        parquet_stats_utils.rs).
+
+        An equality bound on the key column (lo == hi, a point read) then
+        keeps only the survivors whose key-index sidecar holds the key, dead
+        versions included (the scan's deletion vectors drop those rows)."""
         out = []
         for f in self.data_files(snapshot_id):
             keep = True
@@ -1045,6 +1055,12 @@ class MoonTable:
                     break
             if keep:
                 out.append(f)
+        lo, hi = bounds.get(self.key_columns[0], (None, None))
+        if lo is not None and lo == hi:
+            from moonlink_spark.catalog.key_index import lookup
+
+            holding = set(lookup(out, [lo]).column("file_path").to_pylist())
+            out = [f for f in out if norm_path(f.file_path) in holding]
         return out
 
     def create_or_replace_view(self, name: str, snapshot_id: int | None = None) -> None:
@@ -1066,13 +1082,14 @@ class MoonTable:
 
     # ------------------------------------------------------------- utils
     def all_reachable_paths(self) -> set[str]:
-        """Every data/delete file referenced by ANY retained snapshot (used
-        by the orphan sweep)."""
+        """Every data file, key-index sidecar and delete file referenced by
+        ANY retained snapshot (used by the orphan sweep)."""
         out: set[str] = set()
         meta = self.meta
         for s in meta.snapshots:
             for f in read_data_manifests(self.catalog.metadata_dir, s.manifests):
                 out.add(norm_path(f.file_path))
+                out.add(norm_path(f.key_index))
             for d in read_delete_manifests(self.catalog.metadata_dir, s.delete_manifests):
                 out.add(norm_path(d.file_path))
         return out
@@ -1127,6 +1144,22 @@ class MoonTable:
             file_size_bytes=rec["file_size_bytes"],
             position_count=sum(bitmaps.column("n_positions").to_pylist()),
         )
+
+
+def completed_run(table: MoonTable, op: str, run_id: str) -> Snapshot | None:
+    """The snapshot a run of *op* ("merge", "compact", "cluster") committed
+    under *run_id*, or None: exactly-once per run_id. A retry of a completed
+    run returns that snapshot and writes nothing: a merge would probe its
+    own output, and a rewrite would write its committed deletion-vector
+    file again, changing a file that a retained snapshot references. Same
+    pattern as streaming epoch replay / Iceberg txn-version checks; the
+    retry window must precede snapshot expiry, like moonlink's WAL
+    truncation horizon (wal.rs truncates only ≤ the iceberg-persisted
+    LSN)."""
+    for s in table.snapshots():
+        if s.operation == op and s.summary.get("run_id") == run_id:
+            return s
+    return None
 
 
 def _check_bitmap(dfiles: list[DeleteFile]) -> None:

@@ -68,6 +68,7 @@ def test_advance_branch_fast_forward_only(spark, tmp_path):
         _suffixed(spark, 10, 42, "-w2"),
         data_dir=t.catalog.data_dir,
         run_id="loser",
+        key="image_id",
         rows_per_file=131_072,
     )
     loser_sid = t.commit_snapshot(

@@ -80,6 +80,34 @@ def test_manifest_scan_and_merge_launch_no_listing_job(spark, tmp_path):
     assert rows["k0010"] == 1010 and rows["k0011"] == 11
 
 
+def test_merge_runs_five_jobs_and_reads_no_target_file(spark, tmp_path):
+    """The merge finds its delete positions in the key-index sidecars on the
+    driver: at most 5 Spark jobs (the LWW head's and the insert write's),
+    and none of them reads a target data file. Every target file is moved
+    away while the merge runs, so a stage that read one would fail."""
+    t = _many_file_table(spark, str(tmp_path / "t"))
+    ch = spark.range(0, N_FILES * 10, 10).select(
+        F.lit("U").alias("op"),
+        (F.col("id") + 100).cast("long").alias("lsn"),
+        F.format_string("k%04d", F.col("id")).alias("image_id"),
+        (F.col("id") + 1000).alias("v"),
+    )
+    targets = [f.file_path for f in t.data_files()]
+    for p in targets:
+        os.rename(p, p + ".away")
+    try:
+        res = []
+        jobs = _jobs_in_group(spark, "merge-jobs", lambda: res.append(merge_into(t, ch, run_id="m1")))
+    finally:
+        for p in targets:
+            os.rename(p + ".away", p)
+    assert len(jobs) <= 5, [j.jobId for j in jobs]
+    assert res[0].matched_keys == N_FILES
+    rows = {r["image_id"]: r["v"] for r in t.scan().collect()}
+    assert len(rows) == N_FILES * 10
+    assert rows["k0010"] == 1010 and rows["k0011"] == 11
+
+
 def _probe_worker_zip_reads(zip_path: str):
     """Run inside a Python worker: report whether the daemon's
     invalidate_caches is installed, then which archives

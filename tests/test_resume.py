@@ -215,3 +215,46 @@ def test_merge_writes_partition_lineage(spark, tmp_table_root):
     with open(os.path.join(root, "inserts", ins[0])) as f:
         rec = json.load(f)
     assert os.path.exists(rec["file_path"]) and rec["record_count"] > 0
+
+
+def _dv_bytes(table, sid) -> dict[str, bytes]:
+    out = {}
+    for d in table.delete_files(sid):
+        with open(d.file_path, "rb") as f:
+            out[d.file_path] = f.read()
+    return out
+
+
+def _rerun_changes_nothing(spark, table, rerun, sid):
+    """A merge lands after the run that committed *sid*; *rerun* (the same
+    run again) must return *sid* and leave every file *sid* references,
+    and so its scan, as they were."""
+    rows, dvs = table.scan(snapshot_id=sid).count(), _dv_bytes(table, sid)
+    assert dvs  # the run carried deletion vectors over to its survivors
+    merge_into(
+        table, generate_changes_df(spark, 300, 60, seed=42, lsn_start=50_000), run_id="m2"
+    )
+    head = table.current_snapshot_id()
+    got = rerun()
+    assert table.scan(snapshot_id=sid).count() == rows
+    assert _dv_bytes(table, sid) == dvs
+    assert got == sid and table.current_snapshot_id() == head
+
+
+def test_rerun_of_a_completed_compaction_writes_nothing(spark, tmp_table_root):
+    table = create_images_table(spark, tmp_table_root, 300, seed=42)
+    merge_into(table, generate_changes_df(spark, 300, 60, seed=42), run_id="m1")
+    cfg = CompactionConfig(mode="force_regular", max_files=2)
+    sid = compact(table, cfg, run_id="c1")
+    _rerun_changes_nothing(spark, table, lambda: compact(table, cfg, run_id="c1"), sid)
+
+
+def test_rerun_of_a_completed_cluster_writes_nothing(spark, tmp_table_root):
+    table = create_images_table(spark, tmp_table_root, 300, seed=42)
+    by = ["phash", "w", "h"]
+    cluster(table, by=by, run_id="z0")
+    merge_into(table, generate_changes_df(spark, 300, 60, seed=42), run_id="m1")
+    sid = cluster(table, by=by, run_id="z1", scope="incremental")
+    _rerun_changes_nothing(
+        spark, table, lambda: cluster(table, by=by, run_id="z1", scope="incremental"), sid
+    )

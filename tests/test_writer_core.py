@@ -27,10 +27,11 @@ def test_binned_and_rolling_writers_record_equal_stats(spark, tmp_path):
         df.withColumn("_bin", F.lit(0)),
         data_dir=str(tmp_path),
         run_id="b1",
+        key="image_id",
         num_bins=1,
     )
     rolling = write_datafiles_rolling(
-        df, data_dir=str(tmp_path), run_id="r1", rows_per_file=10_000
+        df, data_dir=str(tmp_path), run_id="r1", key="image_id", rows_per_file=10_000
     )
     assert len(binned) == len(rolling) == 1
     assert binned[0].record_count == rolling[0].record_count == 300
@@ -43,6 +44,7 @@ def test_rolling_writer_rolls_over_within_a_partition(spark, tmp_path):
         generate_images_df(spark, 250, seed=5).coalesce(1),
         data_dir=str(tmp_path),
         run_id="r2",
+        key="image_id",
         rows_per_file=100,
     )
     assert [os.path.basename(f.file_path) for f in files] == [
@@ -60,6 +62,7 @@ def test_resumed_write_rewrites_bin_whose_file_is_gone(spark, tmp_path):
     kw = dict(
         data_dir=str(tmp_path),
         run_id="w1",
+        key="image_id",
         num_bins=4,
         lineage_dir=str(tmp_path / "lineage"),
     )
