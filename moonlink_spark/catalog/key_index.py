@@ -98,8 +98,6 @@ def lookup(files: list, keys: list) -> "pa.Table":
     paths: list[str] = []
     positions: list = []
     for f in files if wanted else []:
-        if f.key_index is None:
-            raise ValueError(f"data file {f.file_path} has no key-index sidecar")
         pf = pq.ParquetFile(f.key_index)
         md = pf.metadata
         hit = [
