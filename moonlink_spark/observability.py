@@ -2,9 +2,9 @@
 
 The reference ships per-stage latency histograms for its maintenance
 pipeline (observability/iceberg_persistence.rs:61-81). Here every
-maintenance run already writes stage timings into its lineage record
-(merge/cluster: lineage/<run>/metrics.json `stage_seconds`; compaction:
-lineage/<run>/stage_metrics.json). This module aggregates them across
+maintenance run already writes stage timings into its run record
+(lineage/<run>/metrics.json `stage_seconds`; merge, compaction and
+clustering alike). This module aggregates them across
 runs into per-op per-stage quantiles and persists the rollup under
 metadata/metrics/ so schedulers (warehouse sweep, cron maintain jobs) can
 watch stage latency drift without scraping lineage.
@@ -29,24 +29,19 @@ def collect_stage_metrics(table: MoonTable) -> list[dict]:
     if not os.path.isdir(lineage_root):
         return out
     for run_id in sorted(os.listdir(lineage_root)):
-        rd = os.path.join(lineage_root, run_id)
-        for name in ("metrics.json", "stage_metrics.json"):
-            p = os.path.join(rd, name)
-            if not os.path.exists(p):
-                continue
-            try:
-                with open(p) as f:
-                    rec = json.load(f)
-            except (json.JSONDecodeError, OSError):
-                continue
-            if isinstance(rec, dict) and rec.get("stage_seconds"):
-                out.append(
-                    {
-                        "op": rec.get("op", "unknown"),
-                        "run_id": run_id,
-                        "stage_seconds": rec["stage_seconds"],
-                    }
-                )
+        try:
+            with open(os.path.join(lineage_root, run_id, "metrics.json")) as f:
+                rec = json.load(f)
+        except (json.JSONDecodeError, OSError):
+            continue
+        if rec.get("stage_seconds"):
+            out.append(
+                {
+                    "op": rec.get("op", "unknown"),
+                    "run_id": run_id,
+                    "stage_seconds": rec["stage_seconds"],
+                }
+            )
     return out
 
 

@@ -20,25 +20,30 @@ At 100 TB: one full shuffle is unavoidable for a global re-cluster — this is
 the minimum-shuffle plan (no extra pass for sorting: sortWithinPartitions
 rides the shuffle). Skew is bounded by the salt factors; AQE handles
 residual imbalance.
+
+The shared steps (resume check, victim read with deletes applied, write,
+DV carry-over, commit, run record) live in ``operators/rewrite.py``, one
+core with compaction: a killed run resumes only while its victims and the
+table's delete files are unchanged, re-reads its victims and writes only
+the bins its earlier attempt did not finish.
 """
 
 from __future__ import annotations
 
-import json
-import os
-import time
+import itertools
 import uuid
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import functions as F
 
-from moonlink_spark.catalog.metadata import COMPACT_TARGET_BYTES, norm_path
+from moonlink_spark.catalog.metadata import COMPACT_TARGET_BYTES
 from moonlink_spark.functions.zorder import DEFAULT_BITS, curve_key
-from moonlink_spark.plans.physical import completed_outputs, read_bin_records, write_datafiles
-from moonlink_spark.table import MoonTable, completed_run
+from moonlink_spark.operators.rewrite import rewrite
+from moonlink_spark.plans.physical import write_datafiles
+from moonlink_spark.table import MoonTable
 
 # sampled keys for boundary estimation: ~500 keys/bin at 128 bins — plenty
 # for quantile boundaries, and the driver-side quantile stays trivially fast
@@ -68,19 +73,36 @@ class ClusterPlan:
     boundaries: list[int]  # curve-key range boundaries (len = base_bins - 1)
     salts: list[int]  # per base-bin salt factor (≥1)
     offsets: list[int]  # cumulative salted-bin offsets (len = base_bins + 1)
-    victims: list[str] = field(default_factory=list)
     # curve="align" only: sorted distinct value tuples of `by` (one base bin
     # per tuple; the value's index IS the curve key)
     values: list[list] | None = None
+    bits: int = DEFAULT_BITS  # per-dimension quantization of the curve key
+    scope: str = "full"  # full | incremental (which files are victims)
 
-    def to_json(self) -> str:
-        return json.dumps(self.__dict__)
+    positions = False
+    sort_within = ["_zkey"]
 
-    @staticmethod
-    def from_json(s: str) -> "ClusterPlan":
-        d = json.loads(s)
-        d["bounds"] = [tuple(b) for b in d["bounds"]]
-        return ClusterPlan(**d)
+    @property
+    def cluster_by(self) -> str:
+        return self.curve
+
+    def bins(self, df, key: str):
+        # _fp/_pos, read only to apply deletes, are not shuffled
+        return (
+            assign_keys_and_bins(df.drop("_fp", "_pos"), self, key_col=key, bits=self.bits),
+            int(self.offsets[-1]),
+        )
+
+    def summary(self) -> dict:
+        return {
+            "curve": self.curve,
+            "by": self.by,
+            "scope": self.scope,
+            "salted-bins": int(sum(1 for s in self.salts if s > 1)),
+        }
+
+    def extras(self) -> dict:
+        return {"salts": self.salts}
 
 
 def _column_bounds(table: MoonTable, files, by: list[str]) -> list[tuple[float, float]]:
@@ -149,20 +171,18 @@ def _align_key_cols(by: list[str], schema) -> list[tuple[str, object]]:
 
 def _plan_align(
     table: MoonTable,
-    run_id: str,
     by: list[str],
     files,
-    victims: list[str],
-    total_live: int,
-    total_rows: int,
+    bytes_per_row: float,
     target_bytes: int,
-) -> ClusterPlan:
+) -> tuple[list[list], list[int]]:
     """curve="align" plan: one base bin per DISTINCT value tuple of *by*
     (categorical partition columns — fmt, lang, date...), so every output
     file holds exactly ONE value per column. That per-file alignment is the
     precondition for ``export_iceberg(partition_by=...)``'s stats-driven
     identity partition spec: after an align rewrite, every file's min==max
-    on the by columns and the export is zero-rewrite.
+    on the by columns and the export is zero-rewrite. Returns the sorted
+    value tuples and their salt factors.
 
     One aggregation job (groupBy(by).count() over the victims — a map-side
     combine then one small shuffle); the driver holds one row per distinct
@@ -198,26 +218,11 @@ def _plan_align(
             )
     rows = sorted(counts, key=lambda r: tuple(r[c] for c in key_names))
     values = [[r[c] for c in key_names] for r in rows]
-    n = max(1, len(values))
-    bytes_per_row = total_live / total_rows
     salts = [
         max(1, int(np.ceil(r["count"] * bytes_per_row / target_bytes)))
         for r in rows
     ] or [1]
-    offsets = [0]
-    for s in salts:
-        offsets.append(offsets[-1] + s)
-    return ClusterPlan(
-        run_id=run_id,
-        curve="align",
-        by=list(by),
-        bounds=[],
-        boundaries=list(range(1, n)),
-        salts=salts,
-        offsets=offsets,
-        victims=victims,
-        values=values,
-    )
+    return values, salts
 
 
 def _plan(
@@ -227,110 +232,78 @@ def _plan(
     curve: str,
     target_bytes: int,
     bits: int,
+    files=None,
     scope: str = "full",
-) -> ClusterPlan | None:
-    lineage_dir = os.path.join(table.catalog.metadata_dir, "lineage", run_id)
-    plan_path = os.path.join(lineage_dir, "plan.json")
-    if os.path.exists(plan_path):
-        with open(plan_path) as f:
-            return ClusterPlan.from_json(f.read())
-
+) -> ClusterPlan:
+    """The clustering plan for rewriting *files* (default: every data file)."""
     all_files = table.data_files()
-    if scope == "incremental":
-        # only files not already laid out on this curve (fresh appends /
-        # merge inserts), plus delete-heavy clustered files whose rewrite
-        # is due anyway — the 100 TB answer to "absorb a day of appends
-        # without re-shuffling the whole table"
-        files = [
-            f
-            for f in all_files
-            if f.cluster_by != curve
-            or (f.record_count > 0 and f.deleted_count / f.record_count >= 0.5)
-        ]
-        if not files:
-            return None
-    else:
-        files = all_files
-    victims = [norm_path(f.file_path) for f in files]
+    files = all_files if files is None else files
     total_live = sum(f.live_bytes for f in files)
     total_rows = max(1, sum(f.live_count for f in files))
 
+    values = None
     if curve == "align":
-        plan = _plan_align(
-            table, run_id, by, files, victims, total_live, total_rows,
-            target_bytes,
-        )
-        os.makedirs(lineage_dir, exist_ok=True)
-        tmp = plan_path + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(plan.to_json())
-        os.rename(tmp, plan_path)
-        return plan
-
-    base_bins = max(1, -(-total_live // target_bytes))
-    # key-space bounds come from the WHOLE table's stats even in incremental
-    # scope (free metadata): victim keys then quantize identically to the
-    # existing layout's, so new files interleave into the same value ranges
-    bounds = _column_bounds(table, all_files, by)
-
-    # seeded sample -> curve keys -> quantile boundaries. The sample reads a
-    # SUBSET of files (every k-th, ≤32): rows are hash-distributed across
-    # files, so a file subset is an unbiased key sample, and the plan pass
-    # opens 32 files instead of the whole table's worth. The read is RAW
-    # (no deletion-vector anti-join): deleted rows bias the quantiles only
-    # by the delete share — which the salts and AQE absorb — while the DV
-    # read+join costs ~1s of driver/job time that is CONSTANT across
-    # parallelism levels, i.e. pure serial fraction against the ≥0.8
-    # scaling-efficiency target.
-    files_sorted = sorted(files, key=lambda f: f.file_path)
-    stride = max(1, len(files_sorted) // 32)
-    sample_files = files_sorted[::stride][:32]
-    sample_rows = max(1, sum(f.record_count for f in sample_files))
-    frac = min(1.0, _SAMPLE_TARGET / sample_rows)
-    sample_scan = table._read_data(sample_files, with_position=False).select(*by)
-    sample_pdf = (
-        sample_scan.sample(fraction=frac, seed=_SEED).toPandas()
-        if frac < 1.0
-        else sample_scan.toPandas()
-    )
-    if len(sample_pdf) == 0:
-        keys = np.zeros(1, dtype=np.int64)
+        bounds = []
+        values, salts = _plan_align(table, by, files, total_live / total_rows, target_bytes)
+        boundaries = list(range(1, len(values)))
     else:
-        keys = curve_key(
-            [sample_pdf[c].to_numpy() for c in by], bounds, curve=curve, bits=bits
+        base_bins = max(1, -(-total_live // target_bytes))
+        # key-space bounds come from the WHOLE table's stats even in
+        # incremental scope (free metadata): victim keys then quantize
+        # identically to the existing layout's, so new files interleave
+        # into the same value ranges
+        bounds = _column_bounds(table, all_files, by)
+
+        # seeded sample -> curve keys -> quantile boundaries. The sample reads a
+        # SUBSET of files (every k-th, ≤32): rows are hash-distributed across
+        # files, so a file subset is an unbiased key sample, and the plan pass
+        # opens 32 files instead of the whole table's worth. The read is RAW
+        # (no deletion-vector anti-join): deleted rows bias the quantiles only
+        # by the delete share — which the salts and AQE absorb — while the DV
+        # read+join costs ~1s of driver/job time that is CONSTANT across
+        # parallelism levels, i.e. pure serial fraction against the ≥0.8
+        # scaling-efficiency target.
+        files_sorted = sorted(files, key=lambda f: f.file_path)
+        stride = max(1, len(files_sorted) // 32)
+        sample_files = files_sorted[::stride][:32]
+        sample_rows = max(1, sum(f.record_count for f in sample_files))
+        frac = min(1.0, _SAMPLE_TARGET / sample_rows)
+        sample_scan = table._read_data(sample_files, with_position=False).select(*by)
+        sample_pdf = (
+            sample_scan.sample(fraction=frac, seed=_SEED).toPandas()
+            if frac < 1.0
+            else sample_scan.toPandas()
         )
-    qs = np.quantile(keys, np.linspace(0, 1, base_bins + 1)[1:-1]) if base_bins > 1 else np.array([])
-    boundaries = [int(q) for q in qs]
+        if len(sample_pdf) == 0:
+            keys = np.zeros(1, dtype=np.int64)
+        else:
+            keys = curve_key(
+                [sample_pdf[c].to_numpy() for c in by], bounds, curve=curve, bits=bits
+            )
+        qs = np.quantile(keys, np.linspace(0, 1, base_bins + 1)[1:-1]) if base_bins > 1 else np.array([])
+        boundaries = [int(q) for q in qs]
 
-    # hot-range detection: expected rows per base bin from the sample; a bin
-    # holding > 2x its fair share gets a proportional salt factor
-    if len(keys) > 0 and base_bins > 1:
-        bin_ids = np.searchsorted(np.array(boundaries, dtype=np.int64), keys, side="right")
-        counts = np.bincount(bin_ids, minlength=base_bins).astype(np.float64)
-        fair = max(1.0, len(keys) / base_bins)
-        salts = [max(1, int(np.ceil(c / (2.0 * fair)))) for c in counts]
-    else:
-        salts = [1] * base_bins
-    offsets = [0]
-    for s in salts:
-        offsets.append(offsets[-1] + s)
-
-    plan = ClusterPlan(
+        # hot-range detection: expected rows per base bin from the sample; a bin
+        # holding > 2x its fair share gets a proportional salt factor
+        if len(keys) > 0 and base_bins > 1:
+            bin_ids = np.searchsorted(np.array(boundaries, dtype=np.int64), keys, side="right")
+            counts = np.bincount(bin_ids, minlength=base_bins).astype(np.float64)
+            fair = max(1.0, len(keys) / base_bins)
+            salts = [max(1, int(np.ceil(c / (2.0 * fair)))) for c in counts]
+        else:
+            salts = [1] * base_bins
+    return ClusterPlan(
         run_id=run_id,
         curve=curve,
         by=list(by),
         bounds=bounds,
         boundaries=boundaries,
         salts=salts,
-        offsets=offsets,
-        victims=victims,
+        offsets=list(itertools.accumulate(salts, initial=0)),
+        values=values,
+        bits=bits,
+        scope=scope,
     )
-    os.makedirs(lineage_dir, exist_ok=True)
-    tmp = plan_path + ".tmp"
-    with open(tmp, "w") as f:
-        f.write(plan.to_json())
-    os.rename(tmp, plan_path)
-    return plan
 
 
 def assign_keys_and_bins(df, plan: ClusterPlan, key_col: str, bits: int = DEFAULT_BITS):
@@ -477,9 +450,10 @@ def cluster(
     lock_wait_seconds: float = 0.0,
     scope: str = "full",
 ) -> int | None:
-    """Clustering rewrite; returns the new snapshot id (None if incremental
-    scope found nothing to do). A *run_id* that already committed returns
-    its snapshot and writes nothing (``completed_run``).
+    """Clustering rewrite; returns the new snapshot id, or None if
+    incremental scope found nothing to do or the resumed plan of *run_id*
+    is stale (``operators/rewrite.py``). A *run_id* that already committed
+    returns its snapshot and writes nothing (``completed_run``).
 
     curve: "zorder" / "hilbert" lay rows out on a space-filling curve over
     NUMERIC columns; "align" groups rows by the DISTINCT value tuples of
@@ -500,127 +474,22 @@ def cluster(
         raise ValueError(f"unknown scope {scope!r} (full|incremental)")
     if curve not in ("zorder", "hilbert", "align"):
         raise ValueError(f"unknown curve {curve!r} (zorder|hilbert|align)")
-    with table.maintenance_lock("cluster", run_id, wait_seconds=lock_wait_seconds):
-        return _cluster_locked(table, by, curve, run_id, target_bytes, bits, scope)
 
+    def make():
+        files = table.data_files()
+        if scope == "incremental":
+            # only files not already laid out on this curve (fresh appends /
+            # merge inserts), plus delete-heavy clustered files whose rewrite
+            # is due anyway — the 100 TB answer to "absorb a day of appends
+            # without re-shuffling the whole table"
+            files = [
+                f
+                for f in files
+                if f.cluster_by != curve
+                or (f.record_count > 0 and f.deleted_count / f.record_count >= 0.5)
+            ]
+            if not files:
+                return None
+        return _plan(table, run_id, by, curve, target_bytes, bits, files, scope), files
 
-def _cluster_locked(
-    table: MoonTable,
-    by: list[str],
-    curve: str,
-    run_id: str,
-    target_bytes: int,
-    bits: int,
-    scope: str = "full",
-) -> int | None:
-    done = completed_run(table, "cluster", run_id)
-    if done is not None:
-        return done.snapshot_id
-    stage_t: dict[str, float] = {}
-    t0 = time.time()
-    plan = _plan(table, run_id, by, curve, target_bytes, bits, scope)
-    if plan is None:
-        return None
-    stage_t["plan_sec"] = round(time.time() - t0, 3)
-    lineage_dir = os.path.join(table.catalog.metadata_dir, "lineage", run_id)
-
-    key_col = table.key_columns[0]
-    num_bins = int(plan.offsets[-1])
-
-    victim_set = set(plan.victims)
-    live = {norm_path(f.file_path): f for f in table.data_files()}
-    if not victim_set <= live.keys():
-        # a resumed plan with a victim that is no longer live: either its
-        # earlier attempt committed (re-commit those outputs) or another
-        # run has rewritten its victims since (stale: commit nothing)
-        new_files = completed_outputs(lineage_dir, live)
-        if new_files is None:
-            return None
-    else:
-        # resume: bins already written (lineage record present, file still
-        # there) are filtered out before the shuffle, so a resumed run
-        # re-reads only the missing bins' rows
-        done = read_bin_records(lineage_dir)
-
-        # read ONLY the plan's victims (== every file in full scope); scan()
-        # still applies the table's deletion vectors, so victim rows
-        # suppressed by a DV are dropped inline and victims' delete entries
-        # die with them
-        victim_files = [f for p, f in live.items() if p in victim_set]
-        df = assign_keys_and_bins(
-            table.scan(files=victim_files), plan, key_col=key_col, bits=bits
-        )
-        if done:
-            df = df.filter(~F.col("_bin").isin(sorted(done)))
-
-        t0 = time.time()
-        new_files = write_datafiles(
-            df,
-            data_dir=table.catalog.data_dir,
-            run_id=run_id,
-            key=key_col,
-            num_bins=num_bins,
-            compression="zstd",
-            compression_level=4,
-            sort_within=["_zkey"],
-            lineage_dir=lineage_dir,
-        )
-        stage_t["rewrite_sec"] = round(time.time() - t0, 3)
-        # skipped bins are part of this run's output
-        have = {norm_path(f.file_path) for f in new_files}
-        new_files += [done[b] for b in sorted(done) if norm_path(done[b].file_path) not in have]
-    t0 = time.time()
-    for f in new_files:
-        f.cluster_by = plan.curve
-    in_files = [f for p, f in live.items() if p in victim_set]
-    stage_t["reconstruct_sec"] = round(time.time() - t0, 3)
-
-    # surviving deletes: victims' deletes were applied inline by the scan
-    # above and die with the victims; delete rows that target survivors
-    # (incremental scope) are carried over
-    t0 = time.time()
-    new_delete_entries, n_surviving_deletes = table.carry_over_deletes(victim_set, run_id)
-    stage_t["dv_carryover_sec"] = round(time.time() - t0, 3)
-
-    # merges/compactions can't race (same lock) but lock-free additive
-    # appends can; commit_files rebuilds the survivors on top of them
-    replaced = victim_set | {norm_path(f.file_path) for f in new_files}
-    t0 = time.time()
-    snapshot_id = table.commit_files(
-        "cluster",
-        lambda data, deletes: (
-            [f for f in data if norm_path(f.file_path) not in replaced] + new_files,
-            new_delete_entries,
-        ),
-        summary={
-            "run_id": run_id,
-            "curve": plan.curve,
-            "by": plan.by,
-            "scope": scope,
-            "removed-files": len(plan.victims),
-            "added-files": len(new_files),
-            "added-records": sum(f.record_count for f in new_files),
-            "surviving-delete-positions": n_surviving_deletes,
-            "salted-bins": int(sum(1 for s in plan.salts if s > 1)),
-        },
-    )
-    stage_t["commit_sec"] = round(time.time() - t0, 3)
-
-    # per-run lineage metrics (files-in/out, bytes, rows; per-bin detail
-    # lives in the bin-*.json records written by write_datafiles). Stage
-    # timings expose the serial/parallel split: plan = sample+quantile
-    # (mostly serial driver work), rewrite = the shuffle+write job (the
-    # parallel part), reconstruct/commit = driver-side metadata.
-    with open(os.path.join(lineage_dir, "metrics.json"), "w") as fh:
-        json.dump({
-            "op": "cluster",
-            "files_in": plan.victims,
-            "files_out": [f.file_path for f in new_files],
-            "bytes_in": sum(f.file_size_bytes for f in in_files),
-            "bytes_out": sum(f.file_size_bytes for f in new_files),
-            "rows_in": sum(f.record_count for f in in_files),
-            "rows_out": sum(f.record_count for f in new_files),
-            "salts": plan.salts,
-            "stage_seconds": stage_t,
-        }, fh)
-    return snapshot_id
+    return rewrite(table, "cluster", run_id, ClusterPlan, make, write_datafiles, lock_wait_seconds)

@@ -23,9 +23,10 @@ file, and the per-bin resume record.
   a re-run under the same run_id skips the bins ``read_bin_record`` can
   reuse (reference intent: WAL replay, wal.rs:1117-1334). A record whose
   file or sidecar is gone (an orphan sweep removed a killed run's
-  uncommitted output) is not reusable, so that bin is written again. A
-  resumed plan whose victims another run has rewritten since reuses no bin
-  (``completed_outputs``).
+  uncommitted output) is not reusable, so that bin is written again. This
+  per-bin skip is the engine's only way to reuse a bin: a rewrite resumes
+  only while its plan's victims and delete files are unchanged
+  (``operators/rewrite.py``), so its rows, and so its bins, are the same.
 
 On a real cluster ``data_dir`` is a shared filesystem / object store mount;
 tasks write directly to it exactly as moonlink's iceberg syncer uploads data
@@ -45,7 +46,7 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
-from moonlink_spark.catalog.metadata import DataFile, norm_path
+from moonlink_spark.catalog.metadata import DataFile
 
 LINEAGE_SCHEMA = (
     "bin int, file_path string, record_count long, file_size_bytes long, stats string, "
@@ -119,35 +120,6 @@ def read_bin_record(lineage_dir: str, b: int) -> DataFile | None:
     if not (os.path.exists(rec["file_path"]) and os.path.exists(rec["key_index"])):
         return None
     return _datafile(rec)
-
-
-def read_bin_records(lineage_dir: str) -> dict[int, DataFile]:
-    """Every bin under *lineage_dir* that ``read_bin_record`` can reuse."""
-    if not os.path.isdir(lineage_dir):
-        return {}
-    out: dict[int, DataFile] = {}
-    for name in os.listdir(lineage_dir):
-        if name.startswith("bin-") and name.endswith(".json"):
-            b = int(name[4:-5])
-            f = read_bin_record(lineage_dir, b)
-            if f is not None:
-                out[b] = f
-    return out
-
-
-def completed_outputs(lineage_dir: str, live: dict[str, DataFile]) -> list[DataFile] | None:
-    """For a resumed plan with a victim that is no longer live (*live*:
-    the current data files by normalized path): the live entries of every
-    bin its earlier attempt recorded when all of them are live (that
-    attempt committed; re-committing them changes nothing), else None. The
-    plan is then stale: another run rewrote its victims, and its recorded
-    bins hold rows that run's output already holds, so nothing may be
-    committed and no bin reused."""
-    recs = read_bin_records(lineage_dir)
-    paths = [norm_path(recs[b].file_path) for b in sorted(recs)]
-    if paths and all(p in live for p in paths):
-        return [live[p] for p in paths]
-    return None
 
 
 class _OpenFile:

@@ -3,11 +3,13 @@ partition (bin) granularity and produce the identical committed state
 (north rule: "checkpoints per-partition lineage ... resumes idempotently";
 reference analog: WAL recovery, wal.rs:1117-1334)."""
 
+import hashlib
 import json
 import os
 
 from moonlink_spark.operators.compaction import CompactionConfig, compact, plan_compaction
 from moonlink_spark.operators.clustering import cluster
+from moonlink_spark.operators.expire import expire_snapshots
 from moonlink_spark.operators.merge import merge_into
 from moonlink_spark.sources.fixtures import create_images_table, generate_changes_df
 
@@ -44,11 +46,11 @@ def test_compaction_resume_skips_done_bins(spark, tmp_table_root):
     assert len(recs) >= len(plan.groups)
 
     # phase 3: re-running the SAME completed run is a no-op on data files:
-    # all bins are skipped via lineage, output paths identical
+    # it finds its snapshot in the history, output paths identical
     files_before = sorted(f.file_path for f in table.data_files())
     sid2 = compact(table, cfg, run_id="r1")
-    # the second run commits a snapshot but reuses every written file
-    assert sid2 is not None
+    # the second run returns the committed snapshot and commits nothing
+    assert sid2 == sid
     files_after = sorted(f.file_path for f in table.data_files())
     assert files_before == files_after
     assert _rows(table) == expected
@@ -119,6 +121,85 @@ def test_cluster_resume_after_another_run_rewrote_its_victims(
     assert cluster(table, by=["phash", "w", "h"], run_id="z1") is None
     assert table.current_snapshot_id() == sid
     assert _rows(table) == expected
+
+
+def _resume_after_a_merge_commits_nothing(spark, monkeypatch, table, op):
+    """*op* killed at commit, then a merge, then *op* again: its recorded
+    bins predate the merge's deletion vectors, so its plan is stale and
+    the resume commits nothing; the table scans as it did before it."""
+    _killed_at_commit(monkeypatch, op)
+    merge_into(table, generate_changes_df(spark, 300, 60, seed=42), run_id="m1")
+    expected, sid = _rows(table), table.current_snapshot_id()
+
+    got = op()
+    rows = _rows(table)
+    assert len(rows) == len(expected)  # reused stale bins add rows
+    assert rows == expected
+    assert got is None and table.current_snapshot_id() == sid
+
+
+def test_compaction_resume_after_a_merge_commits_nothing(spark, tmp_table_root, monkeypatch):
+    table = create_images_table(spark, tmp_table_root, 300, seed=42)
+    cfg = CompactionConfig(mode="force_full")
+    _resume_after_a_merge_commits_nothing(
+        spark, monkeypatch, table, lambda: compact(table, cfg, run_id="r1")
+    )
+
+
+def test_cluster_resume_after_a_merge_commits_nothing(spark, tmp_table_root, monkeypatch):
+    table = create_images_table(spark, tmp_table_root, 300, seed=42)
+    _resume_after_a_merge_commits_nothing(
+        spark, monkeypatch, table, lambda: cluster(table, by=["phash", "w", "h"], run_id="z1")
+    )
+
+
+def _resume_reuses_written_bins(monkeypatch, table, run_id, op):
+    """*op* (a full rewrite under *run_id*) killed at commit and run again
+    with nothing in between: the commit names the files the killed attempt
+    recorded, and the writer skipped them (mtimes unchanged)."""
+    expected = _rows(table)
+    _killed_at_commit(monkeypatch, op)
+    lineage_dir = os.path.join(table.catalog.metadata_dir, "lineage", run_id)
+    written = {}
+    for name in os.listdir(lineage_dir):
+        if name.startswith("bin-"):
+            with open(os.path.join(lineage_dir, name)) as f:
+                path = json.load(f)["file_path"]
+            written[path] = os.stat(path).st_mtime_ns
+    assert len(written) >= 2
+
+    assert op() is not None
+    assert {f.file_path: os.stat(f.file_path).st_mtime_ns for f in table.data_files()} == written
+    assert _rows(table) == expected
+
+
+def test_compaction_resume_reuses_split_bins(spark, tmp_table_root, monkeypatch):
+    import pyspark.sql.functions as F
+
+    from moonlink_spark.sources.fixtures import generate_images_df
+
+    table = create_images_table(spark, tmp_table_root, 200, seed=42)
+    big = generate_images_df(spark, 3000, seed=9).withColumn(
+        "image_id", F.concat(F.lit("big-"), F.col("image_id"))
+    ).withColumn("_bin", F.lit(0))
+    table.append(big, num_bins=1, run_id="bigf")
+    huge = max(table.data_files(), key=lambda f: f.file_size_bytes)
+    cfg = CompactionConfig(
+        mode="force_full", target_bytes=max(16 * 1024, huge.file_size_bytes // 4)
+    )
+    _resume_reuses_written_bins(
+        monkeypatch, table, "sp1", lambda: compact(table, cfg, run_id="sp1")
+    )
+    # the oversized victim was split: more outputs than the two groups
+    assert len(table.data_files()) >= 3
+
+
+def test_cluster_resume_reuses_written_bins(spark, tmp_table_root, monkeypatch):
+    table = create_images_table(spark, tmp_table_root, N, seed=42)
+    _resume_reuses_written_bins(
+        monkeypatch, table, "z1",
+        lambda: cluster(table, by=["phash", "w", "h"], run_id="z1", target_bytes=64 * 1024),
+    )
 
 
 def test_cluster_resume_deterministic(spark, tmp_table_root):
@@ -258,3 +339,30 @@ def test_rerun_of_a_completed_cluster_writes_nothing(spark, tmp_table_root):
     _rerun_changes_nothing(
         spark, table, lambda: cluster(table, by=by, run_id="z1", scope="incremental"), sid
     )
+
+
+def _retained_checksums(table) -> dict[str, str]:
+    out = {}
+    for p in table.all_reachable_paths():
+        with open(p, "rb") as f:
+            out[p] = hashlib.sha256(f.read()).hexdigest()
+    return out
+
+
+def test_rerun_of_a_compaction_whose_snapshot_expired_is_stale(spark, tmp_table_root):
+    """Once a run's snapshot has expired, its run_id no longer finds it in
+    the history; its plan's victims are gone, so the re-run commits nothing
+    and leaves every file a retained snapshot references as it was."""
+    table = create_images_table(spark, tmp_table_root, 300, seed=42)
+    merge_into(table, generate_changes_df(spark, 300, 60, seed=42), run_id="m1")
+    cfg = CompactionConfig(mode="force_regular", max_files=2)
+    assert compact(table, cfg, run_id="c1") is not None
+    merge_into(
+        table, generate_changes_df(spark, 300, 60, seed=42, lsn_start=50_000), run_id="m2"
+    )
+    expire_snapshots(table, retain_last=1)
+    head, sums = table.current_snapshot_id(), _retained_checksums(table)
+
+    got = compact(table, cfg, run_id="c1")
+    assert _retained_checksums(table) == sums
+    assert got is None and table.current_snapshot_id() == head

@@ -6,17 +6,19 @@ Usage:
 
 Pipeline mode explains the declared queries' returned DataFrames directly.
 Maint mode builds a small fixture table, runs merge / fused cluster /
-force-full compact, and intercepts every distributed write
-(plans.physical.write_datafiles) and the merge probe's collect
-(DataFrame.toArrow) to dump the physical plan of the exact DataFrame each op
+append + merge + incremental cluster / force-full compact, and intercepts
+every distributed write (plans.physical.write_datafiles, in every module
+that imported it) to dump the physical plan of the exact DataFrame each op
 executes — the plans the bench times, which the query functions' returned
-scans would not show. It also dumps `scan_with_dvs`, a filtered count over
-the table while the merge's deletion vectors are live: the scan's bitmap
-join.
+scans would not show. The incremental cluster runs while the second
+merge's deletion vectors sit on clustered survivors. It also dumps
+`scan_with_dvs`, a filtered count over the table while the first merge's
+deletion vectors are live: the scan's bitmap join.
 
-Run once from the round-start tree (SUFFIX "before", via a git worktree)
-and once from the optimized tree ("after") so plan-shape claims in the
-OPTIMIZATION notes are checkable without running Spark.
+Run this file once from a `git archive` copy of the old tree (SUFFIX
+"before"; it imports the package of the tree it sits in) and once from
+the new tree ("after") so plan-shape claims are checkable without running
+Spark.
 """
 
 from __future__ import annotations
@@ -64,7 +66,11 @@ def dump_maint(spark, outdir: str, suffix: str) -> None:
     from moonlink_spark.operators.merge import merge_into
     from moonlink_spark.operators.optimize import optimize
     from moonlink_spark.plans import physical
-    from moonlink_spark.sources.fixtures import create_images_table, generate_changes_df
+    from moonlink_spark.sources.fixtures import (
+        create_images_table,
+        generate_changes_df,
+        generate_images_df,
+    )
 
     captured: list[tuple[str, str]] = []
     orig = physical.write_datafiles
@@ -77,32 +83,16 @@ def dump_maint(spark, outdir: str, suffix: str) -> None:
         return orig(df, **kw)
 
     physical.write_datafiles = patched
-    # the operators import write_datafiles by value — patch those refs too
-    import moonlink_spark.operators.clustering as _cl
-    import moonlink_spark.operators.compaction as _co
-    import moonlink_spark.operators.merge as _me
-    import moonlink_spark.table as _tb
-
-    for mod in (_cl, _co, _me, _tb):
-        if hasattr(mod, "write_datafiles"):
+    # modules that import write_datafiles by value hold their own reference
+    for mod in list(sys.modules.values()):
+        if (getattr(mod, "__name__", "").startswith("moonlink_spark.")
+                and getattr(mod, "write_datafiles", None) is orig):
             mod.write_datafiles = patched
 
     root = "/tmp/dump_plans_tbl"
     shutil.rmtree(root, ignore_errors=True)
     t = create_images_table(spark, root, 3000, seed=42)
-    # the merge probe is the one DataFrame the merge collects to the driver
-    frame_cls = type(spark.range(1))
-    orig_to_arrow = frame_cls.toArrow
-
-    def to_arrow(self):
-        captured.append(("dp-merge-probe", _explain(self)))
-        return orig_to_arrow(self)
-
-    frame_cls.toArrow = to_arrow
-    try:
-        merge_into(t, generate_changes_df(spark, 3000, 600, seed=42), run_id="dp-merge")
-    finally:
-        frame_cls.toArrow = orig_to_arrow
+    merge_into(t, generate_changes_df(spark, 3000, 600, seed=42), run_id="dp-merge")
     # the merge left deletion vectors: a filtered count shows the scan's
     # bitmap join
     from pyspark.sql import functions as F
@@ -111,15 +101,23 @@ def dump_maint(spark, outdir: str, suffix: str) -> None:
     captured.append(("dp-scan", _explain(dv_scan)))
     optimize(t, mode="full", cluster_by=["phash", "w", "h"], run_id="dp-fused",
              target_bytes=1 << 20)
+    # fresh files beside the clustered ones, and deletion vectors on them
+    t.append(generate_images_df(spark, 600, seed=7).withColumn(
+        "image_id", F.concat(F.lit("fresh-"), F.col("image_id"))), run_id="dp-append")
+    merge_into(t, generate_changes_df(spark, 3000, 300, seed=42, lsn_start=9_000_000),
+               run_id="dp-merge2")
+    optimize(t, mode="incremental", cluster_by=["phash", "w", "h"], run_id="dp-incr",
+             target_bytes=1 << 20)
     compact(t, CompactionConfig(mode="force_full", target_bytes=1 << 20),
             run_id="dp-compact")
     shutil.rmtree(root, ignore_errors=True)
 
     names = {
-        "dp-merge-probe": "merge_probe",
         "dp-merge": "merge_insert_write",  # the merge's only distributed write
         "dp-scan": "scan_with_dvs",
         "dp-fused": "cluster_fused_rewrite",
+        "dp-merge2": "merge2_insert_write",
+        "dp-incr": "cluster_incr_rewrite",
         "dp-compact": "compact_rewrite",
     }
     seen: dict[str, int] = {}
