@@ -113,15 +113,13 @@ def scan_changes(
                 # snapshot already deletes ON THOSE FILES (a merge's insert
                 # files carry no deletes; a rollback into a DV-carrying state
                 # must not replay suppressed rows)
-                ins = table._read_data(added_files, with_position=bool(cur_del_entries))
-                ins = table.join_deletes(ins, added_files, cur_del_entries)
+                ins = table.read_live(added_files, cur_del_entries)
                 parts.append(_tag(ins.select(*cols), "I"))
             if removed_files:
                 # semantic delete of every row still LIVE in prev (a file
                 # dropped together with its DVs must not re-emit rows those
                 # DVs had already suppressed)
-                old = table._read_data(removed_files, with_position=True)
-                old = table.join_deletes(old, removed_files, prev_del_entries)
+                old = table.read_live(removed_files, prev_del_entries)
                 parts.append(_tag(old.select(*cols), "D"))
             if added_dels:
                 # the new deletes name their target files — scan only those

@@ -138,12 +138,9 @@ def rewrite(
         key = table.key_columns[0]
 
         t0 = time.time()
-        # row positions are read when a deletion vector or the plan needs them
-        df = table.join_deletes(
-            table._read_data(victims, with_position=plan.positions or bool(deletes)),
-            victims,
-            deletes,
-        )
+        # row positions are read when a deletion vector targets a victim or
+        # the plan needs them
+        df = table.read_live(victims, deletes, with_position=plan.positions)
         binned, num_bins = plan.bins(df, key)
         new_files = write_datafiles(
             binned,

@@ -13,12 +13,15 @@ file, and the per-bin resume record.
   renamed into place, so no data file exists without one.
 - ``write_datafiles`` picks the file from an explicit integer ``_bin``
   assigned by the *planner* (bin-packing for compaction, zkey range for
-  clustering, hash for merge inserts); ``repartition(num_bins,
-  "_bin")`` sends each bin to exactly one reduce task, so the file name
-  ``{run_id}-b{bin:05d}`` derives from the bin id and a killed run resumes
-  at bin granularity. ``write_datafiles_rolling`` rolls each input
-  partition over to a new ``{run_id}-p{partition:05d}-{seq:04d}`` file
-  every ``rows_per_file`` rows, so bulk ingest reads its input once.
+  clustering); ``repartition(num_bins, "_bin")`` sends each bin to
+  exactly one reduce task, so the file name ``{run_id}-b{bin:05d}`` derives
+  from the bin id and a killed run resumes at bin granularity.
+  ``write_datafiles_rolling`` rolls each input partition over to a new
+  ``{run_id}-p{partition:05d}-{seq:04d}`` file every ``rows_per_file``
+  rows, so bulk ingest reads its input once. The merge
+  (``operators/merge.py``) names its files the same way, but streams its
+  own query's partitions into ``_OpenFile`` directly, because its task also
+  reports the change batch's keys.
 - With a ``lineage_dir`` each bin file is recorded as ``bin-NNNNN.json``;
   a re-run under the same run_id skips the bins ``read_bin_record`` can
   reuse (reference intent: WAL replay, wal.rs:1117-1334). A record whose
@@ -104,8 +107,9 @@ def _record(b: int, f: DataFile) -> dict:
     }
 
 
-def _bin_record_path(lineage_dir: str, b: int) -> str:
-    return os.path.join(lineage_dir, f"bin-{b:05d}.json")
+def _bin_record_path(lineage_dir: str, b: int, seq: int | None = None) -> str:
+    name = f"bin-{b:05d}" if seq is None else f"bin-{b:05d}-{seq:04d}"
+    return os.path.join(lineage_dir, name + ".json")
 
 
 def read_bin_record(lineage_dir: str, b: int) -> DataFile | None:
@@ -126,16 +130,18 @@ class _OpenFile:
     """One parquet file a write task is streaming: rows go to
     ``<path><tmp_suffix>`` and the per-column stats accumulate as they pass.
     With a *key* column it is a data file: the key values are kept too, and
-    close() writes them as the file's key-index sidecar."""
+    close() writes them as the file's key-index sidecar. A *seq* tells the
+    lineage records of one partition's rolled-over files apart."""
 
     def __init__(
         self, path: str, b: int, tmp_suffix: str, schema, codec, level, statless,
-        key: str | None = None,
+        key: str | None = None, seq: int | None = None,
     ):
         import pyarrow.parquet as pq
 
         self.path = path
         self.bin = b
+        self.seq = seq
         self.tmp = path + tmp_suffix
         self.tmp_suffix = tmp_suffix
         self.statless = statless
@@ -208,11 +214,36 @@ class _OpenFile:
             ),
         )
         if lineage_dir is not None:
-            lp = _bin_record_path(lineage_dir, self.bin)
+            lp = _bin_record_path(lineage_dir, self.bin, self.seq)
             with open(lp + ".tmp", "w") as f:
                 json.dump(rec, f)
             os.rename(lp + ".tmp", lp)
         return rec
+
+
+def file_format(fields, compression: str, compression_level: int | None):
+    """(arrow schema, stat-less columns, codec, level) of a data file holding
+    the Spark *fields*, as _OpenFile takes them.
+
+    Per-column codecs: opaque binary payloads (images) are already
+    compressed/high-entropy — zstd-4 on them burns the write stage's CPU for
+    ~zero ratio. Binary columns get snappy (near-free, bails fast on
+    incompressible data); the requested codec applies to everything else."""
+    import pyspark.sql.types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    statless = {f.name for f in fields if f.dataType.typeName() in _STATLESS_TYPES}
+    arrow_schema = to_arrow_schema(T.StructType(list(fields)))
+    if compression not in (None, "none", "snappy"):
+        codec = {f.name: ("snappy" if f.name in statless else compression) for f in fields}
+        level = (
+            {f.name: compression_level for f in fields if f.name not in statless}
+            if compression_level is not None
+            else None
+        )
+    else:
+        codec, level = compression, compression_level
+    return arrow_schema, statless, codec, level
 
 
 def _write(
@@ -236,28 +267,15 @@ def _write(
     # internal planner columns (underscore-prefixed: _bin, _zkey, ...) are
     # shuffle/sort keys only — never written to the output files
     payload_fields = [f for f in df.schema.fields if not f.name.startswith("_")]
-    statless = {f.name for f in payload_fields if f.dataType.typeName() in _STATLESS_TYPES}
-    arrow_schema = to_arrow_schema(T.StructType(payload_fields))
+    arrow_schema, statless, codec, level = file_format(
+        payload_fields, compression, compression_level
+    )
     out_schema = to_arrow_schema(T.DataType.fromDDL(LINEAGE_SCHEMA))
     payload_cols = [f.name for f in payload_fields]
     if key not in payload_cols:
         raise ValueError(f"key column {key!r} is not among the written columns {payload_cols}")
     binned = rows_per_file is None
     limit = sys.maxsize if binned else rows_per_file  # a bin never rolls over
-
-    # per-column codecs: opaque binary payloads (images) are already
-    # compressed/high-entropy — zstd-4 on them burns the write stage's CPU
-    # for ~zero ratio. Binary columns get snappy (near-free, bails fast on
-    # incompressible data); the requested codec applies to everything else.
-    if compression not in (None, "none", "snappy"):
-        codec = {f.name: ("snappy" if f.name in statless else compression) for f in payload_fields}
-        level = (
-            {f.name: compression_level for f in payload_fields if f.name not in statless}
-            if compression_level is not None
-            else None
-        )
-    else:
-        codec, level = compression, compression_level
 
     def _task(batches: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
         import numpy as np
@@ -407,6 +425,6 @@ def num_bins_for(total_bytes: int, target_bytes: int) -> int:
 
 
 def hash_bin(col_name: str, num_bins: int):
-    """Deterministic, skew-free bin assignment by key hash (used for merge
-    insert files and the Iceberg export's files)."""
+    """Deterministic, skew-free bin assignment by hash (used for the Iceberg
+    export's files)."""
     return F.pmod(F.xxhash64(F.col(col_name)), F.lit(num_bins)).cast("int")

@@ -9,12 +9,15 @@ never reaches merge_into, so no partial state is ever visible (the abort =
 drop-staged-buffer analog of table_handler.rs:908-917).
 
 Exactly-once across restarts: Spark's checkpointed epoch id makes replays
-carry the SAME batch_id; merge runs under run_id "stream-{batch_id}" so a
-replayed epoch reuses the previous attempt's lineage (idempotent re-apply)
-and LWW dedup within the batch keeps reordered events deterministic.
+carry the SAME batch_id; merge runs under run_id "stream-{batch_id}", so a
+replayed epoch whose merge committed is a no-op (completed_run) and one whose
+merge did not commit applies the batch again from scratch. LWW dedup within
+the batch keeps reordered events deterministic.
 
 At scale this is the continuous-ingest path: the per-epoch work is exactly
-one MERGE (broadcast probe + append), so throughput tracks merge_into.
+one MERGE (one Spark query that reads the micro-batch once and writes its
+inserts, then a driver-side key-index lookup and one deletion-vector file),
+so throughput tracks merge_into.
 """
 
 from __future__ import annotations

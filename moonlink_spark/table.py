@@ -592,6 +592,39 @@ class MoonTable:
             filter=None if file_paths is None else ds.field("file_path").isin(list(file_paths)),
         )
 
+    def _dv_rows(self, files: list[DataFile], dfiles: list[DeleteFile]) -> DataFrame | None:
+        """The bitmap rows of *dfiles* that target *files*, as join_deletes'
+        build side (_dv_fp, _dv_words), or None when none does. They are read
+        on the driver and broadcast while a metadata-only bound of their
+        decoded size, DV rows × (largest scanned record_count / 8 + path
+        bytes), fits _BROADCAST_DELETES_BYTES; above it Spark reads them,
+        whichever files they target, and the join is forced to shuffle
+        (Spark's estimator sees only the at-rest size and would broadcast
+        anyway)."""
+        if not dfiles:
+            return None
+        _check_bitmap(dfiles)
+        per_row = max((f.record_count // 8 + len(f.file_path) for f in files), default=0)
+        if sum(d.record_count for d in dfiles) * per_row > _BROADCAST_DELETES_BYTES:
+            return (
+                self.spark.read.schema(BITMAP_SCHEMA)
+                .parquet(*[d.file_path for d in dfiles])
+                .select(F.col("file_path").alias("_dv_fp"), F.col("words").alias("_dv_words"))
+                .hint("shuffle_hash")
+            )
+        import pyarrow as pa
+
+        rows = self.read_bitmap_rows(dfiles)
+        scanned = {norm_path(f.file_path) for f in files}
+        keep = [norm_path(fp) in scanned for fp in rows.column("file_path").to_pylist()]
+        rows = rows.filter(pa.array(keep, pa.bool_()))
+        if not rows.num_rows:
+            return None
+        # one chunk per column: createDataFrame rejects a chunkless column
+        return F.broadcast(self.spark.createDataFrame(pa.table(
+            [c.combine_chunks() for c in rows.columns], names=["_dv_fp", "_dv_words"]
+        )))
+
     def join_deletes(
         self, df: DataFrame, files: list[DataFile], dfiles: list[DeleteFile], how: str = "left_anti"
     ) -> DataFrame:
@@ -599,34 +632,26 @@ class MoonTable:
         bitmap DVs *dfiles* do not delete (left_anti) or do (left_semi): one
         join on the target path whose condition tests the row's bit, no
         expansion to positions. A target's rows in several DV files OR
-        together. The bitmap rows are read on the driver and broadcast while
-        a metadata-only bound of their decoded size, DV rows × (largest
-        scanned record_count / 8 + path bytes), fits _BROADCAST_DELETES_BYTES;
-        above it Spark reads them and the join is forced to shuffle (Spark's
-        estimator sees only the at-rest size and would broadcast anyway)."""
-        if not dfiles:
+        together. No join when no bitmap row targets *files* (_dv_rows)."""
+        dv = self._dv_rows(files, dfiles)
+        if dv is None:
             return df if how == "left_anti" else df.limit(0)
-        _check_bitmap(dfiles)
-        per_row = max((f.record_count // 8 + len(f.file_path) for f in files), default=0)
-        if sum(d.record_count for d in dfiles) * per_row <= _BROADCAST_DELETES_BYTES:
-            import pyarrow as pa
-
-            rows = self.read_bitmap_rows(dfiles)
-            scanned = {norm_path(f.file_path) for f in files}
-            keep = [norm_path(fp) in scanned for fp in rows.column("file_path").to_pylist()]
-            rows = rows.filter(pa.array(keep, pa.bool_()))
-            # one chunk per column: createDataFrame rejects a chunkless column
-            dv = F.broadcast(self.spark.createDataFrame(pa.table(
-                [c.combine_chunks() for c in rows.columns], names=["_dv_fp", "_dv_words"]
-            )))
-        else:
-            dv = (
-                self.spark.read.schema(BITMAP_SCHEMA)
-                .parquet(*[d.file_path for d in dfiles])
-                .select(F.col("file_path").alias("_dv_fp"), F.col("words").alias("_dv_words"))
-                .hint("shuffle_hash")
-            )
         return df.join(dv, (F.col("_fp") == F.col("_dv_fp")) & F.expr(_DV_BIT_SET), how)
+
+    def read_live(
+        self, files: list[DataFile], dfiles: list[DeleteFile], with_position: bool = False
+    ) -> DataFrame:
+        """The rows of *files* that the bitmap DVs *dfiles* do not delete,
+        with _fp/_pos when *with_position*. Row positions are read only when
+        a bitmap row targets a scanned file or the bitmap rows are too large
+        to read on the driver (_dv_rows); otherwise there is no join and
+        no _metadata column."""
+        dv = self._dv_rows(files, dfiles)
+        df = self._read_data(files, with_position=with_position or dv is not None)
+        if dv is None:
+            return df
+        df = df.join(dv, (F.col("_fp") == F.col("_dv_fp")) & F.expr(_DV_BIT_SET), "left_anti")
+        return df if with_position else df.drop("_fp", "_pos")
 
     # ------------------------------------------------------- snapshot tags
     def create_tag(self, name: str, snapshot_id: int | None = None) -> int:
@@ -819,7 +844,7 @@ class MoonTable:
     ) -> DataFrame:
         """Snapshot-isolated read: data files of the snapshot minus the rows
         whose bit is set in its deletion vectors, one bitmap join
-        (join_deletes; reference read path: snapshot_read.rs:152-241 + the
+        (read_live; reference read path: snapshot_read.rs:152-241 + the
         DV RowSelection in table_provider.rs).
 
         Column pruning and filter pushdown stay with Catalyst — when the
@@ -839,11 +864,7 @@ class MoonTable:
             else:
                 raise KeyError(f"ref {ref!r} not found (no such tag or branch)")
         files = self.data_files(snapshot_id) if files is None else files
-        dfiles = self.delete_files(snapshot_id)
-        need_pos = with_position or bool(dfiles)
-        df = self.join_deletes(self._read_data(files, with_position=need_pos), files, dfiles)
-        if not with_position and need_pos:
-            df = df.drop("_fp", "_pos")
+        df = self.read_live(files, self.delete_files(snapshot_id), with_position)
         if columns:
             df = df.select(*columns)
         return df

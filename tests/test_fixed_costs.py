@@ -80,11 +80,23 @@ def test_manifest_scan_and_merge_launch_no_listing_job(spark, tmp_path):
     assert rows["k0010"] == 1010 and rows["k0011"] == 11
 
 
-def test_merge_runs_five_jobs_and_reads_no_target_file(spark, tmp_path):
-    """The merge finds its delete positions in the key-index sidecars on the
-    driver: at most 5 Spark jobs (the LWW head's and the insert write's),
-    and none of them reads a target data file. Every target file is moved
-    away while the merge runs, so a stage that read one would fail."""
+def test_merge_runs_two_jobs_and_reads_no_target_file(spark, tmp_path, monkeypatch):
+    """The merge applies the batch in one Spark query and finds its delete
+    positions in the key-index sidecars on the driver: at most 2 Spark jobs
+    (the window's shuffle and the insert write), and none of them reads a
+    target data file. Every target file is moved away while the merge runs,
+    so a stage that read one would fail. The query's executed plan holds one
+    Exchange, no cache and no aggregate."""
+    import moonlink_spark.operators.merge as merge_mod
+
+    queries = []
+    build = merge_mod._batch_query
+
+    def capture(*a, **kw):
+        queries.append(build(*a, **kw))
+        return queries[-1]
+
+    monkeypatch.setattr(merge_mod, "_batch_query", capture)
     t = _many_file_table(spark, str(tmp_path / "t"))
     ch = spark.range(0, N_FILES * 10, 10).select(
         F.lit("U").alias("op"),
@@ -101,7 +113,11 @@ def test_merge_runs_five_jobs_and_reads_no_target_file(spark, tmp_path):
     finally:
         for p in targets:
             os.rename(p + ".away", p)
-    assert len(jobs) <= 5, [j.jobId for j in jobs]
+    assert len(jobs) <= 2, [j.jobId for j in jobs]
+    final_plan = queries[0]._jdf.queryExecution().executedPlan().toString()
+    final_plan = final_plan.split("== Initial Plan ==")[0]
+    assert final_plan.count("Exchange ") == 1, final_plan
+    assert "InMemoryRelation" not in final_plan and "HashAggregate" not in final_plan, final_plan
     assert res[0].matched_keys == N_FILES
     rows = {r["image_id"]: r["v"] for r in t.scan().collect()}
     assert len(rows) == N_FILES * 10

@@ -105,6 +105,40 @@ def test_delete_antijoin_broadcast_gated_by_positions(spark, tmp_table_root):
     assert "Generate" not in plan
 
 
+def test_scan_reads_no_positions_when_no_dv_targets_its_files(spark, tmp_path):
+    """A deletion vector on file A only: a scan of file B plans no
+    _metadata/row_index column and no join, and returns B's rows; a scan of
+    A still joins its bitmap rows."""
+    import pyspark.sql.types as T
+
+    from moonlink_spark.operators.merge import merge_into
+    from moonlink_spark.table import MoonTable
+
+    schema = T.StructType([
+        T.StructField("image_id", T.StringType(), False),
+        T.StructField("v", T.LongType(), True),
+    ])
+    t = MoonTable.create(spark, str(tmp_path / "t"), schema, key_columns=["image_id"])
+    for lo in (0, 100):
+        t.append(spark.range(lo, lo + 100).select(
+            F.format_string("k%04d", F.col("id")).alias("image_id"), F.col("id").alias("v"),
+        ).coalesce(1))
+    by_min = sorted(t.data_files(), key=lambda f: f.stats["image_id"]["min"])
+    a, b = by_min
+    b_rows = sorted(tuple(r) for r in t.scan(files=[b]).collect())
+    merge_into(t, spark.createDataFrame([("U", 10, "k0005", 5005)],
+                                        "op string, lsn long, image_id string, v long"))
+    assert len(t.delete_files()) == 1
+
+    scan_b = t.scan(files=[b])
+    plan = _plan(scan_b)
+    assert "_metadata" not in plan and "row_index" not in plan, plan
+    assert "Join" not in plan, plan
+    assert sorted(tuple(r) for r in scan_b.collect()) == b_rows
+    assert "Join" in _plan(t.scan(files=[a]))
+    assert t.scan(files=[a]).count() == 99
+
+
 def test_clustering_amplifies_file_skipping(spark, tmp_table_root):
     """Before clustering (hash-random layout) a phash range prunes almost
     nothing — every file spans the key space. After the Z-order rewrite each

@@ -8,12 +8,13 @@ Pipeline mode explains the declared queries' returned DataFrames directly.
 Maint mode builds a small fixture table, runs merge / fused cluster /
 append + merge + incremental cluster / force-full compact, and intercepts
 every distributed write (plans.physical.write_datafiles, in every module
-that imported it) to dump the physical plan of the exact DataFrame each op
-executes — the plans the bench times, which the query functions' returned
-scans would not show. The incremental cluster runs while the second
-merge's deletion vectors sit on clustered survivors. It also dumps
-`scan_with_dvs`, a filtered count over the table while the first merge's
-deletion vectors are live: the scan's bitmap join.
+that imported it) and each merge's one query (operators.merge._batch_query)
+to dump the physical plan of the exact DataFrame each op executes — the
+plans the bench times, which the query functions' returned scans would not
+show. The incremental cluster runs while the second merge's deletion
+vectors sit on clustered survivors. It also dumps `scan_with_dvs`, a
+filtered count over the table while the first merge's deletion vectors are
+live: the scan's bitmap join.
 
 Run this file once from a `git archive` copy of the old tree (SUFFIX
 "before"; it imports the package of the tree it sits in) and once from
@@ -62,6 +63,7 @@ def dump_pipeline(spark, outdir: str, suffix: str) -> None:
 
 
 def dump_maint(spark, outdir: str, suffix: str) -> None:
+    import moonlink_spark.operators.merge as merge_mod
     from moonlink_spark.operators.compaction import CompactionConfig, compact
     from moonlink_spark.operators.merge import merge_into
     from moonlink_spark.operators.optimize import optimize
@@ -89,6 +91,17 @@ def dump_maint(spark, outdir: str, suffix: str) -> None:
                 and getattr(mod, "write_datafiles", None) is orig):
             mod.write_datafiles = patched
 
+    # the merge writes its inserts inside its one query, not through
+    # write_datafiles
+    orig_query = merge_mod._batch_query
+
+    def query(*a, **kw):
+        df = orig_query(*a, **kw)
+        captured.append((kw["run_id"], _explain(df)))
+        return df
+
+    merge_mod._batch_query = query
+
     root = "/tmp/dump_plans_tbl"
     shutil.rmtree(root, ignore_errors=True)
     t = create_images_table(spark, root, 3000, seed=42)
@@ -113,10 +126,10 @@ def dump_maint(spark, outdir: str, suffix: str) -> None:
     shutil.rmtree(root, ignore_errors=True)
 
     names = {
-        "dp-merge": "merge_insert_write",  # the merge's only distributed write
+        "dp-merge": "merge",  # the merge's one query
         "dp-scan": "scan_with_dvs",
         "dp-fused": "cluster_fused_rewrite",
-        "dp-merge2": "merge2_insert_write",
+        "dp-merge2": "merge2",
         "dp-incr": "cluster_incr_rewrite",
         "dp-compact": "compact_rewrite",
     }
