@@ -30,7 +30,6 @@ from typing import Any
 MANIFEST_MAX_ENTRIES = 25_000
 
 # file-size engineering constants lifted from the reference's release config
-FRESH_TARGET_BYTES = 128 * 1024 * 1024  # mooncake_table_config.rs:24 (snappy)
 COMPACT_TARGET_BYTES = 512 * 1024 * 1024  # compaction_config.rs:52 (zstd)
 
 
@@ -92,7 +91,8 @@ class DeleteFile:
     regardless of delete ratio, ~20× smaller at heavy ratios than the
     (file_path, pos) row form. A scan never expands it to positions: it
     joins each row to its file's bitmap rows and tests the row's bit
-    (``MoonTable.join_deletes``). Readers reject any other format.
+    (``MoonTable.join_deletes``); only the Iceberg export expands it, on
+    the driver. Readers reject any other format.
     Every DV file is written by ``MoonTable.write_position_deletes`` from
     bitmap rows folded on the driver: a merge's, a rewrite's carry-over
     (which ORs a surviving target's rows into one) and the Iceberg

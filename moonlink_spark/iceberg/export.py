@@ -1,4 +1,5 @@
-"""Export a MoonTable snapshot as a genuine Apache Iceberg v2 table.
+"""Export a MoonTable snapshot as a genuine Apache Iceberg table (v2, or
+v3 with Puffin deletion vectors).
 
 What gets written under *dest_root* (all per the public Iceberg spec):
 
@@ -7,11 +8,12 @@ What gets written under *dest_root* (all per the public Iceberg spec):
                                  (file_catalog.rs:590-673 analog)
   metadata/snap-<id>-*.avro      manifest list (Avro, spec field-ids)
   metadata/manifest-*.avro       data + delete manifests (Avro)
-  data/icedel-*.parquet          position-delete files in the spec schema
-                                 (file_path 2147483546, pos 2147483545),
-                                 converted from our bitmap DVs — the
-                                 puffin-DV translation step
-                                 (table/iceberg/deletion_vector.rs:16-30)
+  data/icedel-<id>-00000.parquet v2: one position-delete file in the spec
+                                 schema (file_path 2147483546,
+                                 pos 2147483545)
+  data/icedv-<id>-00000.puffin   v3: one Puffin file, one
+                                 deletion-vector-v1 blob per referenced
+                                 data file (deletion_vector.rs:16-30)
 
 Data parquet files are referenced IN PLACE (no copy), like Iceberg's
 add_files import; the schema.name-mapping.default property makes files
@@ -21,10 +23,14 @@ Sequence numbers: data files are exported at sequence 1, position deletes
 at sequence 2 (a position delete applies to data files with sequence ≤ its
 own), under a single exported snapshot with sequence-number 2.
 
-At 100 TB: the DV→spec-parquet conversion is a distributed mapInArrow job
-binned by hash(file_path); manifests chunk at 25k entries like our native
-catalog; only the manifest/metadata JSON/Avro writes are driver-side (they
-are O(files/25k) small).
+At 100 TB: the deletes are built on the driver from the snapshot's bitmap
+rows, with no Spark job, as moonlink writes its puffin blobs straight from
+the bitmaps it holds. Each target's rows are OR'd into one word array and
+expanded to positions one target at a time. The driver holds every bitmap
+row of the snapshot, DV rows × (words × 8 + path bytes), plus one target's
+positions for v2 (≤ record_count × 8 bytes) or the serialized blobs for v3.
+Manifests chunk at 25k entries like our native catalog; the manifest and
+metadata writes are O(files/25k) small.
 """
 
 from __future__ import annotations
@@ -33,8 +39,6 @@ import json
 import os
 import time
 import uuid
-
-from pyspark.sql import functions as F
 
 from moonlink_spark.catalog.metadata import norm_path
 from moonlink_spark.iceberg.avro_io import write_avro_file
@@ -49,6 +53,7 @@ from moonlink_spark.iceberg.spec import (
     manifest_entry_schema,
     name_mapping,
 )
+from moonlink_spark.table import _or_bitmap_rows
 
 _MANIFEST_MAX_ENTRIES = 25_000
 
@@ -67,217 +72,79 @@ def _flush_lsn_at(meta, snapshot_id: int) -> int:
     return eff
 
 
-def _write_pos_delete_parquet(
-    table, deletes_df, out_dir: str, prefix: str = "icedel"
-) -> list[dict]:
-    """Distributed conversion of the expanded (file_path, pos) delete rows
-    into spec-schema position-delete parquet: sorted by (file_path, pos)
-    within each file as the spec requires, parquet fields stamped with the
-    reserved Iceberg field-ids, binned by hash(file_path) so one task never
-    serializes the whole delete set."""
+def _target_positions(words) -> "np.ndarray":
+    """The set positions of one target's OR'd uint64 word array, ascending:
+    bit b of word w is position w * 64 + b."""
+    import numpy as np
+
+    bits = np.unpackbits(words.astype("<u8").view(np.uint8), bitorder="little")
+    return np.flatnonzero(bits)
+
+
+def _write_icedel(merged: dict, path: str) -> list[dict]:
+    """One spec-schema position-delete parquet at *path* from the OR'd
+    bitmaps *merged* ({file_path: words}): one batch per target in sorted
+    file_path order, positions ascending (the spec's (file_path, pos)
+    order), parquet fields stamped with the reserved Iceberg field-ids."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    from moonlink_spark.plans.physical import hash_bin
-
-    os.makedirs(out_dir, exist_ok=True)
-    n_rows = deletes_df.count()
-    num_bins = max(1, n_rows // 4_000_000 + 1)
-
-    arrow_schema = pa.schema(
-        [
-            pa.field(
-                "file_path",
-                pa.string(),
-                nullable=False,
-                metadata={b"PARQUET:field_id": str(POS_DELETE_FILE_PATH_ID).encode()},
-            ),
-            pa.field(
-                "pos",
-                pa.int64(),
-                nullable=False,
-                metadata={b"PARQUET:field_id": str(POS_DELETE_POS_ID).encode()},
-            ),
-        ]
-    )
-    out_schema = pa.schema(
-        [
-            ("file_path", pa.string()),
-            ("record_count", pa.int64()),
-            ("file_size_bytes", pa.int64()),
-            ("min_path", pa.string()),
-            ("max_path", pa.string()),
-        ]
-    )
-
-    def _write(batches):
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
-        tmp_suffix = f".inprogress.{ctx.taskAttemptId()}"
-        path = os.path.join(out_dir, f"{prefix}-{pid:05d}.parquet")
-        writer = None
-        count = 0
-        min_path = max_path = None
-        for batch in batches:
-            if len(batch) == 0:
-                continue
-            batch = batch.select(["file_path", "pos"]).cast(arrow_schema)
-            if writer is None:
-                writer = pq.ParquetWriter(path + tmp_suffix, arrow_schema)
-            writer.write_batch(batch)
-            count += len(batch)
-            lo = str(batch.column(0)[0])
-            hi = str(batch.column(0)[len(batch) - 1])
-            min_path = lo if min_path is None or lo < min_path else min_path
-            max_path = hi if max_path is None or hi > max_path else max_path
-        if writer is None:
-            return
-        writer.close()
-        os.rename(path + tmp_suffix, path)
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([path]),
-                pa.array([count], pa.int64()),
-                pa.array([os.path.getsize(path)], pa.int64()),
-                pa.array([min_path]),
-                pa.array([max_path]),
-            ],
-            schema=out_schema,
-        )
-
-    rows = (
-        deletes_df.select(
-            F.col("file_path").cast("string"), F.col("pos").cast("long")
-        )
-        .withColumn("_bin", hash_bin("file_path", num_bins))
-        .repartition(num_bins, "_bin")
-        .sortWithinPartitions("file_path", "pos")
-        .drop("_bin")
-        .mapInArrow(_write, schema="file_path string, record_count long, "
-                                  "file_size_bytes long, min_path string, max_path string")
-        .collect()
-    )
-    return [r.asDict() for r in rows]
+    schema = pa.schema([
+        pa.field("file_path", pa.string(), nullable=False,
+                 metadata={b"PARQUET:field_id": str(POS_DELETE_FILE_PATH_ID).encode()}),
+        pa.field("pos", pa.int64(), nullable=False,
+                 metadata={b"PARQUET:field_id": str(POS_DELETE_POS_ID).encode()}),
+    ])
+    targets = sorted(merged)
+    count = 0
+    with pq.ParquetWriter(path + ".inprogress", schema) as writer:
+        for fp in targets:
+            pos = _target_positions(merged[fp])
+            writer.write_batch(pa.record_batch(
+                [pa.repeat(pa.scalar(fp, pa.string()), len(pos)), pa.array(pos, pa.int64())],
+                schema=schema,
+            ))
+            count += len(pos)
+    os.rename(path + ".inprogress", path)
+    return [{
+        "file_path": path,
+        "record_count": count,
+        "file_size_bytes": os.path.getsize(path),
+        "min_path": targets[0],
+        "max_path": targets[-1],
+    }]
 
 
-def _write_puffin_dvs(
-    table, deletes_df, out_dir: str, snapshot_id: int, seq: int
-) -> list[dict]:
-    """Distributed conversion of the expanded (file_path, pos) delete rows
-    into Puffin deletion-vector-v1 blobs (Iceberg v3): binned by
-    hash(file_path) so each task serializes only its bin's bitmaps, one
-    puffin file per non-empty bin, one blob per referenced data file.
-    Mirrors the reference's DV persistence contract
-    (storage/table/iceberg/deletion_vector.rs:83-145,
-    iceberg_table_syncer.rs:488-557) re-expressed as a Spark job."""
-    import pyarrow as pa
+def _write_icedv(merged: dict, path: str, snapshot_id: int, seq: int) -> list[dict]:
+    """One Puffin file at *path* holding a deletion-vector-v1 blob per
+    target of the OR'd bitmaps *merged* ({file_path: words}), in sorted
+    file_path order, each with its popcount as cardinality — the
+    reference's DV persistence contract (deletion_vector.rs:83-145,
+    iceberg_table_syncer.rs:488-557)."""
+    from moonlink_spark.iceberg.puffin import DELETION_VECTOR_V1, dv_blob_bytes, write_puffin
 
-    from moonlink_spark.plans.physical import hash_bin
-
-    os.makedirs(out_dir, exist_ok=True)
-    n_rows = deletes_df.count()
-    num_bins = max(1, n_rows // 4_000_000 + 1)
-
-    out_schema = pa.schema(
-        [
-            ("puffin_path", pa.string()),
-            ("puffin_size", pa.int64()),
-            ("referenced_file", pa.string()),
-            ("cardinality", pa.int64()),
-            ("offset", pa.int64()),
-            ("length", pa.int64()),
-        ]
-    )
-
-    def _write(batches):
-        import numpy as np
-        from pyspark import TaskContext
-
-        from moonlink_spark.iceberg.puffin import (
-            DELETION_VECTOR_V1,
-            dv_blob_bytes,
-            write_puffin,
-        )
-
-        ctx = TaskContext.get()
-        pid = ctx.partitionId()
-        blobs: list[dict] = []
-        cur_path = None
-        cur_pos: list = []
-
-        def _flush_file():
-            if cur_path is None:
-                return
-            pos = np.concatenate(cur_pos).astype(np.uint64)
-            blobs.append(
-                {
-                    "data": dv_blob_bytes(pos),
-                    "type": DELETION_VECTOR_V1,
-                    "snapshot-id": snapshot_id,
-                    "sequence-number": seq,
-                    "properties": {
-                        "referenced-data-file": cur_path,
-                        "cardinality": str(len(np.unique(pos))),
-                    },
-                    "_referenced": cur_path,
-                    "_cardinality": len(np.unique(pos)),
-                }
-            )
-
-        for batch in batches:
-            if len(batch) == 0:
-                continue
-            paths = batch.column("file_path").to_numpy(zero_copy_only=False)
-            pos = batch.column("pos").to_numpy(zero_copy_only=False)
-            # rows arrive sorted by (file_path, pos): group boundaries are
-            # contiguous, a file's rows never interleave
-            bounds = np.nonzero(paths[1:] != paths[:-1])[0] + 1
-            starts = np.concatenate([[0], bounds])
-            ends = np.concatenate([bounds, [len(paths)]])
-            for s, e in zip(starts, ends):
-                p = paths[s]
-                if p != cur_path:
-                    _flush_file()
-                    cur_path = p
-                    cur_pos = []
-                cur_pos.append(pos[s:e])
-        _flush_file()
-        if not blobs:
-            return
-        path = os.path.join(out_dir, f"icedv-{snapshot_id}-{pid:05d}.puffin")
-        meta = write_puffin(
-            path, blobs, properties={"created-by": "moonlink_spark"}
-        )
-        yield pa.RecordBatch.from_arrays(
-            [
-                pa.array([path] * len(blobs)),
-                pa.array([meta["file_size"]] * len(blobs), pa.int64()),
-                pa.array([b["_referenced"] for b in blobs]),
-                pa.array([b["_cardinality"] for b in blobs], pa.int64()),
-                pa.array([m["offset"] for m in meta["blobs"]], pa.int64()),
-                pa.array([m["length"] for m in meta["blobs"]], pa.int64()),
-            ],
-            schema=out_schema,
-        )
-
-    rows = (
-        deletes_df.select(
-            F.col("file_path").cast("string"), F.col("pos").cast("long")
-        )
-        .withColumn("_bin", hash_bin("file_path", num_bins))
-        .repartition(num_bins, "_bin")
-        .sortWithinPartitions("file_path", "pos")
-        .drop("_bin")
-        .mapInArrow(
-            _write,
-            schema="puffin_path string, puffin_size long, referenced_file string, "
-                   "cardinality long, offset long, length long",
-        )
-        .collect()
-    )
-    return [r.asDict() for r in rows]
+    blobs = []
+    for fp in sorted(merged):
+        pos = _target_positions(merged[fp])
+        blobs.append({
+            "data": dv_blob_bytes(pos),
+            "type": DELETION_VECTOR_V1,
+            "snapshot-id": snapshot_id,
+            "sequence-number": seq,
+            "properties": {"referenced-data-file": fp, "cardinality": str(len(pos))},
+        })
+    meta = write_puffin(path, blobs, properties={"created-by": "moonlink_spark"})
+    return [
+        {
+            "puffin_path": path,
+            "puffin_size": meta["file_size"],
+            "referenced_file": m["properties"]["referenced-data-file"],
+            "cardinality": int(m["properties"]["cardinality"]),
+            "offset": m["offset"],
+            "length": m["length"],
+        }
+        for m in meta["blobs"]
+    ]
 
 
 def _data_entry(
@@ -434,7 +301,7 @@ def export_iceberg(
     format_version: int = 2,
     partition_by: list[str] | None = None,
 ) -> str:
-    """Translate a snapshot into genuine Iceberg v2 metadata under
+    """Translate a snapshot into genuine Iceberg metadata under
     *dest_root*; returns the metadata.json path. See module docstring for
     the layout.
 
@@ -447,6 +314,11 @@ def export_iceberg(
     Re-exporting the SAME snapshot is a no-op returning the current path.
     Time travel across exports works through any Iceberg reader
     (read_iceberg_scan(snapshot_id=...)).
+
+    The deletes are converted on the driver, with no Spark job: it holds
+    every bitmap row of the snapshot, DV rows × (words × 8 + path bytes),
+    plus one target's positions at a time for v2 (≤ record_count × 8
+    bytes) or the serialized blobs for v3.
 
     The export references the source table's data files IN PLACE, so with
     *pin_source* (default) the exported snapshot is TAGGED on the source
@@ -655,18 +527,19 @@ def export_iceberg(
     spec_json = json.dumps(spec_fields, separators=(",", ":"))
 
     # ---- position deletes: bitmap DVs -> spec parquet (v2) / puffin (v3) -
+    # v3 allows one DV per data file, so each target's rows in several DV
+    # files are OR'd first; v2 takes the same one-row-per-target form
     delete_infos: list[dict] = []
-    if delete_files:
-        deletes_df = table.read_delete_rows(delete_files)
-        if deletes_df is not None:
-            if format_version >= 3:
-                delete_infos = _write_puffin_dvs(
-                    table, deletes_df, data_dir, exported_sid, delete_seq
-                )
-            else:
-                delete_infos = _write_pos_delete_parquet(
-                    table, deletes_df, data_dir, prefix=f"icedel-{exported_sid}"
-                )
+    merged = _or_bitmap_rows(table.read_bitmap_rows(delete_files)) if delete_files else {}
+    if merged and format_version >= 3:
+        delete_infos = _write_icedv(
+            merged, os.path.join(data_dir, f"icedv-{exported_sid}-00000.puffin"),
+            exported_sid, delete_seq,
+        )
+    elif merged:
+        delete_infos = _write_icedel(
+            merged, os.path.join(data_dir, f"icedel-{exported_sid}-00000.parquet")
+        )
 
     # ---- v3 row lineage: stable per-file first_row_id --------------------
     # Iceberg v3 requires assigned row ids to be IMMUTABLE: a file already

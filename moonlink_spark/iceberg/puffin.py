@@ -20,7 +20,8 @@ Implements, from the PUBLIC specs only:
     runOptimize(), so dense DVs serialize byte-identically to Java's).
 
 All bitmap packing/unpacking is numpy-vectorized — no per-position Python
-loops — so an executor task converting a multi-million-row DV stays fast.
+loops — so the export's driver-side conversion of a multi-million-position
+DV stays fast.
 Cross-validated in tests against the RoaringBitmap JAVA reference library
 (org.roaringbitmap on Spark's classpath) via Roaring64NavigableMap's
 portable deserialization.

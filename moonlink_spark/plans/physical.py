@@ -47,7 +47,7 @@ from typing import Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 from moonlink_spark.catalog.metadata import DataFile
 
@@ -422,9 +422,3 @@ def num_bins_for(total_bytes: int, target_bytes: int) -> int:
     """How many output files for *total_bytes* of live data at *target_bytes*
     per file (bin-packing bin count)."""
     return max(1, math.ceil(total_bytes / max(target_bytes, 1)))
-
-
-def hash_bin(col_name: str, num_bins: int):
-    """Deterministic, skew-free bin assignment by hash (used for the Iceberg
-    export's files)."""
-    return F.pmod(F.xxhash64(F.col(col_name)), F.lit(num_bins)).cast("int")

@@ -31,7 +31,6 @@ from moonlink_spark.catalog.manifests import (
     write_delete_manifests,
 )
 from moonlink_spark.catalog.metadata import (
-    FRESH_TARGET_BYTES,
     MANIFEST_MAX_ENTRIES,
     DataFile,
     DeleteFile,
@@ -553,33 +552,10 @@ class MoonTable:
             out = out.union(p)
         return out
 
-    def read_delete_rows(self, dfiles: list[DeleteFile]) -> DataFrame | None:
-        """The logical (file_path, pos) rows of a set of bitmap
-        deletion-vector files, expanded JVM-side: posexplode the word array,
-        then unpack each non-zero word's set bits with a codegen'd
-        transform+filter — no Python worker. Only the Iceberg export (whose
-        spec position-delete files hold positions) and tests expand: scans
-        test bits (join_deletes) and the DV carry-over ORs bitmap rows. A
-        file in any other format raises ValueError."""
-        if not dfiles:
-            return None
-        _check_bitmap(dfiles)
-        raw = self.spark.read.schema(BITMAP_SCHEMA).parquet(*[d.file_path for d in dfiles])
-        exp = raw.select(
-            "file_path", F.posexplode("words").alias("widx", "word")
-        ).filter(F.col("word") != 0)
-        bits = F.expr(
-            "filter(transform(sequence(0, 63), "
-            "b -> CASE WHEN (shiftright(word, b) & 1) = 1 "
-            "THEN widx * 64 + CAST(b AS BIGINT) END), x -> x IS NOT NULL)"
-        )
-        return exp.select("file_path", F.explode(bits).alias("pos"))
-
     def read_bitmap_rows(self, dfiles: list[DeleteFile], file_paths=None) -> "pa.Table | None":
         """The (file_path, words) bitmap rows of *dfiles*, read on the driver
         (a few KB per DV file); with *file_paths*, only rows targeting one of
-        them. A file in any other format raises ValueError, as in
-        read_delete_rows."""
+        them. A file in any other format raises ValueError (_check_bitmap)."""
         import pyarrow.dataset as ds
 
         if not dfiles:
@@ -1184,6 +1160,9 @@ def completed_run(table: MoonTable, op: str, run_id: str) -> Snapshot | None:
 
 
 def _check_bitmap(dfiles: list[DeleteFile]) -> None:
+    """Raise ValueError naming the first of *dfiles* that is not a bitmap
+    deletion-vector file: every reader of DV files (read_bitmap_rows,
+    _dv_rows) takes bitmap rows only."""
     for d in dfiles:
         if d.format != "bitmap":
             raise ValueError(

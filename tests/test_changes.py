@@ -2,6 +2,7 @@
 updates decompose as D(pre-image)+I(post-image), and layout-only rewrites
 (compact/cluster) contribute nothing."""
 
+from conftest import dv_positions
 from pyspark.sql import functions as F
 
 from moonlink_spark.operators.changes import scan_changes
@@ -104,9 +105,7 @@ def test_bitmap_deletion_vectors_roundtrip_and_size(spark, tmp_table_root):
     # at rest: one bitmap row of 16000/64 words ≈ 2KB, far below the ~8000
     # rows the positions form would need
     assert sum(d.file_size_bytes for d in dfiles) < 64 * 1024
-    got = sorted(
-        r["pos"] for r in t.read_delete_rows(dfiles).collect()
-    )
+    got = sorted(p for _, p in dv_positions(dfiles))
     assert got == list(range(0, 16000, 2))
 
 

@@ -2,6 +2,8 @@
 curve layout without rewriting clustered survivors, carrying surviving
 deletion vectors over (compaction-style DV rewrite)."""
 
+from conftest import dv_positions
+
 from moonlink_spark.catalog.metadata import norm_path
 from moonlink_spark.operators.clustering import cluster
 from moonlink_spark.operators.merge import merge_into
@@ -74,7 +76,5 @@ def test_incremental_carries_surviving_deletes(spark, tmp_table_root):
     # DVs targeting survivors still exist (rewritten), and no delete row
     # targets a victim (those were applied inline)
     live = {norm_path(f.file_path) for f in t.data_files()}
-    dels = t.read_delete_rows(t.delete_files())
-    if dels is not None:
-        targets = {norm_path(r["file_path"]) for r in dels.select("file_path").distinct().collect()}
-        assert targets <= live
+    targets = {norm_path(fp) for fp, _ in dv_positions(t.delete_files())}
+    assert targets <= live

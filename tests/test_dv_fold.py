@@ -2,11 +2,13 @@
 MoonTable.write_position_deletes, the engine's only deletion-vector writer,
 must give the bitmaps of the numpy fold the engine first used: the same word
 array and position count per target file and the same at-rest schema, and
-read_delete_rows expands them back to the same (file_path, pos) set. The
-fold also drops positions that prior bitmaps already set. A rewrite's DV
-carry-over ORs each surviving target's rows into one row without a Spark
-job. The scan's bitmap join (join_deletes) deletes exactly the rows the join
-over the expanded rows does."""
+the tests' own expansion (conftest.dv_positions, which shares no engine
+code) reads them back as the same (file_path, pos) set. The fold also drops
+positions that prior bitmaps already set. A rewrite's DV carry-over ORs each
+surviving target's rows into one row without a Spark job. The scan's bitmap
+join (join_deletes) deletes exactly the rows the join over the expanded rows
+does. The Iceberg mirror's deletes are the snapshot's bitmaps: the same
+positions per data file, and one v3 blob per target."""
 
 import os
 
@@ -17,6 +19,7 @@ import pyarrow.parquet as pq
 import pyspark.sql.types as T
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
+from conftest import dv_positions
 
 from moonlink_spark.table import MoonTable, fold_live_positions
 
@@ -106,8 +109,7 @@ def test_jvm_fold_matches_numpy_fold(spark, tmp_path):
     assert _bitmaps([d]) == want
     assert d.position_count == sum(n for _, n in want.values())
 
-    back = {(r["file_path"], r["pos"]) for r in t.read_delete_rows([d]).collect()}
-    assert back == set(rows)
+    assert set(dv_positions([d])) == set(rows)
 
 
 def test_driver_fold_matches_numpy_and_jvm_folds(spark, tmp_path):
@@ -132,8 +134,7 @@ def test_driver_fold_matches_numpy_and_jvm_folds(spark, tmp_path):
     # rows sorted by target file
     assert pq.read_table(d.file_path).column("file_path").to_pylist() == sorted(want)
 
-    back = {(r["file_path"], r["pos"]) for r in t.read_delete_rows([d]).collect()}
-    assert back == set(rows)
+    assert set(dv_positions([d])) == set(rows)
 
 
 def test_driver_fold_drops_positions_prior_bitmaps_set(spark, tmp_path):
@@ -169,8 +170,7 @@ def test_driver_fold_drops_positions_prior_bitmaps_set(spark, tmp_path):
     assert d.position_count == len(live)
 
     # the snapshot's deleted set is now the disjoint union of prior and new
-    all_rows = t.read_delete_rows(prior_files + [d]).collect()
-    pairs = [(r["file_path"], r["pos"]) for r in all_rows]
+    pairs = dv_positions(prior_files + [d])
     assert len(pairs) == len(set(pairs))
     assert set(pairs) == set(prior_rows) | {("/t/or.parquet", 130)} | set(live)
 
@@ -216,7 +216,7 @@ def test_bitmap_join_matches_expanded_join(spark, tmp_path, monkeypatch):
     files = [DataFile(file_path=fp, record_count=p + 130, file_size_bytes=0)
              for fp, p in sorted(last.items())]
     scan = _scan_rows(spark, files)
-    ref = t.read_delete_rows(dfiles)
+    ref = spark.createDataFrame(dv_positions(dfiles), "file_path string, pos long")
 
     def pairs(df):
         return {(r["_fp"], r["_pos"]) for r in df.select("_fp", "_pos").collect()}
@@ -264,10 +264,7 @@ def test_dvs_under_an_escaped_table_path(spark, tmp_path):
 
     def state(t):
         live = {norm_path(f.file_path) for f in t.data_files()}
-        targets = {
-            norm_path(r["file_path"])
-            for r in t.read_delete_rows(t.delete_files()).select("file_path").distinct().collect()
-        }
+        targets = {norm_path(fp) for fp, _ in dv_positions(t.delete_files())}
         assert targets and targets <= live
         return (
             sorted((r["image_id"], r["caption"]) for r in t.scan().collect()),
@@ -322,7 +319,7 @@ def test_carry_over_ors_rows_per_surviving_target(spark, tmp_path):
     assert shared  # both merges hit the same file
     victim = next(fp for fp in sorted(set(targets)) if fp != shared[-1])
     victims = {norm_path(victim)}
-    before = {(r["file_path"], r["pos"]) for r in t.read_delete_rows(dfiles).collect()}
+    before = set(dv_positions(dfiles))
 
     carried, n = t.carry_over_deletes(victims, "c1")
     assert len(carried) == 1
@@ -331,8 +328,7 @@ def test_carry_over_ors_rows_per_surviving_target(spark, tmp_path):
     assert shared[-1] in {fp for fp, _ in want}
     got = _bitmaps(carried)  # also checks one row per target
     assert got == _reference(sorted(want))
-    after = {(r["file_path"], r["pos"]) for r in t.read_delete_rows(carried).collect()}
-    assert after == want
+    assert set(dv_positions(carried)) == want
     assert n == carried[0].position_count == len(want)
 
 
@@ -362,3 +358,49 @@ def test_carry_over_runs_no_spark_job(spark, tmp_path, monkeypatch):
     assert carried and n > 0  # the survivors kept DV rows
     assert jobs == []
     assert [d.file_path for d in t.delete_files()] == [d.file_path for d in carried]
+
+
+def test_iceberg_mirror_deletes_equal_the_bitmaps(spark, tmp_path):
+    """A data file targeted by bitmap rows in two DV files is exported with
+    the OR of both. Per data file, the v2 position-delete rows and the v3
+    blob's positions equal the expansion of the snapshot's DV files; v3
+    writes one blob per referenced data file, its cardinality the blob's
+    position count."""
+    import glob
+
+    from moonlink_spark.iceberg import export_iceberg
+    from moonlink_spark.iceberg.puffin import (
+        dv_blob_positions,
+        read_puffin_blob,
+        read_puffin_footer,
+    )
+
+    t = _merged_twice(spark, str(tmp_path / "t"))
+    dfiles = t.delete_files()
+    targets = t.read_bitmap_rows(dfiles).column("file_path").to_pylist()
+    assert any(targets.count(fp) > 1 for fp in targets)  # both merges hit one file
+    want: dict = {}
+    for fp, p in dv_positions(dfiles):
+        want.setdefault(fp, set()).add(p)
+    want = {fp: sorted(ps) for fp, ps in want.items()}
+
+    export_iceberg(t, str(tmp_path / "v2"))
+    [icedel] = glob.glob(str(tmp_path / "v2" / "data" / "icedel-*.parquet"))
+    tbl = pq.read_table(icedel)
+    rows = list(zip(tbl.column("file_path").to_pylist(), tbl.column("pos").to_pylist()))
+    assert rows == sorted(rows)
+    got: dict = {}
+    for fp, p in rows:
+        got.setdefault(fp, []).append(p)
+    assert got == want
+
+    export_iceberg(t, str(tmp_path / "v3"), format_version=3)
+    [puffin] = glob.glob(str(tmp_path / "v3" / "data" / "icedv-*.puffin"))
+    got = {}
+    for b in read_puffin_footer(puffin)["blobs"]:
+        fp = b["properties"]["referenced-data-file"]
+        assert fp not in got  # one blob per referenced data file
+        pos = dv_blob_positions(read_puffin_blob(puffin, b["offset"], b["length"])).tolist()
+        assert int(b["properties"]["cardinality"]) == len(pos)
+        got[fp] = pos
+    assert got == want

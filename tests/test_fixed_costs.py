@@ -55,6 +55,16 @@ def _many_file_table(spark, root) -> MoonTable:
     return t
 
 
+def _update_every_file(spark):
+    """One update per data file of _many_file_table: k0000, k0010, ..."""
+    return spark.range(0, N_FILES * 10, 10).select(
+        F.lit("U").alias("op"),
+        (F.col("id") + 100).cast("long").alias("lsn"),
+        F.format_string("k%04d", F.col("id")).alias("image_id"),
+        (F.col("id") + 1000).alias("v"),
+    )
+
+
 def test_manifest_scan_and_merge_launch_no_listing_job(spark, tmp_path):
     t = _many_file_table(spark, str(tmp_path / "t"))
     built = []
@@ -65,12 +75,7 @@ def test_manifest_scan_and_merge_launch_no_listing_job(spark, tmp_path):
     assert built[0].count() == N_FILES * 10
 
     # every key in every file is probed, so the merge scans all 40 files
-    ch = spark.range(0, N_FILES * 10, 10).select(
-        F.lit("U").alias("op"),
-        (F.col("id") + 100).cast("long").alias("lsn"),
-        F.format_string("k%04d", F.col("id")).alias("image_id"),
-        (F.col("id") + 1000).alias("v"),
-    )
+    ch = _update_every_file(spark)
     jobs = _jobs_in_group(spark, "merge", lambda: merge_into(t, ch, run_id="m1"))
     # a listing job's only stage is named after the reader call
     names = _stage_names(spark, jobs)
@@ -98,12 +103,7 @@ def test_merge_runs_two_jobs_and_reads_no_target_file(spark, tmp_path, monkeypat
 
     monkeypatch.setattr(merge_mod, "_batch_query", capture)
     t = _many_file_table(spark, str(tmp_path / "t"))
-    ch = spark.range(0, N_FILES * 10, 10).select(
-        F.lit("U").alias("op"),
-        (F.col("id") + 100).cast("long").alias("lsn"),
-        F.format_string("k%04d", F.col("id")).alias("image_id"),
-        (F.col("id") + 1000).alias("v"),
-    )
+    ch = _update_every_file(spark)
     targets = [f.file_path for f in t.data_files()]
     for p in targets:
         os.rename(p, p + ".away")
@@ -122,6 +122,25 @@ def test_merge_runs_two_jobs_and_reads_no_target_file(spark, tmp_path, monkeypat
     rows = {r["image_id"]: r["v"] for r in t.scan().collect()}
     assert len(rows) == N_FILES * 10
     assert rows["k0010"] == 1010 and rows["k0011"] == 11
+
+
+def test_iceberg_export_runs_no_spark_job(spark, tmp_path):
+    """export_iceberg builds the mirror's deletes from the bitmap rows on the
+    driver: exporting a table with deletion vectors runs no Spark job, at
+    format_version 2 (position-delete parquet) or 3 (puffin DVs)."""
+    from moonlink_spark.iceberg import export_iceberg
+
+    t = _many_file_table(spark, str(tmp_path / "t"))
+    merge_into(t, _update_every_file(spark), run_id="m1")
+    assert t.delete_files()
+    for version in (2, 3):
+        dest = str(tmp_path / f"ice{version}")
+        jobs = _jobs_in_group(
+            spark, f"export-v{version}",
+            lambda: export_iceberg(t, dest, format_version=version),
+        )
+        assert jobs == [], (version, [j.jobId for j in jobs])
+        assert any(n.startswith("ice") for n in os.listdir(os.path.join(dest, "data")))
 
 
 def _probe_worker_zip_reads(zip_path: str):

@@ -7,6 +7,7 @@ position into two DV files, and leave the last-writer-wins rows visible."""
 
 import pandas as pd
 import pyspark.sql.types as T
+from conftest import dv_positions
 
 from moonlink_spark.iceberg import export_iceberg, read_iceberg_scan
 from moonlink_spark.operators import merge_into
@@ -62,10 +63,7 @@ def test_repeated_updates_delete_only_live_versions(spark, tmp_path):
 
     dvs = t.delete_files()
     assert len(dvs) == 3  # one DV file per merge, none compacted away
-    per_dv = [
-        {(r["file_path"], r["pos"]) for r in t.read_delete_rows([d]).collect()}
-        for d in dvs
-    ]
+    per_dv = [set(dv_positions([d])) for d in dvs]
     deleted = set().union(*per_dv)
     assert sum(len(s) for s in per_dv) == len(deleted)  # no position in two DV files
     assert sum(d.position_count for d in dvs) == len(deleted) == sum(matched)

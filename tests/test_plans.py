@@ -54,19 +54,6 @@ def test_zorder_assignment_stays_jvm_side(spark, tmp_table_root):
     assert "* Project" in _plan(df)
 
 
-def test_merge_change_keys_are_broadcast(spark, tmp_table_root):
-    """Small change batches must probe via a broadcast join (no shuffle of
-    the billion-row target side)."""
-    from moonlink_spark.operators.merge import last_writer_wins
-
-    t = create_images_table(spark, tmp_table_root, 400, seed=42)
-    changes = generate_changes_df(spark, 400, 60, seed=3)
-    final = last_writer_wins(changes, "image_id")
-    target = t.scan(with_position=True, columns=["image_id", "_fp", "_pos"])
-    joined = target.join(F.broadcast(final.select("image_id")), "image_id", "left_semi")
-    assert "BroadcastHashJoin" in _plan(joined)
-
-
 def test_delete_antijoin_broadcast_gated_by_positions(spark, tmp_table_root):
     """The scan-side bitmap anti-join broadcasts the bitmap rows from a
     LocalTableScan when their decoded size bound (bitmap rows × scanned

@@ -107,7 +107,7 @@ def test_non_bitmap_delete_file_is_rejected(spark, tmp_table_root):
         format="positions",
     )
     with pytest.raises(ValueError, match="del-old.parquet"):
-        t.read_delete_rows([old])
+        t.read_bitmap_rows([old])
 
 
 def test_append_num_bins_requires_bin_column(spark, tmp_table_root):
